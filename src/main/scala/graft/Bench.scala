@@ -126,7 +126,7 @@ object Bench {
     }
 
     // Idempotent-LIFECYCLE queries (r18 verdict item 1 — a measurement-bug
-    // fix, disclosed in OPTIMIZATION_r19.md): for these, warm re-runs
+    // fix): for these, warm re-runs
     // legitimately skip to the settled store (the r9-prescribed
     // idempotent-replay pattern), so the best-of-3 minimum measured a
     // near-no-op restart path while the DECLARED work (DML lifecycle,

@@ -1,8 +1,9 @@
 package graft
 
-import graft.cdc.SnapshotStore
+import graft.cdc.ManifestStore
 import graft.streaming._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The engine's CLI entry — the Spark-native form of
   * `cdc_stream.py --config config.json` (ref main dispatch
@@ -14,7 +15,7 @@ import org.apache.spark.sql.streaming.Trigger
   * Dispatches on `database_config.type` (postgres envelope path vs mongodb
   * extended-JSON path; anything else is rejected, ref validation
   * config_manager.py:107-128), wires the file-based changelog source,
-  * snapshot store, schema cache and checkpoint from the config, and
+  * manifest store, schema cache and checkpoint from the config, and
   * supervises the query: config changes restart it with the new settings
   * (a torn/bad config file is skipped and the stream keeps running — ref
   * keeps the previous config on a bad reload), and a failed or terminated
@@ -29,28 +30,52 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object CdcMain {
   // reload-time validation guard; keep in sync with the dispatch match in
-  // makeStream below (plus "auto", resolved before dispatch)
+  // `stream` below (plus "auto", resolved before dispatch)
   private val ValidDbTypes =
     Set("mongodb", "mongo", "postgres", "postgresql", "auto")
-  private val ValidStorage = Set("snapshot", "manifest", "manifest_mor")
+  private val ValidStorage = Set("manifest", "manifest_mor")
 
   /** Semantic validation shared by startup (fail fast) and hot reload
     * (reject, keep the running stream). None = valid.
     */
-  private def configError(cfg: CdcConfig): Option[String] =
+  private[graft] def configError(cfg: CdcConfig): Option[String] =
     if (!ValidDbTypes.contains(cfg.databaseType))
       Some(s"unsupported database_config.type: '${cfg.databaseType}' " +
         s"(expected one of ${ValidDbTypes.toSeq.sorted.mkString(", ")})")
     else if (!ValidStorage.contains(cfg.storage))
       Some(s"unsupported delta_config.storage: '${cfg.storage}' " +
         s"(expected one of ${ValidStorage.toSeq.sorted.mkString(", ")})")
-    else if (cfg.dedupColumn.isDefined && !cfg.storage.startsWith("manifest"))
-      Some("processing_config.dedup requires a manifest storage engine " +
-        s"(delta_config.storage is '${cfg.storage}')")
-    else if (cfg.changeFeed && !cfg.storage.startsWith("manifest"))
-      Some("delta_config.change_feed requires a manifest storage engine " +
-        s"(delta_config.storage is '${cfg.storage}')")
     else None
+
+  /** The stream `cfg` runs for a resolved `database_config.type`. The wire
+    * format picks the per-batch net-change step; everything after it — the
+    * stats-pruned file MERGE ("manifest") or deletion-vector merge-on-read
+    * ("manifest_mor"), auto-optimize, change feed, dedup side channel — is
+    * one engine.
+    */
+  private[graft] def stream(spark: SparkSession, cfg: CdcConfig,
+                            dbType: String, trigger: Trigger): ManifestCdcStream = {
+    val format = dbType match {
+      case "mongodb" | "mongo"       => ManifestCdcStream.Mongo()
+      case "postgres" | "postgresql" => ManifestCdcStream.Postgres
+      case other =>
+        sys.error(s"unsupported database_config.type: '$other' " +
+          "(expected postgres or mongodb)")
+    }
+    val store = new ManifestStore(cfg.outputPath, spark, cfg.keyColumn)
+    // delta_config.change_feed: flip capture ON for every commit this
+    // stream makes — downstream consumers then readChangeFeed off
+    // cfg.outputPath (capture starts at the NEXT commit)
+    if (cfg.changeFeed) store.enableChangeFeed()
+    new ManifestCdcStream(spark,
+      CdcStream.fileSource(spark, cfg.sourceDir, cfg.maxFilesPerTrigger),
+      store, cfg.keyColumn, cfg.schemaCacheDir, cfg.checkpointDir,
+      cfg.columnsToSave, trigger = trigger, reclusterOverFiles = 256,
+      mergeOnRead = cfg.storage == "manifest_mor",
+      dedup = cfg.dedupColumn.map(c => ManifestCdcStream.DedupConfig(
+        c, cfg.dedupBands, cfg.dedupTtlBatches)),
+      changeFormat = format)
+  }
 
   def main(args: Array[String]): Unit = {
     val configPath = args.filterNot(_.startsWith("--")).headOption.getOrElse(
@@ -63,7 +88,7 @@ object CdcMain {
     spark.sparkContext.setLogLevel("WARN")
 
     @volatile var running = true
-    @volatile var active: Option[(AnyRef, org.apache.spark.sql.streaming.StreamingQuery)] = None
+    @volatile var active: Option[(ManifestCdcStream, StreamingQuery)] = None
 
     // 'auto' (ref planned it in docs/keynotetochange.txt, never merged):
     // classify from the backlog's first events, ONCE — the resolved type is
@@ -78,66 +103,26 @@ object CdcMain {
         t
       }
 
-    def makeStream(cfg: CdcConfig): (AnyRef, org.apache.spark.sql.streaming.StreamingQuery) = {
+    def makeStream(cfg: CdcConfig): (ManifestCdcStream, StreamingQuery) = {
       val trigger =
         if (once) Trigger.AvailableNow()
         else CronTrigger.resolveTrigger(cfg.processTime) // duration OR cron
-      val source = CdcStream.fileSource(spark, cfg.sourceDir, cfg.maxFilesPerTrigger)
       val dbType = resolveType(cfg).getOrElse(
         sys.error(s"database_config.type=auto but no classifiable event " +
           s"found in ${cfg.sourceDir}"))
-      // delta_config.storage selects the engine behind the same stream:
-      // the reference's whole-table rewrite ("snapshot"), the stats-pruned
-      // file MERGE ("manifest"), or deletion-vector merge-on-read
-      // ("manifest_mor"). The manifest engines serve the postgres envelope
-      // path; the mongo path keeps the snapshot store (its pipeline
-      // flattens documents before merging).
-      (dbType, cfg.storage) match {
-        case ("mongodb" | "mongo", _) =>
-          val store = new SnapshotStore(cfg.outputPath, spark)
-          val s = new MongoCdcStream(spark, source, store, cfg.keyColumn,
-            cfg.checkpointDir, cfg.columnsToSave, trigger = trigger)
-          (s, s.start())
-        case ("postgres" | "postgresql", "manifest" | "manifest_mor") =>
-          val store = new graft.cdc.ManifestStore(cfg.outputPath, spark,
-            cfg.keyColumn)
-          // delta_config.change_feed: flip capture ON for every commit
-          // this stream makes — downstream consumers then readChangeFeed
-          // off cfg.outputPath (capture starts at the NEXT commit)
-          if (cfg.changeFeed) store.enableChangeFeed()
-          val s = new ManifestCdcStream(spark, source, store, cfg.keyColumn,
-            cfg.schemaCacheDir, cfg.checkpointDir, cfg.columnsToSave,
-            trigger = trigger, reclusterOverFiles = 256,
-            mergeOnRead = cfg.storage == "manifest_mor",
-            dedup = cfg.dedupColumn.map(c => ManifestCdcStream.DedupConfig(
-              c, cfg.dedupBands, cfg.dedupTtlBatches)))
-          (s, s.start())
-        case ("postgres" | "postgresql", _) =>
-          val store = new SnapshotStore(cfg.outputPath, spark)
-          val s = new CdcStream(spark, source, store, cfg.keyColumn,
-            cfg.schemaCacheDir, cfg.checkpointDir, cfg.columnsToSave,
-            trigger = trigger)
-          (s, s.start())
-        case (other, _) =>
-          sys.error(s"unsupported database_config.type: '$other' " +
-            "(expected postgres or mongodb)")
-      }
+      val s = stream(spark, cfg, dbType, trigger)
+      (s, s.start())
     }
 
-    def stopActive(): Unit = active.foreach {
-      case (s: CdcStream, q)         => s.stopGracefully(q)
-      case (s: MongoCdcStream, q)    => s.stopGracefully(q)
-      case (s: ManifestCdcStream, q) => s.stopGracefully(q)
-      case (_, q)                    => q.stop()
-    }
+    def stopActive(): Unit = active.foreach { case (s, q) => s.stopGracefully(q) }
 
     sys.addShutdownHook { running = false; stopActive() }
 
     var currentCfg = cm.config // validated before first start; may throw: fine
     // fail FAST on a bad initial config: without this a typo like
-    // storage="manifst" would fall through makeStream's ("postgres", _)
-    // wildcard and silently run the snapshot engine (hot-reload already
-    // rejects via the same configError; startup must match)
+    // storage="manifst" would silently run the copy-on-write engine
+    // (hot-reload already rejects via the same configError; startup must
+    // match)
     configError(currentCfg).foreach(sys.error)
     // Two kinds of rejected hot-reload, remembered so the ~2s poll doesn't
     // re-log (or stop/restart the healthy reverted stream) every cycle:

@@ -4,18 +4,15 @@ import graft.cdc._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Head-to-head commit-I/O measurement: [[graft.cdc.ManifestStore]]'s
-  * stats-pruned MERGE vs the whole-table rewrite a
-  * [[graft.cdc.SnapshotStore]] commit performs, on the same table and the
-  * same micro-batch. This is the number the manifest store exists for —
-  * at 100 TB the whole-table path is hours of I/O per trigger, the pruned
-  * path is proportional to the touched key ranges.
+/** Commit-I/O measurement of [[graft.cdc.ManifestStore]]'s stats-pruned
+  * MERGE on a micro-batch confined to a narrow key range: the pruned path
+  * is proportional to the touched key ranges, not the table.
   *
   * Usage: `sbt "runMain graft.MergeBench [nRows] [batchSize] [rounds]"`.
   * Deterministic content (range + column arithmetic, no randomness);
   * results print as one JSON line per round plus a summary line.
   *
-  * `--mor-only` skips the CoW/snapshot comparisons and runs the
+  * `--mor-only` skips the copy-on-write legs and runs the
   * merge-on-read ACCUMULATION ladder alone: consecutive scattered batches
   * on one store (per-round bytes written + effective-read timing), then
   * OPTIMIZE and the post-fold read — the "does a long-lived MoR table
@@ -34,15 +31,14 @@ object MergeBench {
     val base = java.nio.file.Files.createTempDirectory("mergebench")
     val fields = Seq("id", "name", "val", "payload")
 
-    // ~256 B/row payload: without it the whole-table path is measuring
-    // job overhead, not I/O — the thing that actually scales with size
+    // ~256 B/row payload: without it a rewrite measures job overhead, not
+    // I/O — the thing that actually scales with size
     val table = spark.range(n).select(col("id"),
       concat(lit("name_"), col("id")).as("name"),
       (col("id") % 997).cast("double").as("val"),
       repeat(md5(col("id").cast("string")), 8).as("payload"))
 
     val ms = new ManifestStore(s"$base/manifest", spark, "id")
-    val ss = new SnapshotStore(s"$base/snapshot", spark)
 
     // --sql: the SQL row-level surface (UPDATE / MERGE INTO / subquery
     // DELETE through graft.spark.GraftRowOperation) against the SAME
@@ -118,10 +114,7 @@ object MergeBench {
       return
     }
 
-    if (!morOnly) {
-      ms.commit(table, batchId = 0, nFiles = nFiles)
-      ss.commit(table.repartition(nFiles), batchId = 0)
-    }
+    if (!morOnly) ms.commit(table, batchId = 0, nFiles = nFiles)
 
     /** `batch` updates confined to one narrow key range per round (round r
       * targets file ~r): the locality a CDC micro-batch actually has.
@@ -147,22 +140,13 @@ object MergeBench {
     }
 
     if (!morOnly) {
-      var mSum = 0.0; var sSum = 0.0
+      var mSum = 0.0
       (1 to rounds).foreach { r =>
-        val net = netFor(r)
-        val (stats, mSec) = time(ms.merge(net, fields, batchId = r).get)
-        // the CdcStream/SnapshotStore path: read current, merge, rewrite ALL
-        val (_, sSec) = time {
-          val snap = ss.read().get
-          val (merged, cleanup) =
-            Merge.applyChangesWithCleanup(snap, net, "id", fields)
-          try ss.commit(merged.repartition(nFiles), batchId = r)
-          finally cleanup()
-        }
-        mSum += mSec; sSum += sSec
-        println(s"""{"round":$r,"manifest_sec":${f"$mSec%.2f"},"snapshot_sec":${f"$sSec%.2f"},"rewritten":${stats.rewrittenFiles},"reused":${stats.reusedFiles},"new":${stats.newFiles}}""")
+        val (stats, mSec) = time(ms.merge(netFor(r), fields, batchId = r).get)
+        mSum += mSec
+        println(s"""{"round":$r,"manifest_sec":${f"$mSec%.2f"},"rewritten":${stats.rewrittenFiles},"reused":${stats.reusedFiles},"new":${stats.newFiles}}""")
       }
-      println(s"""{"metric":"merge_bench","rows":$n,"batch":$batch,"files":$nFiles,"rounds":$rounds,"manifest_total_sec":${f"$mSum%.2f"},"snapshot_total_sec":${f"$sSum%.2f"},"speedup":${f"${sSum / mSum}%.1f"}}""")
+      println(s"""{"metric":"merge_bench","rows":$n,"batch":$batch,"files":$nFiles,"rounds":$rounds,"manifest_total_sec":${f"$mSum%.2f"}}""")
 
       // OPTIMIZE vs full recluster: leave a few small growth files beyond
       // the key range (insert-only batches), then measure partial

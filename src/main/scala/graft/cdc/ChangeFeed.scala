@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Change data feed: derive the changelog BETWEEN two snapshot versions —
   * the inverse of [[Merge.applyChanges]] and the engine's equivalent of
   * Delta's CDF. The reference replays changes forward only; keeping
-  * versioned snapshots ([[SnapshotStore]] / [[BucketedSnapshotStore]])
+  * versioned snapshots ([[ManifestStore.readVersion]])
   * makes the backward derivation a pure query: downstream consumers that
   * missed the live stream re-sync from any version pair without the
   * original Kafka history.

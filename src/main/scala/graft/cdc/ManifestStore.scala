@@ -9,15 +9,10 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-/** File-manifest snapshot storage — the Delta-log architecture itself, and
-  * the final scale evolution of the store family:
-  *
-  *   [[SnapshotStore]]          rewrites the whole table per commit
-  *   [[BucketedSnapshotStore]]  rewrites only the hash buckets a batch hits
-  *   [[ManifestStore]]          rewrites only the FILES a batch's keys hit,
-  *                              and carries every other file into the new
-  *                              version BY REFERENCE — zero I/O for the
-  *                              untouched part of the table
+/** File-manifest snapshot storage — the Delta-log architecture itself and
+  * the engine's one storage engine: a commit rewrites only the FILES a
+  * batch's keys hit, and carries every other file into the new version BY
+  * REFERENCE — zero I/O for the untouched part of the table.
   *
   * This is how Delta's MERGE actually scales (ref: cdc_stream.py:664-671
   * rides on it): a version is not a directory of data, it is a LIST of
@@ -29,8 +24,8 @@ import scala.jdk.CollectionConverters._
   *   root/_LOG/<n>.json          version n's manifest: schema + the file
   *                               list with per-file key min/max/rows
   *   root/_CURRENT               "<version>,<batchId>,<streamId>" —
-  *                               atomic swap, same protocol as the other
-  *                               stores (conditional PUT on object stores)
+  *                               atomic swap (tmp file + ATOMIC_MOVE; a
+  *                               conditional PUT on object stores)
   *
   * Commits cluster rows by key (`repartitionByRange` + sort) so each file
   * owns a tight, disjoint key range; [[merge]] then intersects the batch's
@@ -1215,6 +1210,46 @@ object ManifestStore {
     */
   final case class MergeConflict(currentVersion: Long, reason: String)
     extends MergeOutcome
+
+  // one monitor per store root: FileLock is PROCESS-scoped (a second
+  // thread in the same JVM gets OverlappingFileLockException, not
+  // blocking), so same-JVM writers serialize on this monitor and the file
+  // lock below only arbitrates across processes
+  private val monitors = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  // roots whose commit lock THIS thread already holds: JVM FileLock is not
+  // reentrant (a nested lock() on the same file throws
+  // OverlappingFileLockException), so a caller composing two locked
+  // operations on one root re-enters the body directly
+  private val held = new ThreadLocal[Set[String]] {
+    override def initialValue(): Set[String] = Set.empty
+  }
+
+  /** The store-local commit lock: a JVM monitor per root (two threads in
+    * one JVM) plus an OS file lock on `_COMMIT_LOCK` (two JVMs). Reentrant
+    * per thread. On an object store the equivalent is a conditional PUT
+    * of `_CURRENT`.
+    */
+  private[graft] def withCommitLock[A](root: String)(body: => A): A =
+    if (held.get()(root)) body
+    else {
+      val mon = monitors.computeIfAbsent(root, _ => new Object)
+      mon.synchronized {
+        Files.createDirectories(Paths.get(root))
+        val ch = java.nio.channels.FileChannel.open(
+          Paths.get(root, "_COMMIT_LOCK"),
+          java.nio.file.StandardOpenOption.CREATE,
+          java.nio.file.StandardOpenOption.WRITE)
+        try {
+          val lock = ch.lock()
+          held.set(held.get() + root)
+          try body finally {
+            held.set(held.get() - root)
+            lock.release()
+          }
+        } finally ch.close()
+      }
+    }
 }
 
 final class ManifestStore(val root: String, spark: SparkSession,
@@ -1265,7 +1300,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
       !name.matches("[+-]?\\d+"),
       s"tag name '$name' must match [A-Za-z0-9][A-Za-z0-9._-]* and not " +
         "be a bare integer (that is a version number)")
-    SnapshotStore.withCommitLock(root) {
+    ManifestStore.withCommitLock(root) {
       val cur = current.map(_._1).getOrElse(throw new IllegalStateException(
         s"no current version at $root — nothing to tag"))
       require(version >= 0 && version <= cur,
@@ -1280,7 +1315,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * Unknown names are a no-op (idempotent cleanup).
     */
   def deleteTag(name: String): Unit =
-    SnapshotStore.withCommitLock(root) { writeTags(tags - name) }
+    ManifestStore.withCommitLock(root) { writeTags(tags - name) }
 
   private def writeTags(t: Map[String, Long]): Unit = {
     if (t.isEmpty) { Files.deleteIfExists(tagsFile); () }
@@ -2951,7 +2986,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * vacuumed or the target fell off the retained log.
     */
   def restore(targetVersion: Long, streamId: String = "restore"): Long =
-    SnapshotStore.withCommitLock(root) {
+    ManifestStore.withCommitLock(root) {
       val cur = currentManifest.getOrElse(throw new IllegalStateException(
         s"no current version at $root — nothing to restore"))
       require(targetVersion >= 0 && targetVersion < cur.version,
@@ -3046,7 +3081,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
     // reading currentManifest and hardlinking it, aborting the clone
     // mid-way with a partially-populated target. The pass is O(#files)
     // metadata work, so the lock hold is planning-scale, not data-scale.
-    SnapshotStore.withCommitLock(root) {
+    ManifestStore.withCommitLock(root) {
     val m = currentManifest.getOrElse(throw new IllegalStateException(
       s"no current version at $root — nothing to clone"))
     val tgt = Paths.get(targetRoot)
@@ -3082,7 +3117,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * re-audit), or when `stagingRoot` was not cloned from this table.
     */
   def publishFrom(stagingRoot: String): Long =
-    SnapshotStore.withCommitLock(root) {
+    ManifestStore.withCommitLock(root) {
       val sProps = ManifestStore.readTableProps(stagingRoot)
       val thisRoot = Paths.get(root).toAbsolutePath.normalize.toString
       val srcRec = sProps.getOrElse("wap.source",
@@ -3789,7 +3824,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
 
   /** Full write (initial load / backfill): cluster into `nFiles` and commit.
     * Returns false (no-op) when `batchId` was already applied by the same
-    * stream lineage — the exactly-once contract shared by the store family.
+    * stream lineage — the store's exactly-once contract.
     *
     * `statsCols`: extra columns to zone-map per file (min/max in the
     * manifest) for [[readWhere]] data skipping; maintained by every later
@@ -3849,7 +3884,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * on disk).
     */
   def evolveSchema(newSchema: StructType, streamId: String = "ddl"): Long =
-    SnapshotStore.withCommitLock(root) {
+    ManifestStore.withCommitLock(root) {
       val m = currentManifest.getOrElse(throw new IllegalStateException(
         s"no current version at $root — nothing to evolve"))
       val old = StructType.fromDDL(m.schemaDDL)
@@ -3893,7 +3928,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * metadata commit too; `to` is the new leaf name, bare or dotted).
     */
   def renameColumn(from: String, to: String, streamId: String = "ddl"): Long =
-    SnapshotStore.withCommitLock(root) {
+    ManifestStore.withCommitLock(root) {
       val m = currentManifest.getOrElse(throw new IllegalStateException(
         s"no current version at $root — nothing to rename"))
       val old = StructType.fromDDL(m.schemaDDL)
@@ -3942,7 +3977,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * physical bytes stay until the parent's files rewrite).
     */
   def dropColumn(name: String, streamId: String = "ddl"): Long =
-    SnapshotStore.withCommitLock(root) {
+    ManifestStore.withCommitLock(root) {
       val m = currentManifest.getOrElse(throw new IllegalStateException(
         s"no current version at $root — nothing to drop"))
       val old = StructType.fromDDL(m.schemaDDL)
@@ -4064,9 +4099,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
     *
     * Semantics are exactly [[Merge.applyChanges]] (ts guard included):
     * every live key occurrence sits in a file whose [min,max] contains it,
-    * so restricting the merge input to intersecting files loses nothing —
-    * the same losslessness argument as the bucketed store's bucket
-    * restriction, with ranges instead of hash buckets.
+    * so restricting the merge input to intersecting files loses nothing.
     */
   def merge(net: DataFrame, fields: Seq[String], batchId: Long,
             streamId: String = "default",
@@ -4296,7 +4329,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
         val parentNames = m.files.map(_.name).toSet
         val touchedIds = d.touched.map(f => (f.name, f.dv)).toSet
         val updatedByName = d.updatedTouched.map(f => f.name -> f).toMap
-        val outcome = SnapshotStore.withCommitLock(root) {
+        val outcome = ManifestStore.withCommitLock(root) {
           val curM = currentManifest.get
           if (replayed(batchId, streamId)) ManifestStore.MorReplayed
           else if (curM.version == m.version) {
@@ -4533,7 +4566,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
                 .withColumn(ManifestStore.ChangeTypeCol,
                   lit(ManifestStore.CdfDelete)), m.colMap)
             onDerived()
-            val committed = SnapshotStore.withCommitLock(root) {
+            val committed = ManifestStore.withCommitLock(root) {
               if (replay.exists { case (batchId, streamId) =>
                   replayed(batchId, streamId) })
                 Right(None) // replayed concurrently
@@ -4680,7 +4713,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
         s"static overwrite batch contains rows outside " +
           s"PARTITION (${pcs.mkString(", ")})")
     }
-    SnapshotStore.withCommitLock(root) {
+    ManifestStore.withCommitLock(root) {
       val m = currentManifest.getOrElse(throw new IllegalStateException(
         s"no current version at $root — commit an initial snapshot first"))
       val schema = StructType.fromDDL(m.schemaDDL)
@@ -5110,7 +5143,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
         // commit keeps a file's name but changes its sidecar, and a rebase
         // past it would resurrect the keys it masked
         val touchedIds = d.touched.map(f => (f.name, f.dv)).toSet
-        val outcome = SnapshotStore.withCommitLock(root) {
+        val outcome = ManifestStore.withCommitLock(root) {
           val curM = currentManifest.get
           if (replayed(batchId, streamId))
             ManifestStore.AlreadyMerged
@@ -5234,7 +5267,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
         val newStats = (m.statsCols ++ Seq(longCol, doubleCol)).distinct
         val entries = writeDataFiles(df2, nFiles, newStats,
           clusterBy = Some("_z"), colMap = m.colMap)
-        val won = SnapshotStore.withCommitLock(root) {
+        val won = ManifestStore.withCommitLock(root) {
           current.exists(_._1 == m.version) && {
             writeManifestAndSwap(m.version + 1, m.batchId, m.streamId,
               m.schemaDDL, entries, newStats)
@@ -5278,7 +5311,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
             val newStats = (m.statsCols ++ cols).distinct
             val entries = writeDataFiles(df2, nFiles, newStats,
               clusterBy = Some("_z"), colMap = m.colMap)
-            val won = SnapshotStore.withCommitLock(root) {
+            val won = ManifestStore.withCommitLock(root) {
               current.exists(_._1 == m.version) && {
                 writeManifestAndSwap(m.version + 1, m.batchId, m.streamId,
                   m.schemaDDL, entries, newStats)
@@ -5462,7 +5495,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
     val entries = writeDataFiles(readFiles(m, m.files), nFiles,
       m.statsCols, colMap = m.colMap)
     onDerived()
-    val won = SnapshotStore.withCommitLock(root) {
+    val won = ManifestStore.withCommitLock(root) {
       current.exists(_._1 == m.version) && {
         writeManifestAndSwap(m.version + 1, m.batchId, m.streamId,
           m.schemaDDL, entries, m.statsCols)
@@ -5628,7 +5661,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
               colMap = m.colMap)
           } finally dfD.unpersist()
         onDerived()
-        val won = SnapshotStore.withCommitLock(root) {
+        val won = ManifestStore.withCommitLock(root) {
           current.exists(_._1 == m.version) && {
             writeManifestAndSwap(m.version + 1, m.batchId, m.streamId,
               m.schemaDDL, carried ++ newEntries, newStats)
@@ -5696,7 +5729,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
             colMap = m.colMap)
         }
         onDerived()
-        val won = SnapshotStore.withCommitLock(root) {
+        val won = ManifestStore.withCommitLock(root) {
           current.exists(_._1 == m.version) && {
             writeManifestAndSwap(m.version + 1, m.batchId, m.streamId,
               m.schemaDDL, carried ++ newEntries, m.statsCols)
@@ -5778,7 +5811,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
   def vacuum(keepLast: Int = 2, minAgeMillis: Long = 0L,
              dryRun: Boolean = false): Seq[String] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    SnapshotStore.withCommitLock(root) {
+    ManifestStore.withCommitLock(root) {
       current.toSeq.flatMap { case (cur, _, _) =>
         val floor = cur - keepLast + 1
         // TAGGED versions are pinned: their files and manifest chains

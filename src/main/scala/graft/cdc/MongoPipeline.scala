@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The complete MongoDB CDC path (ref: cdc_stream.py process_mongodb_batch
@@ -13,9 +13,12 @@ import org.apache.spark.sql.functions._
   *   - normalization is a JVM UDF, not a per-row Python worker round-trip;
   *   - field discovery aggregates map keys distributed-side and collects
   *     only the O(#fields) name list — the reference collects per batch
-  *     (:808-812); we do it once at table create;
-  *   - dedup/merge reuse the Postgres-path operators (one key shuffle, two
-  *     broadcast snapshot passes).
+  *     (:808-812); with `evolveSchema = false` it runs only at table
+  *     create;
+  *   - dedup reuses the Postgres-path operator (one key shuffle), and the
+  *     merge is the same stats-pruned [[ManifestStore]] MERGE
+  *     ([[graft.streaming.ManifestCdcStream]] runs [[conformedNet]] as its
+  *     per-batch step for `database_config.type = mongodb`).
   */
 object MongoPipeline {
 
@@ -61,25 +64,13 @@ object MongoPipeline {
     net.select(cols: _*)
   }
 
-  /** Columns a new batch must conform to, given an existing target table
-    * ("first writer wins" schema evolution, ref :852-861): fields absent in
-    * the table are dropped; fields absent in the batch materialize as null.
-    */
-  def conformFields(snapshot: DataFrame, keyField: String): Seq[String] =
-    snapshot.columns.filter(c => c != Merge.LastTsCol).toSeq
-
-  /** One micro-batch against a snapshot store: discover-or-conform fields,
-    * materialize, merge. Returns the merged frame (caller commits).
-    */
-  def applyBatch(spark: SparkSession, store: SnapshotStore, raw: DataFrame,
-                 keyField: String, columnsToSave: Option[Seq[String]] = None,
-                 tsGuard: Boolean = true, evolveSchema: Boolean = true): DataFrame =
-    applyBatchWithCleanup(spark, store, raw, keyField, columnsToSave, tsGuard,
-      evolveSchema)._1
-
-  /** As [[applyBatch]] plus a cleanup thunk for the pinned intermediates —
-    * streaming callers must invoke it after materialization or they leak a
-    * cache entry per micro-batch.
+  /** One micro-batch's net changes in the shape [[ManifestStore.merge]]
+    * consumes: discover-or-conform the field list, then materialize.
+    * `existing` is the target table's columns (without the merge's
+    * `last_ts`), None before the table exists. Returns the flattened net,
+    * its field list, and a cleanup thunk for the pinned intermediate —
+    * streaming callers must invoke it after the merge or they leak a cache
+    * entry per micro-batch.
     *
     * Schema evolution: with `evolveSchema` (default), fields first seen in
     * a later batch are APPENDED to the table — existing rows read null for
@@ -89,39 +80,26 @@ object MongoPipeline {
     * the reference's first-writer-wins behavior (:852-861): unknown fields
     * are dropped. `columnsToSave` bounds discovery in both modes.
     */
-  def applyBatchWithCleanup(spark: SparkSession, store: SnapshotStore, raw: DataFrame,
-                            keyField: String, columnsToSave: Option[Seq[String]] = None,
-                            tsGuard: Boolean = true, evolveSchema: Boolean = true)
-      : (DataFrame, () => Unit) = {
-    // pinned: on first contact both discoverFields (a collect) and the merge
-    // consume `net` — without this the UDF walk + dedup shuffle run twice
+  def conformedNet(raw: DataFrame, keyField: String,
+                   existing: Option[Seq[String]],
+                   columnsToSave: Option[Seq[String]] = None,
+                   evolveSchema: Boolean = true)
+      : (DataFrame, Seq[String], () => Unit) = {
+    // pinned: discoverFields (a collect) and the merge both consume `net`
+    // — without this the UDF walk + dedup shuffle run twice
     val net = netChanges(raw, keyField)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val snapOpt = store.read()
     def allowed(discovered: Seq[String]): Seq[String] = columnsToSave match {
       // key force-included (ref :822-823)
       case Some(saved) => discovered.filter(f => saved.contains(f) || f == keyField)
       case None        => discovered
     }
-    val fields = snapOpt match {
-      case Some(snap) =>
-        val existing = conformFields(snap, keyField)
-        if (!evolveSchema) existing
-        else existing ++ allowed(discoverFields(net, keyField)).filterNot(existing.contains)
+    val fields = existing match {
+      case Some(cols) =>
+        if (!evolveSchema) cols
+        else cols ++ allowed(discoverFields(net, keyField)).filterNot(cols.contains)
       case None => allowed(discoverFields(net, keyField))
     }
-    val snapshot = snapOpt.map { snap =>
-      // net-new fields appear as null columns on the existing rows
-      fields.filterNot(snap.columns.contains)
-        .foldLeft(snap)((df, f) => df.withColumn(f, lit(null).cast("string")))
-    }.getOrElse {
-      val selects = fields.map(f => lit(null).cast("string").as(f)) :+
-        lit(null).cast("long").as(Merge.LastTsCol)
-      spark.emptyDataFrame.select(selects: _*)
-    }
-    val flat = materialize(net, fields)
-    val (merged, mergeCleanup) =
-      Merge.applyChangesWithCleanup(snapshot, flat, keyField, fields, tsGuard)
-    (merged, () => { mergeCleanup(); net.unpersist() })
+    (materialize(net, fields), fields, () => { net.unpersist(); () })
   }
 }

@@ -579,9 +579,9 @@ object Dedup {
     * that match nothing (the common case for fresh data) are dropped at the
     * scan by the Bloom. False positives cannot leak: the verify join is
     * exact, so the Bloom only ever costs extra verification, never a wrong
-    * answer. In a long-lived pipeline the history band index would persist
-    * in a bucketed store ([[graft.cdc.BucketedSnapshotStore]]) instead of
-    * being recomputed per batch.
+    * answer. In a long-lived pipeline the history band index persists in a
+    * [[graft.cdc.ManifestStore]] keyed on the band
+    * ([[graft.ops.StreamingDedup]]) instead of being recomputed per batch.
     *
     * `maxBandDf` caps hot band keys on the HISTORY side (same degenerate-band
     * guard as every LSH join here, see [[capBands]]).

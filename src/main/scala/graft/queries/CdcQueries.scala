@@ -341,21 +341,22 @@ object CdcQueries {
 
     "cdc_compact_roundtrip" -> ((s, dir) => {
       // small-file compaction under the gate: commit the table fragmented
-      // into per-trigger-sized files, compact into target-size files (a
-      // new version, same batch id), read back — must be lossless. The
-      // file-count and idempotence assertions live in SnapshotStoreSpec;
-      // the oracle proves the rewrite changed nothing.
+      // into per-trigger-sized files, OPTIMIZE them into a few target-size
+      // files (a new version, same batch id), read back — must be
+      // lossless. The file-selection and idempotence assertions live in
+      // the ManifestStore specs; the oracle proves the rewrite changed
+      // nothing.
       // scratch keyed BY SF DIR: the exists-gate below must never serve a
       // store seeded from a different scale in the same JVM (TimeOne warms
       // up at sf0.01 then times another sf dir). Keyed on the sanitized
       // dir string, not its hashCode — hashes can collide across dirs and
       // math.abs(Int.MinValue) is negative
-      val st = new SnapshotStore(
+      val st = new ManifestStore(
         QueryUtil.scratchDir(
-          s"compact_rt_${dir.replaceAll("[^A-Za-z0-9]", "_")}"), s)
+          s"compact_rt_${dir.replaceAll("[^A-Za-z0-9]", "_")}"), s, "c_custkey")
       val cust = s.read.parquet(s"$dir/customer.parquet")
-      if (!st.exists) st.commit(cust.repartition(32), batchId = 0)
-      st.compact()
+      if (!st.exists) st.commit(cust, batchId = 0, nFiles = 32)
+      st.optimize(targetFiles = 4)
       st.read().get.select(cust.columns.map(col).toSeq: _*)
     }),
 

@@ -315,7 +315,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       // property write share ONE commit-lock hold: a write committing
       // between them could land rows violating the about-to-exist CHECK
       // (the write-path guard only fires once the property is visible).
-      graft.cdc.SnapshotStore.withCommitLock(root) {
+      graft.cdc.ManifestStore.withCommitLock(root) {
         setProps.foreach { case (k, v) =>
           if (k.startsWith("check.")) st.validateCheck(k.stripPrefix("check."), v)
         }

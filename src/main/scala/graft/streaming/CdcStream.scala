@@ -1,161 +1,11 @@
 package graft.streaming
 
-import graft.cdc._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The streaming CDC engine: changelog stream -> per-batch net changes ->
-  * keyed snapshot merge (ref: cdc_stream.py run_stream/process_batch
-  * :909-1006/:545-708, re-expressed over Structured Streaming +
-  * [[graft.cdc.SnapshotStore]] instead of Kafka + Delta).
-  *
-  * Semantics carried over:
-  *   - T1 configurable trigger; T2 checkpoint + idempotent re-apply (the
-  *     store's batchId manifest makes foreachBatch replay a no-op);
-  *   - infer-once / cache-forever schema handling (ref :570-577) with the
-  *     cache surviving restarts;
-  *   - T4 graceful shutdown: stop waits for the in-flight batch.
-  *
-  * Scale: each micro-batch does one key-shuffle (dedup) + two broadcast
-  * passes over the snapshot (merge) — identical plan shape to the batch
-  * path, which is the point of foreachBatch.
+/** Source-side helpers shared by every stream that writes through
+  * [[ManifestCdcStream]]: the file-based changelog source and the
+  * checkpoint lineage id that scopes replay detection.
   */
-final class CdcStream(
-    spark: SparkSession,
-    source: DataFrame,
-    store: SnapshotStore,
-    keyField: String,
-    cacheDir: String,
-    checkpointDir: String,
-    columnsToSave: Option[Seq[String]] = None,
-    tsGuard: Boolean = true,
-    trigger: Trigger = Trigger.AvailableNow(),
-    /** K6/K8: when set, every batch appends replay-SQL statements (one per
-      * raw event, pre-dedup) as CSV under this dir — the reference's
-      * SQL-history audit sink (archive/streaming_from_kafka_to_minio_2.py
-      * :126-131) as a streaming side output.
-      */
-    sqlAuditDir: Option[String] = None,
-    auditTable: String = "target",
-    /** Continuously maintained COUNT/SUM view: (store, groupField,
-      * valueField). Each committed batch folds its LIVE net changes into
-      * the view in O(delta) ([[graft.cdc.IncrementalAgg]]); the view store
-      * commits under the same (batchId, streamId), so replays are no-ops.
-      * If a crash lands between the two commits, the next batch detects
-      * the view lagging and rebuilds it from the merged snapshot — the
-      * O(table) path runs only on that crash-window replay, never in
-      * steady state.
-      */
-    aggView: Option[(SnapshotStore, String, String)] = None) {
-
-  @volatile private var fieldsCache: Option[Seq[Envelope.FieldInfo]] =
-    Envelope.loadCache(cacheDir)
-  @volatile private var batchInProgress = false
-  // replay detection is scoped to this checkpoint lineage: the id lives IN
-  // the checkpoint dir, so wiping the checkpoint (even recreated at the
-  // same path) starts a new lineage with fresh batch ids
-  private lazy val streamId = CdcStream.lineageId(checkpointDir)
-
-  private def savedFieldNames(fields: Seq[Envelope.FieldInfo]): Seq[String] = {
-    val names = fields.map(_.name)
-    columnsToSave match {
-      case Some(saved) =>
-        val keep = names.filter(n => saved.contains(n) || n == keyField)
-        keep
-      case None => names
-    }
-  }
-
-  /** One micro-batch: infer-or-load schema (with drift detection, see
-    * [[SchemaTracker]]), dedup to net changes, merge.
-    */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    batchInProgress = true
-    try {
-      if (batch.isEmpty) return
-      val fields = SchemaTracker.resolve(batch, fieldsCache, cacheDir)
-      if (!fieldsCache.contains(fields)) fieldsCache = Some(fields)
-      val withSeq =
-        if (batch.columns.contains(Changelog.SeqCol)) batch
-        else batch.withColumn(Changelog.SeqCol, monotonically_increasing_id())
-      val net = Changelog.netChanges(withSeq, fields, keyField,
-        columnsToSave.map(_ :+ keyField))
-      val names = savedFieldNames(fields)
-      val byName = fields.map(f => f.name -> f).toMap
-      val snapshot0 = store.read().getOrElse(emptySnapshot(fields, names))
-      // snapshot grows drift-added columns as nulls before the merge
-      val snapshot = names.foldLeft(snapshot0) { (df, n) =>
-        if (df.columns.contains(n)) df
-        else df.withColumn(n, lit(null).cast(Envelope.sparkType(byName(n).dbzType)))
-      }
-      val prevBatch = store.currentFull // pre-commit view-sync reference
-      val (merged, live, cleanup) =
-        Merge.applyChangesFull(snapshot, net, keyField, names, tsGuard)
-      val committed =
-        try {
-          val ok = store.commit(merged, batchId, streamId)
-          // fold the batch into the maintained view BEFORE releasing the
-          // pinned net (live derives from it); the pre-merge snapshot
-          // version is still on disk (commit retains the previous version)
-          if (ok) aggView.foreach { case (vs, groupField, valueField) =>
-            // in sync = the view has folded exactly the batches the main
-            // store had BEFORE this commit, in this lineage; anything else
-            // (first batch, crash window, foreign lineage) rebuilds from
-            // the pre-merge snapshot instead of trusting stale state
-            val inSync = vs.currentFull.exists(v =>
-              v._3 == streamId && prevBatch.exists(p => p._3 == streamId && p._2 == v._2))
-            val state =
-              if (inSync) vs.read().get
-              else IncrementalAgg.aggState(snapshot, groupField, valueField)
-            vs.commit(
-              IncrementalAgg.maintain(state, snapshot, live,
-                keyField, groupField, valueField),
-              batchId, streamId)
-          }
-          ok
-        } finally cleanup() // release per-batch pinned intermediates
-      // audit AFTER a successful commit, overwriting the batch's dir: a
-      // foreachBatch replay neither duplicates statements (overwrite) nor
-      // records statements for a batch that never applied (gated)
-      if (committed) sqlAuditDir.foreach { dir =>
-        val env = Envelope.envelopeSchema(Envelope.recordSchema(fields))
-        val fl = Changelog.withKey(
-          Changelog.flatten(Changelog.parse(withSeq, env), fields.map(_.name)), keyField)
-        SqlHistory.fromFlattened(fl, auditTable, fields, keyField)
-          .select("sql_text")
-          .write.mode("overwrite").text(s"$dir/batch_$batchId")
-      }
-    } finally batchInProgress = false
-  }
-
-  private def emptySnapshot(fields: Seq[Envelope.FieldInfo], names: Seq[String]): DataFrame = {
-    val byName = fields.map(f => f.name -> f).toMap
-    val schema = StructType(
-      names.map(n => StructField(n, Envelope.sparkType(byName(n).dbzType))) :+
-        StructField(Merge.LastTsCol, LongType))
-    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-  }
-
-  def start(): StreamingQuery =
-    source.writeStream
-      .foreachBatch((df: DataFrame, id: Long) => processBatch(df, id))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-
-  /** T4: wait for the in-flight batch before stopping (ref: cdc_stream.py
-    * KeyboardInterrupt handler :992-1002).
-    */
-  def stopGracefully(query: StreamingQuery, timeoutMs: Long = 30000): Unit = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (batchInProgress && System.currentTimeMillis() < deadline)
-      Thread.sleep(50)
-    query.stop()
-  }
-}
-
 object CdcStream {
   /** Stable id of one checkpoint lineage: a uuid file inside the checkpoint
     * dir, created on first use. Deleting the checkpoint deletes the id —

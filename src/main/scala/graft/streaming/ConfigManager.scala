@@ -24,13 +24,14 @@ final case class CdcConfig(
     checkpointDir: String,
     schemaCacheDir: String,
     databaseType: String,
-    /** "snapshot" (whole-table rewrite, the reference's shape), "manifest"
-      * (stats-pruned file MERGE), or "manifest_mor" (deletion-vector
-      * merge-on-read) — the storage engine behind the same stream.
+    /** "manifest" (stats-pruned copy-on-write file MERGE) or
+      * "manifest_mor" (deletion-vector merge-on-read) — the commit mode of
+      * the manifest store behind the stream. Anything else is rejected at
+      * startup and on hot reload.
       */
     storage: String,
     /** `processing_config.dedup.column`: content column to fingerprint for
-      * the streaming-dedup side channel (manifest engines only) — see
+      * the streaming-dedup side channel — see
       * [[ManifestCdcStream.DedupConfig]]. None = side channel off.
       */
     dedupColumn: Option[String] = None,
@@ -45,7 +46,7 @@ final case class CdcConfig(
     /** `delta_config.change_feed`: capture a per-commit change file
       * (insert/update pre+post/delete images) so downstream consumers can
       * `readChangeFeed` off the output table — Delta's
-      * `enableChangeDataFeed`, manifest engines only.
+      * `enableChangeDataFeed`.
       */
     changeFeed: Boolean = false)
 
@@ -62,7 +63,7 @@ object CdcConfig {
     checkpointDir = "out/_checkpoint",
     schemaCacheDir = "out/_schema",
     databaseType = "postgres",
-    storage = "snapshot")
+    storage = "manifest")
 }
 
 final class ConfigManager(path: String) {

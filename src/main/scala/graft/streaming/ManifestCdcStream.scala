@@ -5,7 +5,7 @@ import graft.ops.StreamingDedup
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 object ManifestCdcStream {
   /** Streaming content-dedup side channel (the `processing_config.dedup`
@@ -19,21 +19,52 @@ object ManifestCdcStream {
     */
   final case class DedupConfig(column: String, bands: Boolean = false,
                                ttlBatches: Option[Long] = None)
+
+  /** The changelog's wire format, which picks the per-batch net-change
+    * step once per stream (`database_config.type`).
+    */
+  sealed trait ChangeFormat
+  /** Debezium relational envelope (Postgres): schema inferred once and
+    * cached across restarts, additive drift from each batch's schema
+    * blocks ([[SchemaTracker]]), typed columns.
+    */
+  case object Postgres extends ChangeFormat
+  /** Debezium MongoDB extended-JSON envelope
+    * ([[graft.cdc.MongoPipeline.conformedNet]]): BSON-normalized documents,
+    * fields discovered at table create, then appended as they appear
+    * (`evolveSchema`) or conformed to the table's columns (the reference's
+    * first-writer-wins, `evolveSchema = false`); string-typed columns.
+    */
+  final case class Mongo(evolveSchema: Boolean = true) extends ChangeFormat
+
+  /** One batch's net changes ready for the merge: the net frame, the
+    * table columns it writes (types for the bootstrap commit), a hook for
+    * committed batches, and the release of pinned intermediates.
+    */
+  private final case class NetBatch(net: DataFrame, schema: StructType,
+                                    onCommit: Long => Unit = _ => (),
+                                    cleanup: () => Unit = () => ())
 }
 
-/** Streaming CDC into the file-manifest store: changelog stream ->
-  * per-batch net changes -> stats-pruned MERGE ([[graft.cdc.ManifestStore]]).
+/** The streaming CDC engine: changelog stream -> per-batch net changes ->
+  * stats-pruned MERGE into the file-manifest store
+  * ([[graft.cdc.ManifestStore]]) — the shape the reference deploys
+  * (stream -> Delta MERGE, ref: cdc_stream.py run_stream/process_batch
+  * :909-1006/:545-708, :664-671). Each batch rewrites only the files whose
+  * key range the batch's keys intersect, so steady-state commit I/O is
+  * O(touched + batch) no matter how large the table grows.
   *
-  * [[CdcStream]] + [[graft.cdc.SnapshotStore]] rewrite the whole table
-  * every micro-batch — correct, and fine while the table is small, but
-  * O(table) I/O per trigger. This engine is the shape the reference
-  * actually deploys (stream -> Delta MERGE, ref: cdc_stream.py:664-671):
-  * each batch rewrites only the files whose key range the batch's keys
-  * intersect, so steady-state commit I/O is O(touched + batch) no matter
-  * how large the table grows — the property that lets a micro-batch land
-  * in seconds against a 100 TB table. Exactly-once replay detection,
-  * additive schema drift, rate capping, and graceful shutdown carry over
-  * from [[CdcStream]] unchanged.
+  * Semantics carried over from the reference:
+  *   - T1 configurable trigger; T2 checkpoint + idempotent re-apply (the
+  *     store's (batchId, streamId) guard makes foreachBatch replay a
+  *     no-op);
+  *   - infer-once / cache-forever schema handling (ref :570-577) with the
+  *     cache surviving restarts, plus additive drift;
+  *   - T4 graceful shutdown: stop waits for the in-flight batch.
+  *
+  * Both wire formats ([[ManifestCdcStream.ChangeFormat]]) share everything
+  * after the net-change step: merge-on-read, auto-optimize, the change
+  * feed, the maintained view and the dedup side channel.
   */
 final class ManifestCdcStream(
     spark: SparkSession,
@@ -68,17 +99,17 @@ final class ManifestCdcStream(
       * makes progress.
       */
     dvDebtFraction: Double = 0.25,
-    /** Continuously maintained COUNT/SUM view: (state store, groupField,
-      * valueField). Where [[CdcStream]]'s view folds the ts-guard-surviving
-      * live net (one snapshot pass per batch), this one folds the STORE-
-      * DERIVED change feed ([[graft.cdc.ManifestStore.changesBetween]]) —
-      * exact before-images by construction, ZERO table access per batch
-      * ([[graft.cdc.IncrementalAgg.maintainFromFeed]]). Same crash-window
-      * contract: a view lagging its store (crash between the two commits,
-      * foreign lineage) rebuilds from the merged table; steady state never
-      * touches it.
+    /** Continuously maintained COUNT/SUM view: (state store keyed on
+      * groupField, groupField, valueField). Each committed batch folds the
+      * STORE-DERIVED change feed
+      * ([[graft.cdc.ManifestStore.changesBetween]]) — exact before-images
+      * by construction, ZERO table access per batch
+      * ([[graft.cdc.IncrementalAgg.maintainFromFeed]]); the view commits
+      * under the same (batchId, streamId), so replays are no-ops. A view
+      * lagging its store (crash between the two commits, foreign lineage)
+      * rebuilds from the merged table; steady state never touches it.
       */
-    aggView: Option[(SnapshotStore, String, String)] = None,
+    aggView: Option[(ManifestStore, String, String)] = None,
     /** Use [[graft.cdc.ManifestStore.mergeOptimistic]] instead of the
       * single-writer merge — for deployments where the stream shares its
       * table with other writers (a backfill job, another stream on a
@@ -108,7 +139,22 @@ final class ManifestCdcStream(
       * verdict rows — the index itself is never corrupted, its own
       * (batchId, streamId) guard holds).
       */
-    dedup: Option[ManifestCdcStream.DedupConfig] = None) {
+    dedup: Option[ManifestCdcStream.DedupConfig] = None,
+    /** K6/K8: when set, every committed Postgres batch writes replay-SQL
+      * statements (one per raw event, pre-dedup) as text under
+      * `<dir>/batch_<id>` — the reference's SQL-history audit sink
+      * (archive/streaming_from_kafka_to_minio_2.py :126-131) as a
+      * streaming side output.
+      */
+    sqlAuditDir: Option[String] = None,
+    auditTable: String = "target",
+    /** The changelog's wire format — see
+      * [[ManifestCdcStream.ChangeFormat]]. Only the net-change step differs
+      * between formats; the merge and everything after it is shared.
+      */
+    changeFormat: ManifestCdcStream.ChangeFormat = ManifestCdcStream.Postgres) {
+
+  import ManifestCdcStream.NetBatch
 
   // optimistic + mergeOnRead is a first-class combination since r11:
   // deletion-vector commits rebase through the store's MoR CAS protocol
@@ -116,98 +162,135 @@ final class ManifestCdcStream(
   @volatile private var fieldsCache: Option[Seq[Envelope.FieldInfo]] =
     Envelope.loadCache(cacheDir)
   @volatile private var batchInProgress = false
+  // replay detection is scoped to this checkpoint lineage: the id lives IN
+  // the checkpoint dir, so wiping the checkpoint (even recreated at the
+  // same path) starts a new lineage with fresh batch ids
   private lazy val streamId = CdcStream.lineageId(checkpointDir)
+
+  private def postgresNet(batch: DataFrame): NetBatch = {
+    val fields = SchemaTracker.resolve(batch, fieldsCache, cacheDir)
+    if (!fieldsCache.contains(fields)) fieldsCache = Some(fields)
+    val withSeq =
+      if (batch.columns.contains(Changelog.SeqCol)) batch
+      else batch.withColumn(Changelog.SeqCol, monotonically_increasing_id())
+    val saved = fields.filter(f =>
+      columnsToSave.forall(s => s.contains(f.name) || f.name == keyField))
+    val net = Changelog.netChanges(withSeq, fields, keyField,
+      columnsToSave.map(_ :+ keyField))
+    // audit AFTER a successful commit, overwriting the batch's dir: a
+    // foreachBatch replay neither duplicates statements (overwrite) nor
+    // records statements for a batch that never applied (gated)
+    def audit(batchId: Long): Unit = sqlAuditDir.foreach { dir =>
+      val env = Envelope.envelopeSchema(Envelope.recordSchema(fields))
+      val fl = Changelog.withKey(
+        Changelog.flatten(Changelog.parse(withSeq, env), fields.map(_.name)), keyField)
+      SqlHistory.fromFlattened(fl, auditTable, fields, keyField)
+        .select("sql_text")
+        .write.mode("overwrite").text(s"$dir/batch_$batchId")
+    }
+    NetBatch(net, StructType(saved.map(f =>
+      StructField(f.name, Envelope.sparkType(f.dbzType)))), audit)
+  }
+
+  private def mongoNet(batch: DataFrame, evolveSchema: Boolean): NetBatch = {
+    val existing = store.currentManifest.map(m =>
+      StructType.fromDDL(m.schemaDDL).fieldNames.toSeq
+        .filterNot(_ == Merge.LastTsCol))
+    val (net, fields, cleanup) = MongoPipeline.conformedNet(batch, keyField,
+      existing, columnsToSave, evolveSchema)
+    NetBatch(net, StructType(fields.map(StructField(_, StringType))),
+      cleanup = cleanup)
+  }
+
+  private val netStep: DataFrame => NetBatch = changeFormat match {
+    case ManifestCdcStream.Postgres      => postgresNet
+    case ManifestCdcStream.Mongo(evolve) => mongoNet(_, evolve)
+  }
 
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     batchInProgress = true
     try {
       if (batch.isEmpty) return
-      val fields = SchemaTracker.resolve(batch, fieldsCache, cacheDir)
-      if (!fieldsCache.contains(fields)) fieldsCache = Some(fields)
-      val withSeq =
-        if (batch.columns.contains(Changelog.SeqCol)) batch
-        else batch.withColumn(Changelog.SeqCol, monotonically_increasing_id())
-      val names = {
-        val all = fields.map(_.name)
-        columnsToSave match {
-          case Some(saved) => all.filter(n => saved.contains(n) || n == keyField)
-          case None        => all
-        }
-      }
-      val net = Changelog.netChanges(withSeq, fields, keyField,
-        columnsToSave.map(_ :+ keyField))
-      if (!store.exists) {
-        // bootstrap an empty v0 so the first data batch goes through the
-        // same pruned-merge path as every later one (batchId -1 leaves all
-        // real batch ids unconsumed for replay detection; a crash between
-        // this commit and the merge below replays into merge's own guard)
-        val byName = fields.map(f => f.name -> f).toMap
-        val schema = StructType(names.map(n =>
-          StructField(n, Envelope.sparkType(byName(n).dbzType))))
-        store.commit(
-          spark.createDataFrame(java.util.Collections.emptyList[Row](), schema),
-          batchId = -1L, nFiles = 1, streamId = streamId)
-      }
-      val prev = store.current // pre-commit view-sync reference
-      val committed: Option[Long] =
-        if (mergeOnRead && optimistic)
-          store.mergeOnReadOptimistic(net, names, batchId, streamId,
-            tsGuard) match {
-            case ManifestStore.MorApplied(stats) => Some(stats.version)
-            case ManifestStore.MorReplayed       => None
-            case c: ManifestStore.MorConflict =>
-              throw new IllegalStateException(
-                s"merge-on-read conflict after retries at version " +
-                  s"${c.currentVersion}: ${c.reason} — failing the batch " +
-                  "for stream-level retry")
-          }
-        else if (mergeOnRead)
-          store.mergeOnRead(net, names, batchId, streamId, tsGuard)
-            .map(_.version)
-        else if (!optimistic)
-          store.merge(net, names, batchId, streamId, tsGuard).map(_.version)
-        else store.mergeOptimistic(net, names, batchId, streamId, tsGuard) match {
-          case ManifestStore.MergedAt(stats) => Some(stats.version)
-          case ManifestStore.AlreadyMerged   => None
-          case c: ManifestStore.MergeConflict =>
-            throw new IllegalStateException(
-              s"merge conflict after retries at version ${c.currentVersion}: " +
-                s"${c.reason} — failing the batch for stream-level retry")
-        }
-      committed.foreach { version =>
-        aggView.foreach { case (vs, groupField, valueField) =>
-          // in sync = the view has folded exactly the batches the main
-          // store had BEFORE this commit, in this lineage
-          val inSync = vs.currentFull.exists(v =>
-            v._3 == streamId &&
-              prev.exists(p => p._3 == streamId && p._2 == v._2))
-          val feedOpt =
-            if (inSync) prev.flatMap(p =>
-              store.changesBetween(p._1, version,
-                ignore = Set(Merge.LastTsCol)))
-            else None
-          val state = feedOpt match {
-            case Some(feed) =>
-              IncrementalAgg.maintainFromFeed(vs.read().get, feed,
-                groupField, valueField)
-            case None => // first batch / crash window / reaped feed
-              IncrementalAgg.aggState(store.read().get, groupField, valueField)
-          }
-          vs.commit(state, batchId, streamId)
-        }
-        if (reclusterOverFiles > 0) {
-          val m = store.currentManifest
-          if (m.exists(_.files.size > reclusterOverFiles))
-            store.optimize(reclusterFiles)
-          else if (dvDebtFraction > 0 && m.exists { mf =>
-              val rows = mf.files.map(_.rows).sum
-              rows > 0 && mf.files.map(_.dvRows).sum >= dvDebtFraction * rows
-            })
-            store.optimize(reclusterFiles, dvFold = dvDebtFraction)
-        }
-        dedup.foreach(dc => processDedup(dc, net, batchId))
-      }
+      val step = netStep(batch)
+      try mergeBatch(step, batchId) finally step.cleanup()
     } finally batchInProgress = false
+  }
+
+  /** Merge one batch's net changes, then the committed-batch work:
+    * maintained view, auto-optimize, dedup side channel, audit.
+    */
+  private def mergeBatch(step: NetBatch, batchId: Long): Unit = {
+    val net = step.net
+    val names = step.schema.fieldNames.toSeq
+    if (!store.exists) {
+      // bootstrap an empty v0 so the first data batch goes through the
+      // same pruned-merge path as every later one (batchId -1 leaves all
+      // real batch ids unconsumed for replay detection; a crash between
+      // this commit and the merge below replays into merge's own guard)
+      store.commit(
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), step.schema),
+        batchId = -1L, nFiles = 1, streamId = streamId)
+    }
+    val prev = store.current // pre-commit view-sync reference
+    val committed: Option[Long] =
+      if (mergeOnRead && optimistic)
+        store.mergeOnReadOptimistic(net, names, batchId, streamId,
+          tsGuard) match {
+          case ManifestStore.MorApplied(stats) => Some(stats.version)
+          case ManifestStore.MorReplayed       => None
+          case c: ManifestStore.MorConflict =>
+            throw new IllegalStateException(
+              s"merge-on-read conflict after retries at version " +
+                s"${c.currentVersion}: ${c.reason} — failing the batch " +
+                "for stream-level retry")
+        }
+      else if (mergeOnRead)
+        store.mergeOnRead(net, names, batchId, streamId, tsGuard)
+          .map(_.version)
+      else if (!optimistic)
+        store.merge(net, names, batchId, streamId, tsGuard).map(_.version)
+      else store.mergeOptimistic(net, names, batchId, streamId, tsGuard) match {
+        case ManifestStore.MergedAt(stats) => Some(stats.version)
+        case ManifestStore.AlreadyMerged   => None
+        case c: ManifestStore.MergeConflict =>
+          throw new IllegalStateException(
+            s"merge conflict after retries at version ${c.currentVersion}: " +
+              s"${c.reason} — failing the batch for stream-level retry")
+      }
+    committed.foreach { version =>
+      aggView.foreach { case (vs, groupField, valueField) =>
+        // in sync = the view has folded exactly the batches the main
+        // store had BEFORE this commit, in this lineage
+        val inSync = vs.current.exists(v =>
+          v._3 == streamId &&
+            prev.exists(p => p._3 == streamId && p._2 == v._2))
+        val feedOpt =
+          if (inSync) prev.flatMap(p =>
+            store.changesBetween(p._1, version,
+              ignore = Set(Merge.LastTsCol)))
+          else None
+        val state = feedOpt match {
+          case Some(feed) =>
+            IncrementalAgg.maintainFromFeed(vs.read().get, feed,
+              groupField, valueField)
+          case None => // first batch / crash window / reaped feed
+            IncrementalAgg.aggState(store.read().get, groupField, valueField)
+        }
+        vs.commit(state, batchId, nFiles = 1, streamId = streamId)
+      }
+      if (reclusterOverFiles > 0) {
+        val m = store.currentManifest
+        if (m.exists(_.files.size > reclusterOverFiles))
+          store.optimize(reclusterFiles)
+        else if (dvDebtFraction > 0 && m.exists { mf =>
+            val rows = mf.files.map(_.rows).sum
+            rows > 0 && mf.files.map(_.dvRows).sum >= dvDebtFraction * rows
+          })
+          store.optimize(reclusterFiles, dvFold = dvDebtFraction)
+      }
+      dedup.foreach(dc => processDedup(dc, net, batchId))
+      step.onCommit(batchId)
+    }
   }
 
   /** The dedup side channel for one COMMITTED batch: fingerprint the

@@ -4,8 +4,8 @@ import graft.cdc.Envelope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Per-batch schema resolution shared by the streaming engines
-  * ([[CdcStream]], [[ManifestCdcStream]]).
+/** Per-batch schema resolution for the Postgres envelope path of
+  * [[ManifestCdcStream]].
   *
   * Schema drift (SURVEY §4 hazard 6 — the reference's cache never
   * invalidates, so source DDL changes are silently ignored): every batch

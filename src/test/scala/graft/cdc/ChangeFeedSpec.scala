@@ -46,16 +46,18 @@ class ChangeFeedSpec extends SparkSpec {
     assert(ChangeFeed.diff(old, neu, "k", ignore = Set("loaded")).count() == 0)
   }
 
-  test("feed between two retained SnapshotStore versions (the CDF wiring)") {
+  test("feed between two retained ManifestStore versions (the CDF wiring)") {
     val root = java.nio.file.Files.createTempDirectory("cf_store").toString
-    val store = new SnapshotStore(root, spark)
-    store.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "name"), batchId = 0)
-    store.commit(Seq((2L, "B"), (3L, "c")).toDF("k", "name"), batchId = 1)
+    val store = new ManifestStore(root, spark, "k")
+    store.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "name"), batchId = 0,
+      nFiles = 1)
+    store.commit(Seq((2L, "B"), (3L, "c")).toDF("k", "name"), batchId = 1,
+      nFiles = 1)
     val feed = ChangeFeed.diff(
       store.readVersion(0).get, store.readVersion(1).get, "k")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSet
     assert(feed == Set(("d", 1L), ("u", 2L), ("c", 3L)))
-    // only the retained pair is readable; a reaped version returns None
+    // a version past the current one is not readable
     assert(store.readVersion(99).isEmpty)
   }
 

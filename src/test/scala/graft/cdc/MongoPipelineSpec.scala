@@ -1,6 +1,7 @@
 package graft.cdc
 
 import graft.SparkSpec
+import graft.streaming.ManifestCdcStream
 import org.apache.spark.sql.Row
 import java.nio.file.Files
 
@@ -44,13 +45,22 @@ class MongoPipelineSpec extends SparkSpec {
     assert(MongoPipeline.discoverFields(net, "_id") == Seq("_id", "aa", "name", "zz"))
   }
 
-  test("applyBatch first-writer-wins mode conforms later batches (ref parity)") {
-    val store = new SnapshotStore(tmp(), spark)
+  /** The Mongo per-batch step as a stream runs it: net changes conformed
+    * to the manifest table's columns, merged into the store.
+    */
+  private def mongoStream(store: ManifestStore, evolveSchema: Boolean = true,
+                          columnsToSave: Option[Seq[String]] = None) =
+    new ManifestCdcStream(spark, spark.emptyDataFrame, store, "_id",
+      cacheDir = tmp(), checkpointDir = tmp(), columnsToSave = columnsToSave,
+      changeFormat = ManifestCdcStream.Mongo(evolveSchema))
+
+  test("mongo first-writer-wins mode conforms later batches (ref parity)") {
+    val store = new ManifestStore(tmp(), spark, "_id")
+    val stream = mongoStream(store, evolveSchema = false)
     val b0 = Seq(
       (event("c", "k1", doc("k1"), 100), 0L),
       (event("c", "k2", doc("k2"), 100), 1L)).toDF("value", Changelog.SeqCol)
-    store.commit(MongoPipeline.applyBatch(spark, store, b0, "_id",
-      evolveSchema = false), 0)
+    stream.processBatch(b0, 0)
     assert(store.read().get.columns.toSeq == Seq("_id", "name", "last_ts"))
 
     // batch 2: new field "extra" must be dropped (first writer wins);
@@ -59,26 +69,26 @@ class MongoPipelineSpec extends SparkSpec {
       (event("u", "k1", doc("k1", """, "extra": "x""""), 200), 0L),
       (event("d", "k2", "", 200, beforeDoc = doc("k2")), 1L))
       .toDF("value", Changelog.SeqCol)
-    store.commit(MongoPipeline.applyBatch(spark, store, b1, "_id",
-      evolveSchema = false), 1)
+    stream.processBatch(b1, 1)
     val rows = store.read().get.select("_id", "name").collect().toSet
     assert(rows == Set(Row("k1", "n_k1")))
     assert(store.read().get.columns.toSeq == Seq("_id", "name", "last_ts"))
   }
 
-  test("applyBatch default evolves additively: new fields append as nulls") {
-    val store = new SnapshotStore(tmp(), spark)
+  test("mongo default mode evolves additively: new fields append as nulls") {
+    val store = new ManifestStore(tmp(), spark, "_id")
+    val stream = mongoStream(store)
     val b0 = Seq(
       (event("c", "k1", doc("k1"), 100), 0L),
       (event("c", "k2", doc("k2"), 100), 1L)).toDF("value", Changelog.SeqCol)
-    store.commit(MongoPipeline.applyBatch(spark, store, b0, "_id"), 0)
+    stream.processBatch(b0, 0)
     assert(store.read().get.columns.toSeq == Seq("_id", "name", "last_ts"))
 
     // batch 2 drifts: k1 gains "extra" -> column appends; untouched k2
     // reads null for it (Postgres-path parity)
     val b1 = Seq((event("u", "k1", doc("k1", """, "extra": "x""""), 200), 0L))
       .toDF("value", Changelog.SeqCol)
-    store.commit(MongoPipeline.applyBatch(spark, store, b1, "_id"), 1)
+    stream.processBatch(b1, 1)
     val snap = store.read().get
     assert(snap.columns.contains("extra"))
     val byId = snap.select("_id", "extra").collect()
@@ -87,11 +97,10 @@ class MongoPipelineSpec extends SparkSpec {
   }
 
   test("columnsToSave prunes at table create but always keeps the key") {
-    val store = new SnapshotStore(tmp(), spark)
+    val store = new ManifestStore(tmp(), spark, "_id")
     val b0 = Seq((event("c", "k1", doc("k1", """, "drop_me": "1""""), 100), 0L))
       .toDF("value", Changelog.SeqCol)
-    store.commit(MongoPipeline.applyBatch(spark, store, b0, "_id",
-      columnsToSave = Some(Seq("name"))), 0)
+    mongoStream(store, columnsToSave = Some(Seq("name"))).processBatch(b0, 0)
     assert(store.read().get.columns.toSeq == Seq("_id", "name", "last_ts"))
   }
 

@@ -6,6 +6,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
+/** The stream's source, restart and side-output contract on
+  * [[ManifestCdcStream]]: the file source ([[CdcStream.fileSource]]), the
+  * schema cache and checkpoint lineage across restarts, column pruning,
+  * and the SQL audit side output.
+  */
 class CdcStreamSpec extends SparkSpec {
   import spark.implicits._
 
@@ -22,35 +27,12 @@ class CdcStreamSpec extends SparkSpec {
 
   private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
 
-  test("memory-stream end to end: batches merge into the snapshot store") {
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[String]
-    val store = new SnapshotStore(tmp("st"), spark)
-    val stream = new CdcStream(spark, ms.toDF(), store, "id",
-      cacheDir = tmp("cache"), checkpointDir = tmp("ckpt"),
-      trigger = Trigger.ProcessingTime(0))
-    val q = stream.start()
-    try {
-      ms.addData(event("c", 1, "a", 100), event("c", 2, "b", 100))
-      q.processAllAvailable()
-      assert(store.read().get.select("id", "name").collect().toSet ==
-        Set(org.apache.spark.sql.Row(1L, "a"), org.apache.spark.sql.Row(2L, "b")))
-
-      // second batch: update 1, delete 2, stale update of 1 must not regress
-      ms.addData(event("u", 1, "a2", 200), event("d", 2, "b", 150),
-        event("u", 1, "stale", 50))
-      q.processAllAvailable()
-      val rows = store.read().get.select("id", "name").collect().toSet
-      assert(rows == Set(org.apache.spark.sql.Row(1L, "a2")))
-    } finally stream.stopGracefully(q)
-  }
-
   test("file source end to end with AvailableNow trigger") {
     val inDir = tmp("in")
     Files.writeString(java.nio.file.Paths.get(inDir, "b0.json"),
       Seq(event("c", 10, "x", 100), event("u", 10, "y", 200)).mkString("\n"))
-    val store = new SnapshotStore(tmp("st"), spark)
-    val stream = new CdcStream(spark, CdcStream.fileSource(spark, inDir),
+    val store = new ManifestStore(tmp("st"), spark, "id")
+    val stream = new ManifestCdcStream(spark, CdcStream.fileSource(spark, inDir),
       store, "id", cacheDir = tmp("cache"), checkpointDir = tmp("ckpt"))
     val q = stream.start()
     q.awaitTermination(60000)
@@ -62,8 +44,8 @@ class CdcStreamSpec extends SparkSpec {
     Envelope.saveCache(cacheDir, fields)
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[String]
-    val store = new SnapshotStore(tmp("st"), spark)
-    val stream = new CdcStream(spark, ms.toDF(), store, "id",
+    val store = new ManifestStore(tmp("st"), spark, "id")
+    val stream = new ManifestCdcStream(spark, ms.toDF(), store, "id",
       cacheDir = cacheDir, checkpointDir = tmp("ckpt"),
       trigger = Trigger.ProcessingTime(0))
     val q = stream.start()
@@ -77,106 +59,10 @@ class CdcStreamSpec extends SparkSpec {
     } finally stream.stopGracefully(q)
   }
 
-  test("replaying a batch id is a no-op (foreachBatch replay safety)") {
-    val store = new SnapshotStore(tmp("st"), spark)
-    val stream = new CdcStream(spark, spark.emptyDataFrame, store, "id",
-      cacheDir = tmp("cache"), checkpointDir = tmp("ckpt"))
-    val b1 = Seq((event("c", 1, "a", 100), 0L)).toDF("value", Changelog.SeqCol)
-    stream.processBatch(b1, 0)
-    val v1 = store.current
-    // same batch id again with different payload: must not apply
-    val b2 = Seq((event("u", 1, "clobber", 900), 1L)).toDF("value", Changelog.SeqCol)
-    stream.processBatch(b2, 0)
-    assert(store.current == v1)
-    assert(store.read().get.select("name").as[String].collect().toSeq == Seq("a"))
-  }
-
-  test("maintained agg view tracks the snapshot across batches, replays, " +
-      "and the crash-window rebuild") {
-    val numFields = Seq(
-      Envelope.FieldInfo("id", "int64", optional = false),
-      Envelope.FieldInfo("grp", "string"),
-      Envelope.FieldInfo("v", "double"))
-    def nEvent(op: String, id: Long, grp: String, v: Double, ts: Long): String = {
-      val img = s"""{"id":$id,"grp":"$grp","v":$v}"""
-      val before = if (op == "u" || op == "d") img else "null"
-      val after = if (op == "d") "null" else img
-      s"""{"schema":${Envelope.schemaBlockJson(numFields)},"payload":{"before":$before,"after":$after,"source":{"connector":"postgresql","table":"t","ts_ms":$ts},"op":"$op","ts_ms":$ts,"transaction":null}}"""
-    }
-    val store = new SnapshotStore(tmp("st"), spark)
-    val view = new SnapshotStore(tmp("vw"), spark)
-    val stream = new CdcStream(spark, spark.emptyDataFrame, store, "id",
-      cacheDir = tmp("cache"), checkpointDir = tmp("ckpt"),
-      aggView = Some((view, "grp", "v")))
-    def viewSet() = view.read().get
-      .select(org.apache.spark.sql.functions.col("grp"),
-        org.apache.spark.sql.functions.col("cnt"),
-        org.apache.spark.sql.functions.col("sum_val").cast("double"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    def recompute() = IncrementalAgg.aggState(store.read().get, "grp", "v")
-      .select(org.apache.spark.sql.functions.col("grp"),
-        org.apache.spark.sql.functions.col("cnt"),
-        org.apache.spark.sql.functions.col("sum_val").cast("double"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-
-    stream.processBatch(Seq(
-      (nEvent("c", 1, "a", 10.5, 100), 0L), (nEvent("c", 2, "a", 2.0, 100), 1L),
-      (nEvent("c", 3, "b", 7.0, 100), 2L)).toDF("value", Changelog.SeqCol), 0)
-    assert(viewSet() == Set(("a", 2L, 12.5), ("b", 1L, 7.0)))
-    assert(viewSet() == recompute())
-
-    // update migrates a group, delete empties one — folded in O(delta)
-    stream.processBatch(Seq(
-      (nEvent("u", 2, "b", 4.0, 200), 0L), (nEvent("d", 3, "b", 7.0, 200), 1L))
-      .toDF("value", Changelog.SeqCol), 1)
-    assert(viewSet() == Set(("a", 1L, 10.5), ("b", 1L, 4.0)))
-    assert(viewSet() == recompute())
-
-    // replay of an applied batch: main store no-ops, view must too
-    stream.processBatch(Seq(
-      (nEvent("u", 1, "z", 999.0, 900), 0L)).toDF("value", Changelog.SeqCol), 1)
-    assert(viewSet() == Set(("a", 1L, 10.5), ("b", 1L, 4.0)))
-
-    // crash window: the view missed a batch (simulated by wiping it); the
-    // NEXT committed batch detects the lag and rebuilds, then folds
-    val view2 = new SnapshotStore(tmp("vw2"), spark)
-    val stream2 = new CdcStream(spark, spark.emptyDataFrame, store, "id",
-      cacheDir = tmp("cache2"), checkpointDir = tmp("ckpt2"),
-      aggView = Some((view2, "grp", "v")))
-    stream2.processBatch(Seq(
-      (nEvent("c", 4, "c", 1.25, 300), 0L)).toDF("value", Changelog.SeqCol), 5)
-    val got = view2.read().get
-      .select(org.apache.spark.sql.functions.col("grp"),
-        org.apache.spark.sql.functions.col("cnt"),
-        org.apache.spark.sql.functions.col("sum_val").cast("double"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(got == Set(("a", 1L, 10.5), ("b", 1L, 4.0), ("c", 1L, 1.25)))
-  }
-
-  test("schema drift: a new source column appears mid-stream and the snapshot grows it") {
-    val store = new SnapshotStore(tmp("st"), spark)
-    val stream = new CdcStream(spark, spark.emptyDataFrame, store, "id",
-      cacheDir = tmp("cache"), checkpointDir = tmp("ckpt"))
-    stream.processBatch(
-      Seq((event("c", 1, "a", 100), 0L)).toDF("value", Changelog.SeqCol), 0)
-    assert(store.read().get.columns.toSeq == Seq("id", "name", Merge.LastTsCol))
-
-    // batch 2: events now carry an extra `age` column (source DDL change)
-    val evolvedFields = fields :+ Envelope.FieldInfo("age", "int32")
-    val ev2 =
-      s"""{"schema":${Envelope.schemaBlockJson(evolvedFields)},"payload":{"before":null,"after":{"id":2,"name":"b","age":7},"source":{"connector":"postgresql","table":"t","ts_ms":200},"op":"c","ts_ms":200,"transaction":null}}"""
-    stream.processBatch(Seq((ev2, 0L)).toDF("value", Changelog.SeqCol), 1)
-    val snap = store.read().get
-    assert(snap.columns.contains("age"))
-    val rows = snap.select("id", "name", "age").collect()
-      .map(r => (r.getLong(0), r.getString(1), if (r.isNullAt(2)) -1 else r.getInt(2))).toSet
-    assert(rows == Set((1L, "a", -1), (2L, "b", 7))) // old row: null age
-  }
-
   test("sql audit side output records replay statements per batch") {
-    val store = new SnapshotStore(tmp("st"), spark)
+    val store = new ManifestStore(tmp("st"), spark, "id")
     val auditDir = tmp("audit")
-    val stream = new CdcStream(spark, spark.emptyDataFrame, store, "id",
+    val stream = new ManifestCdcStream(spark, spark.emptyDataFrame, store, "id",
       cacheDir = tmp("cache"), checkpointDir = tmp("ckpt"),
       sqlAuditDir = Some(auditDir), auditTable = "t")
     stream.processBatch(
@@ -192,7 +78,7 @@ class CdcStreamSpec extends SparkSpec {
   test("crash between sink and checkpoint commit: restart replays the batch " +
       "and the snapshot converges (at-least-once + idempotent merge)") {
     val inDir = tmp("in"); val ckpt = tmp("ckpt"); val cache = tmp("cache")
-    val store = new SnapshotStore(tmp("st"), spark)
+    val store = new ManifestStore(tmp("st"), spark, "id")
     // two files + maxFilesPerTrigger=1 -> two deterministic micro-batches,
     // the replayed unit being a recorded file set exactly as a Kafka replay
     // is a recorded offset range
@@ -208,7 +94,7 @@ class CdcStreamSpec extends SparkSpec {
     Files.setLastModifiedTime(f0, java.nio.file.attribute.FileTime.fromMillis(now - 60000))
     Files.setLastModifiedTime(f1, java.nio.file.attribute.FileTime.fromMillis(now))
     def run(): Unit = {
-      val s = new CdcStream(spark, CdcStream.fileSource(spark, inDir, Some(1)),
+      val s = new ManifestCdcStream(spark, CdcStream.fileSource(spark, inDir, Some(1)),
         store, "id", cacheDir = cache, checkpointDir = ckpt)
       val q = s.start()
       q.awaitTermination(60000)
@@ -233,7 +119,7 @@ class CdcStreamSpec extends SparkSpec {
     new java.io.File(latest.getParentFile, s".${latest.getName}.crc").delete()
     assert(latest.delete())
     run()
-    // the replay must be a no-op: same snapshot version, same rows
+    // the replay must be a no-op: same table version, same rows
     assert(store.current == v1)
     assert(store.read().get.select("id", "name").collect().toSet == expected)
 
@@ -243,8 +129,8 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("columnsToSave prunes the materialized table but keeps the key") {
-    val store = new SnapshotStore(tmp("st"), spark)
-    val stream = new CdcStream(spark, spark.emptyDataFrame, store, "id",
+    val store = new ManifestStore(tmp("st"), spark, "id")
+    val stream = new ManifestCdcStream(spark, spark.emptyDataFrame, store, "id",
       cacheDir = tmp("cache"), checkpointDir = tmp("ckpt"),
       columnsToSave = Some(Seq("name")))
     stream.processBatch(

@@ -27,7 +27,7 @@ class ConfigManagerSpec extends AnyFunSuite {
     assert(parsed.columnsToSave.contains(Seq("customerId", "customerFName")))
     assert(parsed.failOnDataLoss && parsed.maxFilesPerTrigger.contains(7))
     assert(parsed.outputPath == "/data/out" && parsed.databaseType == "mongodb")
-    assert(parsed.storage == "snapshot") // default engine
+    assert(parsed.storage == "manifest") // default engine
   }
 
   test("delta_config.storage selects the manifest engines") {
@@ -36,6 +36,14 @@ class ConfigManagerSpec extends AnyFunSuite {
       .storage == "manifest")
     assert(cm.parse("""{"delta_config": {"storage": "manifest_mor"}}""")
       .storage == "manifest_mor")
+    Seq("manifest", "manifest_mor").foreach(st =>
+      assert(graft.CdcMain.configError(CdcConfig.Default.copy(storage = st)).isEmpty))
+    // anything else is rejected at startup and on hot reload, naming the
+    // two engines — a typo, and the removed whole-table engine
+    Seq("manifst", "snapshot").foreach { st =>
+      val err = graft.CdcMain.configError(CdcConfig.Default.copy(storage = st))
+      assert(err.exists(e => e.contains("manifest") && e.contains("manifest_mor")), err)
+    }
   }
 
   test("processing_config.dedup parses column, bands, ttl") {

@@ -115,7 +115,7 @@ class ManifestCdcStreamSpec extends SparkSpec {
     }
     val ms = MemoryStream[String]
     val st = new ManifestStore(tmp("mcs"), spark, "id")
-    val vs = new SnapshotStore(tmp("view"), spark)
+    val vs = new ManifestStore(tmp("view"), spark, "grp")
     val stream = new ManifestCdcStream(spark, ms.toDF(), st, "id",
       cacheDir = tmp("cache"), checkpointDir = tmp("ckpt"),
       trigger = Trigger.ProcessingTime(0),
@@ -208,7 +208,7 @@ class ManifestCdcStreamSpec extends SparkSpec {
     }
     val ms = MemoryStream[String]
     val st = new ManifestStore(tmp("mcs"), spark, "id")
-    val vs = new SnapshotStore(tmp("view"), spark)
+    val vs = new ManifestStore(tmp("view"), spark, "grp")
     val stream = new ManifestCdcStream(spark, ms.toDF(), st, "id",
       cacheDir = tmp("cache"), checkpointDir = tmp("ckpt"),
       trigger = Trigger.ProcessingTime(0),
