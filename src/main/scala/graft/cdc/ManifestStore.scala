@@ -215,7 +215,7 @@ object ManifestStore {
     * need EXACT values (string MIN/MAX aggregate pushdown) refuse via
     * [[aggFromStats]]' gate. One-way: the catalog refuses UNSET, because
     * files already carrying widened bounds would then be trusted as
-    * exact. Partition columns are exempt ([[writeDataFiles]]): their
+    * exact. Partition columns are exempt ([[adoptStagedFiles]]): their
     * per-file min==max purity is load-bearing for overwrite
     * classification and grouped pushdown, and a pure file stores one
     * value either way. Validated by [[validateTableProps]].
@@ -279,20 +279,21 @@ object ManifestStore {
     s // un-incrementable prefix — keep the full value (sound)
   }
 
-  /** A data file STAGED by a DSv2 clustered task writer, carrying the
+  /** A data file STAGED by a clustered task writer, carrying the
     * stats the writer folded while writing: raw EXTERNAL JVM values
     * (String/Long/java.sql.Timestamp/...), min/max per statted column with
     * its null count, plus the file's partition cell. [[ManifestStore
     * .adoptStagedFiles]] turns these into manifest [[FileEntry]]s by
     * serializing the values through the store's exact stat casts and
-    * RENAMING the bytes into `files/` — the 1x-write commit path: the
+    * RENAMING the bytes into `files/` — every write path's commit: the
     * task output IS the table file, nothing is re-read or re-written.
     */
   final case class StagedColStat(col: String, min: Any, max: Any,
                                  nulls: Long)
   /** `bloomPath`: the task-side STAGED Bloom sidecar (written next to the
     * staged data file); adoption renames it into `files/` beside the data.
-    * `colBloomPaths`: same, per SECONDARY bloom column (logical name).
+    * `colBloomPaths`: same, per SECONDARY bloom column (the name the
+    * staged file carries it under).
     */
   /** `bucket`: the file's hash bucket on a bucketed table — computed by
     * the TASK WRITER itself (pmod(murmur3(key), N) per row, rolling to a
@@ -308,10 +309,10 @@ object ManifestStore {
                               bucket: Option[Int] = None,
                               kmvPath: Option[String] = None)
 
-  /** Process-lifetime count of staged files ADOPTED by rename (the
-    * 1x-write path) — an observable for specs and bench forensics: a
-    * commit that promoted moved this counter, one that fell back to the
-    * rewriting writer did not.
+  /** Process-lifetime count of staged files ADOPTED by rename — an
+    * observable for specs and bench forensics: every write that lands
+    * data files (internal commits and rewrites, promoted DSv2 writes)
+    * moves it.
     */
   val adoptedFiles = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -1504,20 +1505,15 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * a real table uses. Nested/binary columns fail FAST here instead of
     * silently mis-pruning (and duplicating keys) at merge time. `colName`
     * is the offending column — the key, or a `statsCols` zone-map column.
+    * The type list is [[graft.spark.ClusteredStaging.statSupported]], the
+    * task writer's own, so every admitted column folds while writing.
     */
   private def requireStatKeyType(colName: String,
-                                 dt: org.apache.spark.sql.types.DataType): Unit = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType | StringType |
-           DateType | TimestampType | TimestampNTZType | BooleanType |
-           FloatType | DoubleType => ()
-      case _: DecimalType => ()
-      case other => throw new IllegalArgumentException(
-        s"ManifestStore stats column '$colName' has type ${other.sql}, " +
+                                 dt: org.apache.spark.sql.types.DataType): Unit =
+    if (!graft.spark.ClusteredStaging.statSupported(dt))
+      throw new IllegalArgumentException(
+        s"ManifestStore stats column '$colName' has type ${dt.sql}, " +
           "which cannot carry per-file min/max stats; use an atomic type")
-    }
-  }
 
   /** Serialize a typed stat value to its manifest string. TimestampType
     * goes through EPOCH MICROS, not the string cast: `cast(ts as string)`
@@ -3191,26 +3187,12 @@ final class ManifestStore(val root: String, spark: SparkSession,
                 else readFiles(m, m.files))
   }
 
-  /** Cluster `df` by key and write it as data files with per-file stats.
-    * Each output file owns a tight key range (range partition + sort), so
-    * later merges can prune on [min,max]. Returns the new entries; the
-    * caller links them into a manifest.
-    */
-  /** `clusterBy`: an alternative clustering column (by NAME — it is
-    * dropped before the write, so helper columns like a Z-value never
-    * reach the files). Default: range-cluster on the key.
-    */
-  /** `colMap`: the committing version's column mapping — the incoming
-    * frame carries LOGICAL names (every caller works logically); data
-    * files are written under PHYSICAL names at the very last step, and
-    * per-file stats are keyed physically (stable across renames).
-    */
   /** Drive [[graft.spark.GraftClusteredTaskWriter]] over `input`'s
-    * partitions as one internal Spark job — the fused 1x write+stats pass
-    * of [[writeDataFiles]]. Each task writes its partition's rows
-    * (rolling to a new file at every cell/bucket boundary) while folding
-    * the per-file min/max/null/Bloom/KMV state, and returns its staged
-    * files; a failed task aborts its own staged output before rethrowing.
+    * partitions as one internal Spark job — the write half of
+    * [[writeDataFiles]]. Each task writes its partition's rows (rolling to
+    * a new file at every cell/bucket boundary) while folding the per-file
+    * min/max/null/Bloom/KMV state, and returns its staged files; a failed
+    * task aborts its own staged output before rethrowing.
     */
   private def runClusteredWrite(input: DataFrame,
                                 spec: graft.spark.ClusterWriteSpec,
@@ -3235,6 +3217,27 @@ final class ManifestStore(val root: String, spark: SparkSession,
       }).toSeq.flatten
   }
 
+  /** Cluster `df` by key and write it as data files with per-file stats.
+    * Each output file owns a tight key range (range partition + sort), so
+    * later merges can prune on [min,max]. Returns the new entries; the
+    * caller links them into a manifest.
+    *
+    * ONE pass over the rows, for every caller (commit, merge rewrites, MoR
+    * upserts, optimize, recluster): [[runClusteredWrite]] folds the stats,
+    * Blooms and KMV sketches WHILE writing, and [[adoptStagedFiles]]
+    * serializes them through the exact stat casts and renames the files
+    * in — the staged output is never re-read.
+    *
+    * `clusterBy`: an alternative clustering column (by NAME — it is
+    * dropped before the write, so helper columns like a Z-value never
+    * reach the files). Default: range-cluster on the key.
+    *
+    * `colMap`: the committing version's column mapping — the incoming
+    * frame carries LOGICAL names (every caller works logically); it is
+    * renamed to PHYSICAL names just before the task write, so data files,
+    * per-file stats and Bloom/KMV sidecars are all keyed physically
+    * (stable across renames).
+    */
   private def writeDataFiles(df: DataFrame, nFiles: Int,
                              statsCols: Seq[String] = Nil,
                              clusterBy: Option[String] = None,
@@ -3256,22 +3259,21 @@ final class ManifestStore(val root: String, spark: SparkSession,
     // a drift-evolved frame may not carry every tracked column yet.
     // Stats columns may be DOTTED STRUCT-LEAF paths at any depth
     // ("meta.lang" — the multimodal/text tables' shape): the leaf
-    // resolves through [[ManifestStore.leafType]] and every consumer
-    // below selects it via [[ManifestStore.leafCol]].
+    // resolves through [[ManifestStore.leafType]], and the task writer
+    // walks the same path in each row.
     val sCols = statsCols.filter(c =>
       ManifestStore.leafType(df.schema, c).isDefined)
-    def statDt(c: String): org.apache.spark.sql.types.DataType =
-      ManifestStore.leafType(df.schema, c).get
-    sCols.foreach(c => requireStatKeyType(c, statDt(c)))
+    sCols.foreach(c =>
+      requireStatKeyType(c, ManifestStore.leafType(df.schema, c).get))
     val stage = Paths.get(root, s"_stage_${java.util.UUID.randomUUID()}")
     // PARTITIONED tables (table property `partitioncol`): files must be
     // partition-PURE — each data file holds exactly one partition value —
     // so dynamic partition overwrite is a file-granular metadata swap and
     // the per-file min=max stats prune partition predicates exactly.
-    // Range-partition by (partition value, key) for balance, then let the
-    // writer's partitionBy split any task straddling a boundary into pure
-    // files; the DUPLICATED `_pval` column is stripped into directory
-    // names while the real column stays in the data (Iceberg's layout).
+    // Range-partition by (partition values..., key) for balance; the task
+    // writer rolls to a new file whenever the cell changes, so a task
+    // straddling a boundary still writes pure files (Iceberg's layout:
+    // the partition columns stay in the data).
     val tableProps = ManifestStore.readTableProps(root)
     // CHECK constraints (table properties `check.<name>` = boolean SQL
     // expression over LOGICAL column names): enforced INLINE in the write
@@ -3301,23 +3303,6 @@ final class ManifestStore(val root: String, spark: SparkSession,
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
       .filter(_ => clusterBy.isEmpty)
       .filter(df.columns.contains)
-    val partCol: Option[String] = Some(partCols).filter(_.nonEmpty)
-      .map(_ => partCols.mkString(","))
-    // STRING zone-map stats widen to `stats.truncate` UTF-8 bytes
-    // ([[ManifestStore.statsTruncate]]); partition columns stay exact on
-    // EVERY write path (including z-order rewrites, where partCols above
-    // is emptied by clusterBy) — their min==max purity classifies files
-    // for INSERT OVERWRITE and grouped pushdown
-    val statTrunc: Option[Int] = ManifestStore.statsTruncate(tableProps)
-    val truncExempt: Set[String] = tableProps.get("partitioncol").toSeq
-      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty)).toSet
-    def truncStat(c: String, mn: String, mx: String): (String, String) =
-      statTrunc match {
-        case Some(n) if mn != null && !truncExempt.contains(c) &&
-            statDt(c) == org.apache.spark.sql.types.StringType =>
-          (ManifestStore.truncMin(mn, n), ManifestStore.truncMax(mx, n))
-        case _ => (mn, mx)
-      }
     // BUCKETED tables (table property `buckets=N`): rows hash-bucket by
     // pmod(murmur3(key), N) and files are bucket-PURE, so the DSv2 scan
     // reports KeyGroupedPartitioning and keyed self-joins / key-grouped
@@ -3330,8 +3315,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
     // survives the table's whole lifecycle.
     val bucketsN: Option[Int] = tableProps.get("buckets")
       .flatMap(_.toIntOption).filter(_ > 0)
-      .filter(_ => clusterBy.isEmpty && partCol.isEmpty)
-    val bloomCfg: Option[(Int, Int)] = ManifestStore.bloomParams(tableProps)
+      .filter(_ => clusterBy.isEmpty && partCols.isEmpty)
     // secondary-column blooms: only zone-map columns can ever be probed
     // (the pruner consults stats-tracked columns), so an unlisted column
     // is a misconfiguration, not a silent no-op. A drift-evolved frame
@@ -3342,268 +3326,60 @@ final class ManifestStore(val root: String, spark: SparkSession,
     // decides (a verbatim top-level field wins), exactly like the
     // zone-map stats columns above. Unresolvable entries skip for THIS
     // write (drift-evolution semantics, same as sCols).
-    val bloomResolved: Seq[String] = bloomColsRaw.filter(c =>
+    val bloomCols: Seq[String] = bloomColsRaw.filter(c =>
       ManifestStore.leafType(df.schema, c).isDefined)
-    bloomResolved.foreach { c =>
+    bloomCols.foreach { c =>
       require(c != keyField, s"bloomfiltercols lists the key column '$c' " +
         "— the key always gets a Bloom via the bloomfilter property")
       require(sCols.contains(c), s"bloomfiltercols column '$c' is not a " +
         s"zone-map column (statsCols = ${sCols.mkString(",")}) — the " +
         "pruner could never probe it; add it to statsCols first")
     }
-    val bloomCols: Seq[String] = bloomResolved
-    // ---- fused 1x write+stats pass (r18 verdict item 2 / guide §6) ----
-    // The rewriting path below stages the clustered frame as anonymous
-    // parquet and then RE-READS the entire staged output to fold per-file
-    // stats/Blooms/KMV — 2x read I/O on every commit, merge rewrite, MoR
-    // upsert and optimize. The DSv2 insert path has had the 1x machinery
-    // since r11/r12: [[graft.spark.GraftClusteredTaskWriter]] folds the
-    // identical stats WHILE writing and [[adoptStagedFiles]] re-serializes
-    // them through the exact stat casts and renames the files in. This
-    // branch drives that same task writer over the same clustered
-    // partitions as one internal job, so every writeDataFiles caller pays
-    // ONE pass over the staged rows. Fallbacks mirror the DSv2
-    // promotion's list, minus CHECK constraints (already inline filter
-    // predicates on dfG here) and minus missing partition columns
-    // (partCols is pre-filtered above): column-mapped tables (adoption
-    // requires logical==physical names) and key/partition/stat leaf types
-    // the task-side fold does not cover (TimestampNTZ); plus tables
-    // partitioned BY the key, where the clustering below orders by key
-    // only and cell-purity would rest on the engine's dynamic-partition
-    // sort rather than the roll-on-change writer.
-    val fusedEligible = colMap.isEmpty &&
-      spark.conf.get("spark.graft.write.fused", "true").toBoolean &&
-      !(partCol.isDefined && partCols.contains(keyField)) &&
-      (keyField +: (partCols ++ sCols)).distinct.forall(c =>
-        ManifestStore.leafType(df.schema, c)
-          .exists(graft.spark.ClusteredStaging.statSupported))
-    if (fusedEligible) {
-      val spec = graft.spark.ClusterWriteSpec(
-        keyField,
-        partCols = if (clusterBy.isDefined) Nil else partCols,
-        statsCols = sCols.filterNot(_ == keyField),
-        nFiles = math.max(1, nFiles),
-        bloom = bloomCfg,
-        bloomCols = bloomCols.map(_ -> bloomColCfg),
-        buckets = bucketsN)
-      // the same clustering the rewriting path imposes, WITHOUT the
-      // `_bucket`/`_pval` helper columns (the task writer computes cells
-      // and buckets per row and rolls files on change)
-      val fusedIn = (clusterBy, partCol, bucketsN) match {
-        case (Some(zc), _, _) =>
-          dfG.repartitionByRange(math.max(1, nFiles), col(zc))
-            .sortWithinPartitions(zc).drop(zc)
-        case (None, Some(_), _) => // partCols cannot contain the key here
-          dfG.repartitionByRange(math.max(1, nFiles),
-            partCols.map(col) :+ col(keyField): _*)
-            .sortWithinPartitions(partCols :+ keyField map col: _*)
-        case (None, None, Some(nB)) =>
-          // hash-partition by key into exactly nB partitions — the same
-          // pmod(murmur3(key), nB) placement the explicit `_bucket`
-          // column produced (and the DSv2 CLUSTERED distribution asks
-          // for), so each task receives one whole bucket; the writer
-          // still recomputes every row's bucket and rolls on change, so
-          // purity never rests on the partitioner
-          dfG.repartition(nB, col(keyField)).sortWithinPartitions(keyField)
-        case _ =>
-          dfG.repartitionByRange(math.max(1, nFiles), col(keyField))
-            .sortWithinPartitions(keyField)
-      }
-      val staged = runClusteredWrite(fusedIn, spec, stage.toString)
-      try return adoptStagedFiles(staged, df.schema, statsCols, Map.empty)
-      finally deleteRecursively(stage)
-    }
-    val clustered = (clusterBy, partCol, bucketsN) match {
+    val clustered = (clusterBy, partCols, bucketsN) match {
       case (Some(zc), _, _) =>
         // the projection dropping zc is narrow: partitioning and order survive
         dfG.repartitionByRange(math.max(1, nFiles), col(zc))
           .sortWithinPartitions(zc).drop(zc)
-      case (None, Some(_), _) if !partCols.contains(keyField) =>
-        dfG.repartitionByRange(math.max(1, nFiles),
-          partCols.map(col) :+ col(keyField): _*)
-          .sortWithinPartitions(partCols :+ keyField map col: _*)
-      case (None, None, Some(n)) =>
-        // one task per bucket (collisions split at the writer), rows
-        // key-sorted within the bucket so row-group stats stay tight
-        dfG.withColumn("_bucket", pmod(hash(col(keyField)), lit(n)))
-          .repartition(n, col("_bucket"))
-          .sortWithinPartitions("_bucket", keyField)
+      case (None, pcs, _) if pcs.nonEmpty =>
+        // a table partitioned BY the key clusters on it once; the writer's
+        // roll-on-change then gives one pure file per key value
+        val cc = (pcs :+ keyField).distinct.map(col)
+        dfG.repartitionByRange(math.max(1, nFiles), cc: _*)
+          .sortWithinPartitions(cc: _*)
+      case (None, _, Some(nB)) =>
+        // hash-partition by key into exactly nB partitions — the
+        // pmod(murmur3(key), nB) placement the DSv2 CLUSTERED distribution
+        // asks for too, so each task receives one whole bucket; the writer
+        // still recomputes every row's bucket and rolls on change, so
+        // purity never rests on the partitioner
+        dfG.repartition(nB, col(keyField)).sortWithinPartitions(keyField)
       case _ =>
         dfG.repartitionByRange(math.max(1, nFiles), col(keyField))
           .sortWithinPartitions(keyField)
     }
-    (partCol, bucketsN) match {
-      case (Some(_), _) =>
-        // one duplicated `_pval<i>` dir column per partition column: the
-        // writer splits any task straddling a cell boundary into
-        // cell-pure files, while the real columns stay in the data
-        val withP = partCols.zipWithIndex.foldLeft(clustered) {
-          case (d, (pc, i)) => d.withColumn(s"_pval$i", col(pc))
-        }
-        physicalize(withP).write
-          .partitionBy(partCols.indices.map(i => s"_pval$i"): _*)
-          .parquet(stage.toString)
-      case (None, Some(_)) => physicalize(clustered)
-        .write.partitionBy("_bucket").parquet(stage.toString)
-      case _ => physicalize(clustered).write.parquet(stage.toString)
-    }
-    // an all-empty input writes no part files at all (empty partitions
-    // produce nothing) — there is nothing to stat or move. Walk
-    // recursively: a partitioned stage nests parts under `_pval=` dirs.
-    val wrotePart = {
-      val s = Files.walk(stage)
-      try s.anyMatch(p => p.getFileName.toString.endsWith(".parquet"))
-      finally s.close()
-    }
-    // (sidecar/physical name, logical path) of every NDV-sketched column:
-    // the key plus each zone-map column (struct leaves included) the KMV
-    // hasher covers
-    val kmvSidecarCols: Seq[(String, String)] =
-      (keyField +: sCols).distinct
-        .collect { case c if graft.functions.KmvSketch.supported(
-            ManifestStore.leafType(df.schema, c).get) => physName(c) -> c }
-    // per-file stats in ONE pass over the staged output; input_file_name
-    // ties each row to the physical file the writer placed it in. min/max
-    // run in the key's NATIVE type (native ordering), then serialize via
-    // the exact string cast.
-    val stats =
-      if (!wrotePart) Array.empty[org.apache.spark.sql.Row]
-      else {
-        val keyDt = df.schema(keyField).dataType
-        // three stats per zone-map column: min, max (both ignore nulls —
-        // SQL semantics) and the NULL count, which stats-answered
-        // aggregates and exact filtered counts need (a min=max "pure"
-        // file can still hide null rows)
-        // staged (physical) selection: top-level names backticked, dotted
-        // struct leaves traverse — decided against the LOGICAL frame (the
-        // physicalized stage parallels its shape)
-        def statCol(c: String): Column =
-          if (df.columns.contains(c)) col(s"`${physName(c)}`")
-          else col(physName(c))
-        val extra = sCols.flatMap { c =>
-          val dt = statDt(c)
-          Seq(statSerialize(min(statCol(c)), dt).as(s"_min_$c"),
-            statSerialize(max(statCol(c)), dt).as(s"_max_$c"),
-            sum(when(statCol(c).isNull, 1L).otherwise(0L))
-              .as(s"_nulls_$c"))
-        }
-        // bucketed stages carry `_bucket` as a partition directory column;
-        // first() is exact because files are bucket-pure by construction
-        val bucketStat = bucketsN.toSeq.map(_ =>
-          first(col("_bucket")).as("_bkt"))
-        // per-file key Bloom filter (table property `bloomfilter`): the
-        // native bloom_build aggregate over the key's MANIFEST string
-        // serialization, folded in the same single stats pass — probes
-        // (prunedFiles / hitFileNames) serialize through the identical
-        // cast, which is what makes no-false-negatives hold
-        def bloomAgg(input: Column, dt: org.apache.spark.sql.types.DataType,
-                     bits: Int, hashes: Int, as: String): Column = {
-          import org.apache.spark.sql.catalyst.expressions.Literal
-          org.apache.spark.sql.graft.ParquetWriteBridge.column(
-            graft.functions.BloomBuild(
-              org.apache.spark.sql.graft.ParquetWriteBridge.expression(
-                statSerialize(input, dt)),
-              Literal(bits), Literal(hashes)).toAggregateExpression())
-            .as(as)
-        }
-        val bloomStat = bloomCfg.toSeq.map { case (bits, hashes) =>
-          bloomAgg(col(keyField), keyDt, bits, hashes, "_bloom")
-        }
-        // secondary-column blooms fold in the SAME single stats pass —
-        // struct leaves select through the dotted physical path like the
-        // zone-map stats (statCol) and hash their LEAF type's stat string
-        val bloomColStat = bloomCols.map { c =>
-          val (bits, hashes) = bloomColCfg
-          bloomAgg(statCol(c), statDt(c), bits, hashes, s"_bloomc_$c")
-        }
-        // per-file KMV NDV sketches (key + every zone-map column the
-        // sketch covers) fold in the same pass too — O(k) state per
-        // column; the blobs land in ONE .kmv sidecar per file, keyed by
-        // PHYSICAL column name like the zone-map stats
-        def kmvAgg(input: Column, as: String): Column = {
-          import org.apache.spark.sql.catalyst.expressions.Literal
-          org.apache.spark.sql.graft.ParquetWriteBridge.column(
-            graft.functions.KmvBuild(
-              org.apache.spark.sql.graft.ParquetWriteBridge.expression(input),
-              Literal(graft.functions.KmvSketch.DefaultK))
-              .toAggregateExpression()).as(as)
-        }
-        val kmvStat = kmvSidecarCols.zipWithIndex.map { case ((_, c), i) =>
-          kmvAgg(statCol(c), s"_kmv_$i") }
-        spark.read.parquet(stage.toString)
-          .groupBy(input_file_name().as("_f"))
-          .agg(statSerialize(min(col(keyField)), keyDt).as("_min"),
-            (statSerialize(max(col(keyField)), keyDt).as("_max") +:
-              count(lit(1)).as("_rows") +:
-              (extra ++ bucketStat ++ bloomStat ++ bloomColStat ++ kmvStat)): _*)
-          .collect() // O(#files) — bounded by the clustering, not the data
-      }
-    Files.createDirectories(Paths.get(root, "files"))
-    val entries = stats.toSeq.map { r =>
-      val src = Paths.get(new java.net.URI(r.getString(0)))
-      val name = s"${java.util.UUID.randomUUID()}.parquet"
-      val dest = Paths.get(root, "files", name)
-      Files.move(src, dest, StandardCopyOption.ATOMIC_MOVE)
-      // stats keys are PHYSICAL names: stable across renames, so a
-      // pre-rename file's zone map keeps answering post-rename queries
-      val cols = sCols.zipWithIndex.map { case (c, i) =>
-        physName(c) -> truncStat(c,
-          r.getString(4 + 3 * i), r.getString(5 + 3 * i))
-      }.toMap
-      val nulls = sCols.zipWithIndex.map { case (c, i) =>
-        physName(c) -> r.getLong(6 + 3 * i)
-      }.toMap
-      // physical size goes into the manifest so a scan planner never has
-      // to stat data files — at 100k files that listing IS the planning cost
-      val bkt = bucketsN.map(_ => r.getInt(4 + 3 * sCols.size))
-      // Bloom blobs land as SIDECAR binaries next to the data file
-      // (like the DV sidecars): the manifest carries only names, so a
-      // production-sized blob never bloats the commit log. Driver-side
-      // write is bounded by THIS COMMIT's file count, not the table's.
-      val bloomBase = 4 + 3 * sCols.size + bucketsN.size
-      val bloomName = bloomCfg.map { _ =>
-        val bn = s"$name.bloom"
-        Files.write(Paths.get(root, "files", bn),
-          r.getAs[Array[Byte]](bloomBase))
-        bn
-      }
-      val colBloomNames = bloomCols.zipWithIndex.map { case (c, i) =>
-        val bn = s"$name.${physName(c)}.bloom"
-        Files.write(Paths.get(root, "files", bn),
-          r.getAs[Array[Byte]](bloomBase + bloomCfg.size + i))
-        physName(c) -> bn
-      }.toMap
-      // the KMV NDV sketches land in ONE .kmv sidecar per data file
-      val kmvBase = bloomBase + bloomCfg.size + bloomCols.size
-      val kmvName =
-        if (kmvSidecarCols.isEmpty) None
-        else {
-          val kn = s"$name.kmv"
-          Files.write(Paths.get(root, "files", kn),
-            graft.functions.KmvSketch.encodeMulti(
-              kmvSidecarCols.zipWithIndex.map { case ((pn, _), i) =>
-                pn -> r.getAs[Array[Byte]](kmvBase + i) }))
-          Some(kn)
-        }
-      FileEntry(name, r.getString(1), r.getString(2), r.getLong(3),
-        cols = cols, bytes = Files.size(dest), colNulls = nulls,
-        bucket = bkt, bloom = bloomName, colBlooms = colBloomNames,
-        kmv = kmvName)
-    }
-    deleteRecursively(stage)
-    entries
+    val spec = graft.spark.ClusterWriteSpec(
+      keyField,
+      partCols = partCols.map(physName),
+      statsCols = sCols.filterNot(_ == keyField).map(physName),
+      nFiles = math.max(1, nFiles),
+      bloom = ManifestStore.bloomParams(tableProps),
+      bloomCols = bloomCols.map(c => physName(c) -> bloomColCfg),
+      buckets = bucketsN)
+    val physical = physicalize(clustered)
+    val staged = runClusteredWrite(physical, spec, stage.toString)
+    try adoptStagedFiles(staged, physical.schema, spec.statsCols, colMap)
+    finally deleteRecursively(stage)
   }
 
-  /** Adopt DSv2-staged, stats-carrying data files as manifest entries —
-    * the 1x-write sibling of [[writeDataFiles]]: the task writers already
-    * clustered the rows, split files cell-pure and folded min/max/null
-    * stats while writing, so the commit's only data work is RENAMING each
-    * file into `files/`. The raw stat values serialize through the exact
-    * [[statSerialize]] casts in ONE O(#files) local job (stat strings
-    * must be bit-identical to the clustering writer's, or pruning
-    * would diverge between promoted and rewritten files). Refused on
-    * column-mapped tables (staged files carry logical names; callers
-    * fall back to the rewriting path).
+  /** Adopt task-staged, stats-carrying data files as manifest entries:
+    * the task writers already clustered the rows, split files cell-pure
+    * and folded min/max/null stats while writing, so the commit's only
+    * data work is RENAMING each file into `files/`. The raw stat values
+    * serialize through the exact [[statSerialize]] casts in ONE O(#files)
+    * local job. `schema` and `statsCols` name columns as the staged files
+    * carry them — PHYSICAL names under `colMap` ([[writeDataFiles]]
+    * renames before its task write); `colMap` only maps the logical
+    * `partitioncol` list onto those names for the truncation exemption.
     */
   private[graft] def adoptStagedFiles(staged: Seq[ManifestStore.StagedFile],
                                       schema: StructType,
@@ -3611,24 +3387,25 @@ final class ManifestStore(val root: String, spark: SparkSession,
                                       colMap: Map[String, String])
       : Seq[FileEntry] = {
     import org.apache.spark.sql.types.StructField
-    require(colMap.isEmpty,
-      "staged-file adoption needs identity column mapping (staged files " +
-        "carry logical column names) — use the rewriting commit path")
     if (staged.isEmpty) return Nil
     val keyDt = schema(keyField).dataType
     // stats columns may be dotted struct-LEAF paths — resolve their types
-    // through [[ManifestStore.leafType]] exactly like the rewriting writer
+    // through [[ManifestStore.leafType]], the task writer's resolution
     val sCols = statsCols.filter(c => c != keyField &&
       ManifestStore.leafType(schema, c).isDefined)
     def adoptDt(c: String): org.apache.spark.sql.types.DataType =
       ManifestStore.leafType(schema, c).get
-    // the SAME `stats.truncate` widening as the clustering writer — stat
-    // strings must stay identical between promoted and rewritten files,
-    // and the partition-column exemption must match too
+    // STRING zone-map stats widen to `stats.truncate` UTF-8 bytes
+    // ([[ManifestStore.statsTruncate]]); partition columns stay exact on
+    // EVERY write (z-order rewrites included, which cluster on a Z-value
+    // instead of the cells) — their min==max purity classifies files for
+    // INSERT OVERWRITE and grouped pushdown. The exemption is decided on
+    // the LOGICAL `partitioncol` names, mapped to physical ones here.
     val adoptProps = ManifestStore.readTableProps(root)
     val statTrunc = ManifestStore.statsTruncate(adoptProps)
     val truncExempt: Set[String] = adoptProps.get("partitioncol").toSeq
-      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty)).toSet
+      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
+      .map(c => colMap.getOrElse(c, c)).toSet
     def truncStat(c: String, mn: String, mx: String): (String, String) =
       statTrunc match {
         case Some(n) if mn != null && !truncExempt.contains(c) &&
@@ -3637,7 +3414,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
         case _ => (mn, mx)
       }
     // one row per staged file; columns typed as the REAL column types so
-    // statSerialize applies the same casts as the clustering writer
+    // statSerialize applies the column's own stat cast
     val fields = Seq(
       StructField("_kmin", keyDt, nullable = true),
       StructField("_kmax", keyDt, nullable = true)) ++
@@ -3682,7 +3459,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
         bn
       }
       val colBloomNames = f.colBloomPaths.map { case (c, bp) =>
-        val bn = s"$name.$c.bloom" // identity colMap: logical == physical
+        val bn = s"$name.$c.bloom" // c is the physical name
         Files.move(Paths.get(bp), Paths.get(root, "files", bn),
           StandardCopyOption.ATOMIC_MOVE)
         c -> bn
@@ -3698,6 +3475,20 @@ final class ManifestStore(val root: String, spark: SparkSession,
         bloom = bloomName, colBlooms = colBloomNames, bucket = f.bucket,
         kmv = kmvName)
     }
+  }
+
+  /** [[adoptStagedFiles]] for DSv2 task output, whose files carry the
+    * LOGICAL column names the query wrote: refused on column-mapped
+    * tables (the promotion plans stage-and-commit there; this catches a
+    * rename that landed between planning and commit).
+    */
+  private def adoptPromoted(staged: Seq[ManifestStore.StagedFile],
+                            schema: StructType, statsCols: Seq[String],
+                            colMap: Map[String, String]): Seq[FileEntry] = {
+    require(colMap.isEmpty,
+      "DSv2-staged files carry logical column names — a column-mapped " +
+        "table takes the stage-and-commit path")
+    adoptStagedFiles(staged, schema, statsCols, colMap)
   }
 
   private def fileEntryNode(f: FileEntry): com.fasterxml.jackson.databind.node.ObjectNode = {
@@ -3865,7 +3656,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
       return false
     }
     Files.createDirectories(Paths.get(root))
-    val entries = adoptStagedFiles(staged, schema, statsCols,
+    val entries = adoptPromoted(staged, schema, statsCols,
       colMap = cur.flatMap(c => manifest(c._1)).map(_.colMap)
         .getOrElse(Map.empty))
     writeManifestAndSwap(cur.map(_._1 + 1).getOrElse(0L), batchId, streamId,
@@ -4770,7 +4561,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
         case Some(df) =>
           writeDataFiles(df, nFiles, m.statsCols, colMap = m.colMap)
         case None =>
-          adoptStagedFiles(staged, schema, m.statsCols, m.colMap)
+          adoptPromoted(staged, schema, m.statsCols, m.colMap)
       }
       val cdc = if (!cdfEnabled) None else {
         val deletes = (if (candidates.isEmpty)

@@ -2,11 +2,7 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.BinaryLike
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,19 +11,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * (Bar-Yossef et al.): keep the k smallest distinct 64-bit hashes of a
   * column's values; the k-th smallest, read as a fraction of the hash
   * space, estimates NDV as (k-1)/frac. Why KMV and not HLL here: KMV
-  * sketches UNION exactly (merge the value sets, re-truncate to k), the
-  * per-file state is O(k) longs regardless of file size, and the same
-  * tiny implementation runs identically inside a Catalyst aggregate (the
-  * stats pass) and a DSv2 task writer (the 1x-write promotion fold) — the
-  * dual-path discipline the Bloom sidecars established. Error is
+  * sketches UNION exactly (merge the value sets, re-truncate to k), and
+  * the per-file state is O(k) longs regardless of file size, so the
+  * clustered task writer folds one per column while it writes. Error is
   * ~1/sqrt(k) (k=128 -> ~9%), which is exactly what cost-based join
   * sizing needs: the order of magnitude, never the exact count.
   *
   * Hashing runs over the column's CATALYST-INTERNAL value via one shared
   * [[KmvSketch.hasherFor]] per type (XXH64 of the long bits for numerics
-  * — no per-row string render on the promoted-write hot path; UTF-8
-  * bytes for strings), so both build paths hash identical bits for
-  * identical values and sketches from the two writers union soundly.
+  * — no per-row string render on the write hot path; UTF-8
+  * bytes for strings), so identical values hash to identical bits in
+  * every file and per-file sketches union soundly.
   */
 object KmvSketch {
   /** k = 128: 1 KiB of longs per column per file, ~9% standard error. */
@@ -35,8 +29,8 @@ object KmvSketch {
   private val Seed = 0x6b6d7631L // "kmv1"
   private val TwoTo64 = 1.8446744073709552e19
 
-  /** Hash a column's catalyst-internal values (the forms BOTH build
-    * paths hold: `Expression.eval` and `InternalRow.get`), or null for a
+  /** Hash a column's catalyst-internal values (the form
+    * `InternalRow.get` yields in the task writer), or null for a
     * type the sketch doesn't cover (complex/binary — callers skip the
     * column). -0.0 normalizes to 0.0 so the two float encodings of zero
     * count once, matching SQL DISTINCT.
@@ -203,72 +197,4 @@ object KmvSketch {
     val decoded = blobs.map(decode)
     (estimateNdv(decoded.map(d => (d._1, d._3))), decoded.map(_._2).sum)
   }
-
-}
-
-/** KMV build as a native Catalyst aggregate for the per-file stats pass:
-  * input is the RAW column (any [[KmvSketch.supported]] atomic type —
-  * hashed via the shared [[KmvSketch.hasherFor]]), state is O(k) longs,
-  * merge is set union re-truncated to k, output the single-column blob.
-  * Partial aggregation ships O(k) longs per partition — never the values.
-  */
-case class KmvBuild(
-    left: Expression, right: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KmvSketch.State] with BinaryLike[Expression] {
-
-  private lazy val k: Int = right.eval().asInstanceOf[Number].intValue
-  @transient private lazy val hasher: Any => Long =
-    KmvSketch.hasherFor(left.dataType)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (!KmvSketch.supported(left.dataType))
-      TypeCheckResult.TypeCheckFailure(
-        s"kmv_build does not support ${left.dataType.catalogString}")
-    else if (!right.foldable || right.dataType != IntegerType ||
-      right.eval() == null || right.eval().asInstanceOf[Number].intValue < 8 ||
-      right.eval().asInstanceOf[Number].intValue > 65536)
-      TypeCheckResult.TypeCheckFailure(
-        "kmv_build k must be an int literal in [8, 65536]")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): KmvSketch.State =
-    new KmvSketch.State(k)
-
-  override def update(buf: KmvSketch.State, input: InternalRow): KmvSketch.State = {
-    val v = left.eval(input)
-    if (v != null) buf.add(hasher(v)) else buf.nulls += 1
-    buf
-  }
-
-  override def merge(buf: KmvSketch.State, other: KmvSketch.State): KmvSketch.State = {
-    buf.mergeFrom(other.toSortedArray)
-    buf.nulls += other.nulls
-    buf
-  }
-
-  override def eval(buf: KmvSketch.State): Any =
-    KmvSketch.encode(k, buf.nulls, buf.toSortedArray)
-
-  override def serialize(buf: KmvSketch.State): Array[Byte] =
-    KmvSketch.encode(k, buf.nulls, buf.toSortedArray)
-  override def deserialize(storage: Array[Byte]): KmvSketch.State = {
-    val (kk, nulls, hashes) = KmvSketch.decode(storage)
-    val st = new KmvSketch.State(kk)
-    st.mergeFrom(hashes)
-    st.nulls = nulls
-    st
-  }
-
-  override def withNewMutableAggBufferOffset(offset: Int): KmvBuild =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): KmvBuild =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): KmvBuild =
-    copy(left = l, right = r)
-  override def prettyName: String = "kmv_build"
 }

@@ -10,24 +10,24 @@ import org.apache.spark.sql.types._
 
 import java.nio.file.{Files, Paths}
 
-/** The 1x-write DSv2 staging machinery: instead of staging task output as
-  * anonymous parquet the driver re-reads and re-writes through the store's
-  * clustering writer (2x write I/O per statement — the round-11 scale
-  * finding), the WRITE itself is asked to deliver store-grade output:
+/** The 1x-write staging machinery shared by every write: the rows are
+  * clustered BEFORE the tasks run, and each task writes store-grade
+  * output directly — nothing is staged anonymously and re-read.
   *
-  *   1. The `Write` implements `RequiresDistributionAndOrdering`
-  *      ([[ClusterWriteSpec.distribution]]): Spark range-partitions and
-  *      sorts the rows by (partition columns..., key) — exactly the
-  *      clustering `ManifestStore.writeDataFiles` would impose — BEFORE
-  *      the tasks run. Delta/Iceberg use the same contract.
+  *   1. Clustering: a DSv2 `Write` implements
+  *      `RequiresDistributionAndOrdering` ([[ClusterWriteSpec.distribution]]),
+  *      so Spark range-partitions and sorts the rows by (partition
+  *      columns..., key) — Delta/Iceberg use the same contract;
+  *      `ManifestStore.writeDataFiles` imposes the identical clustering
+  *      itself and drives the task writers as one internal job.
   *   2. Each task's [[GraftClusteredTaskWriter]] rolls to a new file at
   *      every partition-cell boundary (cell-PURE files by construction,
   *      the invariant partition pruning and wholesale partition drops
-  *      rely on) and folds min/max/null-count stats for the key and every
-  *      zone-map column WHILE writing, using Spark's own interpreted
-  *      orderings — no post-hoc stats scan.
+  *      rely on) and folds min/max/null-count stats, Bloom filters and
+  *      KMV sketches for the key and every zone-map column WHILE writing,
+  *      using Spark's own interpreted orderings — no post-hoc stats scan.
   *   3. Commit hands the staged stats to `ManifestStore.adoptStagedFiles`,
-  *      which re-serializes them through the store's exact stat casts and
+  *      which serializes them through the store's exact stat casts and
   *      RENAMES the files into `files/` — the task output IS the table.
   *
   * Bucketed tables promote too (since round 12): the distribution flips
@@ -35,22 +35,28 @@ import java.nio.file.{Files, Paths}
   * placement) and the task writer rolls files on its OWN per-row bucket
   * computation, so bucket purity never rests on the engine's partitioner.
   *
-  * Falls back to the rewriting path (spec = None) whenever the layout
-  * demands machinery the task writer does not reproduce: column-mapped
-  * tables (files must carry physical names), CHECK constraints (enforced
-  * row-by-row inside the clustering writer), or a stat column whose type
-  * the in-task ordering does not cover.
+  * A DSv2 write plans stage-and-commit instead (spec = None) when the
+  * table's shape needs the store's own write: column-mapped tables (the
+  * query's rows carry logical names; the store renames them to physical
+  * before its task write) and CHECK constraints (enforced row-by-row
+  * inside the store's write). The commit then runs `writeDataFiles`,
+  * which uses the same task writer. A stat column of a type
+  * [[statSupported]] does not list also plans stage-and-commit, where the
+  * store's type gate refuses it loudly.
   */
 object ClusteredStaging {
 
-  /** Types the task-side stats fold supports: every type
+  /** The ONE list of stat-column types: every type
     * `ManifestStore.statSerialize` round-trips whose catalyst form the
-    * writer can compare and deep-copy. Shared with the fused internal
-    * write path (`ManifestStore.writeDataFiles`) since r19, so the two
-    * 1x-write eligibility gates cannot drift. */
+    * task writer can compare and deep-copy. `ManifestStore`'s stats-type
+    * gate (`requireStatKeyType`) reads it too, so every column the store
+    * admits folds while writing and the two gates cannot drift.
+    * TimestampNTZ's ordering, external converter and string cast are all
+    * zone-free, so its stats need no epoch-micros detour. */
   private[graft] def statSupported(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType | FloatType |
-         DoubleType | BooleanType | StringType | DateType | TimestampType =>
+         DoubleType | BooleanType | StringType | DateType | TimestampType |
+         TimestampNTZType =>
       true
     case _: DecimalType => true
     case _ => false
@@ -58,8 +64,8 @@ object ClusteredStaging {
 
   /** The write spec for table `root`, or None when the promotion path
     * cannot reproduce the store's layout invariants and the caller must
-    * keep the rewriting commit. `statsCols` must be the MANIFEST's stats
-    * columns (they include the partition columns).
+    * stage and commit through the store's own write. `statsCols` must be
+    * the MANIFEST's stats columns (they include the partition columns).
     */
   def specFor(root: String, schema: StructType, key: String,
               statsCols: Seq[String], nFiles: Int): Option[ClusterWriteSpec] = {
@@ -81,7 +87,7 @@ object ClusteredStaging {
     if (partCols.exists(pc => !schema.fieldNames.contains(pc))) return None
     // stats columns may be DOTTED struct-leaf paths ("meta.lang"): the
     // task writer reaches into nested rows through the same
-    // [[ManifestStore.leafType]] resolution the rewriting writer uses
+    // [[ManifestStore.leafType]] resolution the store's stats gate uses
     // (a verbatim top-level field wins), so leaf-statted tables promote
     // too — no 2x-write fallback for the documents/multimodal shape
     val sCols = statsCols.filter(c => c != key &&
@@ -90,7 +96,7 @@ object ClusteredStaging {
     if (typed.exists(c =>
       !statSupported(ManifestStore.leafType(schema, c).get))) return None
     // secondary bloom columns fold in-task like the key's; a column the
-    // rewriting writer would REFUSE (not a zone-map column) falls back so
+    // store's write would REFUSE (not a zone-map column) falls back so
     // the loud error fires there, not a silent promoted no-op
     val (bcRaw, bcCfg) = ManifestStore.bloomColParams(props)
     val bloomCols = bcRaw.filter(c =>
@@ -109,8 +115,9 @@ object ClusteredStaging {
   * `repartitionByRange + sortWithinPartitions` — into `nFiles` partitions.
   * `bloom` = (numBits, numHashes) when the table's `bloomfilter` property
   * asks for per-file key Bloom filters: the task writers fold them while
-  * writing, over the SAME serialized key strings the stats-pass
-  * `bloom_build` aggregate hashes.
+  * writing, over the key's manifest stat strings — the strings the
+  * pruner's probes hash. A table partitioned BY its key orders on the key
+  * once.
   */
 final case class ClusterWriteSpec(key: String, partCols: Seq[String],
                                   statsCols: Seq[String], nFiles: Int,
@@ -118,7 +125,7 @@ final case class ClusterWriteSpec(key: String, partCols: Seq[String],
                                   bloomCols: Seq[(String, (Int, Int))] = Nil,
                                   buckets: Option[Int] = None) {
   def sortOrders: Array[SortOrder] =
-    (partCols :+ key).map(c =>
+    (partCols :+ key).distinct.map(c =>
       Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)).toArray
   /** Bucketed: co-locate same-key rows (hash) into exactly `buckets`
     * partitions — one whole bucket per task; rows key-sorted within.
@@ -145,7 +152,7 @@ final case class GraftStagedFilesMessage(files: Seq[ManifestStore.StagedFile])
   * files, never a mixed cell... for single-valued runs; a revisited cell
   * yields a second pure file for the same cell, which the manifest
   * tolerates). Stats fold with Spark's own interpreted orderings, so
-  * min/max agree exactly with what the stats scan would have computed.
+  * min/max agree exactly with Spark's min/max aggregates over the file.
   */
 final class GraftClusteredTaskWriter(stageDir: String,
                                      writers: ParquetWriteBridge.TaskWriters,
@@ -163,9 +170,8 @@ final class GraftClusteredTaskWriter(stageDir: String,
   /** Catalyst accessor + leaf type for a (possibly dotted) stats path: a
     * top-level field wins verbatim (even with a literal dot in its name),
     * else the dotted path walks struct ordinals — a NULL at ANY step
-    * yields SQL NULL, matching the Column traversal the rewriting
-    * writer's stats pass uses ([[ManifestStore.leafCol]]), so promoted
-    * and rewritten leaf stats agree bit-for-bit.
+    * yields SQL NULL, matching the Column traversal
+    * ([[ManifestStore.leafCol]]) a plain read of the file uses.
     */
   private def leafOf(path: String): (InternalRow => Any, DataType) =
     if (schema.fieldNames.contains(path)) {
@@ -244,8 +250,8 @@ final class GraftClusteredTaskWriter(stageDir: String,
   private var keyMax: Any = _
   private var cell: Array[Any] = _ // copied catalyst values, null slots ok
   // bucketed layout: the writer computes every row's bucket itself
-  // (catalyst murmur3, the exact expression `pmod(hash(key), n)` the
-  // rewriting writer uses) and rolls on change — purity by construction
+  // (catalyst murmur3, the exact expression `pmod(hash(key), n)`) and
+  // rolls on change — purity by construction
   private val bucketHash: org.apache.spark.sql.catalyst.expressions.Murmur3Hash =
     if (spec.buckets.isDefined)
       org.apache.spark.sql.catalyst.expressions.Murmur3Hash(Seq(
@@ -258,8 +264,8 @@ final class GraftClusteredTaskWriter(stageDir: String,
     val h = bucketHash.eval(row).asInstanceOf[Int]
     ((h % n) + n) % n
   }
-  // per-file key Bloom fold (spec.bloom): key catalyst value -> the same
-  // manifest stat string the stats-pass bloom_build hashes -> bitset
+  // per-file key Bloom fold (spec.bloom): key catalyst value -> its
+  // manifest stat string (what the pruner's probes hash) -> bitset
   private val keyStr: Any => org.apache.spark.unsafe.types.UTF8String =
     if (spec.bloom.isDefined) ParquetWriteBridge.statStringifier(keyDt)
     else null
@@ -281,10 +287,9 @@ final class GraftClusteredTaskWriter(stageDir: String,
   }
   // per-file KMV NDV sketches (key + every stats column the hasher
   // covers), folded per row like the stats and Blooms — O(k) state per
-  // column, a hash + one unsigned compare per row once saturated. Same
-  // hash domain as the stats-pass kmv_build aggregate (catalyst-internal
-  // values through KmvSketch.hasherFor), so promoted and rewritten files'
-  // sketches union soundly.
+  // column, a hash + one unsigned compare per row once saturated. Every
+  // file hashes catalyst-internal values through KmvSketch.hasherFor, so
+  // all files' sketches share one hash domain and union soundly.
   private case class ColKmv(name: String, get: InternalRow => Any,
                             dt: DataType, hasher: Any => Long) {
     var state: graft.functions.KmvSketch.State = _

@@ -535,19 +535,14 @@ final class GraftWriteBuilder(root: String, options: Map[String, String],
     if (dynamicPartitions) {
       // 1x-write promotion: ask Spark to deliver (partCols..., key)
       // range-clustered, sorted task output so the staged files can be
-      // adopted directly (ClusteredStaging); spec = None falls back to
-      // the rewriting commit (bucketed/mapped/CHECK'd tables, or the
-      // spark.graft.write.promote=false escape hatch)
-      val spec: Option[ClusterWriteSpec] = {
-        val enabled = SparkSession.active.conf
-          .getOption("spark.graft.write.promote").forall(_ != "false")
-        val m = if (enabled) scala.util.Try(
-          GraftTable.manifestFor(root, options)).toOption else None
-        m.filter(_.colMap.isEmpty).flatMap(mm =>
-          ClusteredStaging.specFor(root, info.schema(),
-            GraftTable.resolve(root, options)._2, mm.statsCols,
-            GraftTable.opt(options, "files").map(_.toInt).getOrElse(16)))
-      }
+      // adopted directly (ClusteredStaging); spec = None stages and
+      // commits through the store's own write (mapped/CHECK'd tables)
+      val spec: Option[ClusterWriteSpec] =
+        scala.util.Try(GraftTable.manifestFor(root, options)).toOption
+          .filter(_.colMap.isEmpty).flatMap(mm =>
+            ClusteredStaging.specFor(root, info.schema(),
+              GraftTable.resolve(root, options)._2, mm.statsCols,
+              GraftTable.opt(options, "files").map(_.toInt).getOrElse(16)))
       spec match {
         case Some(s) =>
           new Write
@@ -577,12 +572,9 @@ final class GraftWriteBuilder(root: String, options: Map[String, String],
       // Append/Update) keep unclustered staging — their epochs feed the
       // pruned merge, where a pre-sort would be pure overhead.
       val streamSpec: Option[ClusterWriteSpec] = {
-        val enabled = SparkSession.active.conf
-          .getOption("spark.graft.write.promote").forall(_ != "false")
         val existing = scala.util.Try(
           GraftTable.manifestFor(root, options)).toOption
-        val eligible = enabled &&
-          GraftWriteBuilder.opt(options, "opcol").isEmpty &&
+        val eligible = GraftWriteBuilder.opt(options, "opcol").isEmpty &&
           (existing.isEmpty || overwrite) &&
           existing.forall(_.colMap.isEmpty)
         if (!eligible) None
@@ -698,14 +690,14 @@ final class GraftOverwriteBatchWrite(root: String,
           s"no graft store at $root"))
         if (m.colMap.nonEmpty) {
           // a RENAME landed between planning and commit: the staged files
-          // carry logical names — fall back to the rewriting commit, which
-          // physicalizes
+          // carry logical names — fall back to stage-and-commit, whose
+          // store write physicalizes
           val data = spark.read.schema(schema)
             .parquet(stagedStats.map(_.path): _*)
           GraftWriteBuilder.runOverwritePartitions(root, options, data)
         } else {
           // "owp1x" marks the adopted (1x-write) lineage in the commit
-          // log — forensics can tell promoted from rewritten statements
+          // log — forensics can tell promoted from stage-and-commit ones
           st.overwritePartitionsStaged(stagedStats, batchId = m.version + 1,
             streamId = s"dsv2-owp1x-${java.util.UUID.randomUUID()}")
           ()

@@ -111,7 +111,7 @@ final class GraftStreamingWrite(root: String, options: Map[String, String],
       }
       // promotion: a COMMIT epoch (initial snapshot / Complete re-commit)
       // whose tasks staged clustered, stats-carrying files adopts them by
-      // rename (1x write). Falls back to the rewriting commit when the
+      // rename (1x write). Falls back to stage-and-commit when the
       // table acquired column mapping mid-query (the staged files carry
       // logical names) or the epoch staged through plain writers.
       def promotable(colMap: Map[String, String]): Boolean =

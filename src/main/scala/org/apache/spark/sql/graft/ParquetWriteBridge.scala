@@ -98,8 +98,8 @@ object ParquetWriteBridge {
     * TimestampType renders as epoch MICROS (zone-free; catalyst timestamps
     * already are micros), everything else through Spark's own Cast-to-
     * string — so a Bloom filter folded in a write task hashes the very
-    * same strings the stats-pass `bloom_build` aggregate does. Input is a
-    * CATALYST value of `dt`; null maps to null.
+    * same strings the pruner's probes serialize through `statSerialize`.
+    * Input is a CATALYST value of `dt`; null maps to null.
     */
   def statStringifier(dt: org.apache.spark.sql.types.DataType)
       : Any => org.apache.spark.unsafe.types.UTF8String = {

@@ -9,9 +9,8 @@ import org.apache.spark.sql.functions._
   * required distribution, stats fold in the task writers, and the commit
   * ADOPTS the staged files by rename — nothing is re-read or re-written.
   * The promoted lineage is observable (`dsv2-owp1x-` streamId); stats
-  * must be BIT-IDENTICAL to what the rewriting stats scan would record,
-  * or zone-map pruning would silently diverge between promoted and
-  * rewritten files.
+  * must equal what a plain read of each adopted file recomputes, or
+  * zone-map pruning would silently skip rows.
   */
 class GraftPromotedWriteSpec extends SparkSpec {
   import spark.implicits._
@@ -63,7 +62,7 @@ class GraftPromotedWriteSpec extends SparkSpec {
           s"${(real.getLong(0), real.getLong(1), real.getLong(2))}")
     }
     // key ranges across the adopted files are disjoint (the required
-    // ordering was honored: range-clustered like the rewriting writer)
+    // ordering was honored: range-clustered like the store's own write)
     val ranges = bFiles.map(f => (f.minKey.toLong, f.maxKey.toLong))
       .sortBy(_._1)
     ranges.sliding(2).foreach {
@@ -134,7 +133,8 @@ class GraftPromotedWriteSpec extends SparkSpec {
       "SELECT id, 'A', CAST(id AS DOUBLE) FROM range(100, 150)")
     val m = store("t3").currentManifest.get
     assert(m.streamId.startsWith("dsv2-owp-"),
-      s"CHECK'd table must take the rewriting (enforcing) path, " +
+      s"CHECK'd table must stage and commit through the store's " +
+        "(enforcing) write, " +
         s"got '${m.streamId}'")
     assert(spark.table("gpw.db.t3").count() === 50L)
     // and the CHECK still fires on a violating overwrite
@@ -146,53 +146,37 @@ class GraftPromotedWriteSpec extends SparkSpec {
     assert(spark.table("gpw.db.t3").count() === 50L, "failed write must not land")
   }
 
-  test("spark.graft.write.promote=false forces the rewriting path") {
-    sql("DROP TABLE IF EXISTS gpw.db.t4")
-    sql("CREATE TABLE gpw.db.t4 (id BIGINT, seg STRING, v DOUBLE) " +
+  test("promoted overwrite lands exactly the rows its source SQL selects") {
+    sql("DROP TABLE IF EXISTS gpw.db.t5")
+    sql("CREATE TABLE gpw.db.t5 (id BIGINT, seg STRING, v DOUBLE) " +
       "PARTITIONED BY (seg) TBLPROPERTIES ('key'='id')")
-    sql("INSERT INTO gpw.db.t4 SELECT id, 'A', CAST(id AS DOUBLE) " +
-      "FROM range(0, 100)")
-    spark.conf.set("spark.graft.write.promote", "false")
-    try dynOverwrite("INSERT OVERWRITE gpw.db.t4 " +
-      "SELECT id, 'A', CAST(id AS DOUBLE) FROM range(0, 60)")
-    finally spark.conf.unset("spark.graft.write.promote")
-    val m = store("t4").currentManifest.get
-    assert(m.streamId.startsWith("dsv2-owp-"), s"got '${m.streamId}'")
-    assert(spark.table("gpw.db.t4").count() === 60L)
-  }
-
-  test("promoted and rewritten overwrites land identical content and stats") {
-    def build(tbl: String, promote: Boolean): ManifestStore.Manifest = {
-      sql(s"DROP TABLE IF EXISTS gpw.db.$tbl")
-      sql(s"CREATE TABLE gpw.db.$tbl (id BIGINT, seg STRING, v DOUBLE) " +
-        "PARTITIONED BY (seg) TBLPROPERTIES ('key'='id')")
-      sql(s"INSERT INTO gpw.db.$tbl SELECT id, " +
-        "CASE CAST(id % 2 AS INT) WHEN 0 THEN 'E' ELSE 'O' END, " +
-        "CAST(id AS DOUBLE) FROM range(0, 1000)")
-      if (!promote) spark.conf.set("spark.graft.write.promote", "false")
-      try dynOverwrite(s"INSERT OVERWRITE gpw.db.$tbl " +
-        "SELECT id, 'E', CAST(id * 2 AS DOUBLE) FROM range(2000, 2500)")
-      finally if (!promote) spark.conf.unset("spark.graft.write.promote")
-      store(tbl).currentManifest.get
-    }
-    val mp = build("t5p", promote = true)
-    val mr = build("t5r", promote = false)
-    assert(mp.streamId.startsWith("dsv2-owp1x-"))
-    assert(mr.streamId.startsWith("dsv2-owp-"))
-    // identical relational content
-    val got = spark.table("gpw.db.t5p").orderBy("id")
+    val seed = "SELECT id, " +
+      "CASE CAST(id % 2 AS INT) WHEN 0 THEN 'E' ELSE 'O' END AS seg, " +
+      "CAST(id AS DOUBLE) AS v FROM range(0, 1000)"
+    val over = "SELECT id, 'E' AS seg, CAST(id * 2 AS DOUBLE) AS v " +
+      "FROM range(2000, 2500)"
+    sql(s"INSERT INTO gpw.db.t5 $seed")
+    dynOverwrite(s"INSERT OVERWRITE gpw.db.t5 $over")
+    val m = store("t5").currentManifest.get
+    assert(m.streamId.startsWith("dsv2-owp1x-"), s"got '${m.streamId}'")
+    // content: the overwrite's rows replace cell E; cell O is untouched
+    val got = spark.table("gpw.db.t5").orderBy("id")
       .as[(Long, String, Double)].collect().toSeq
-    val want = spark.table("gpw.db.t5r").orderBy("id")
-      .as[(Long, String, Double)].collect().toSeq
+    val want = spark.sql(s"$over UNION ALL SELECT * FROM ($seed) " +
+      "WHERE seg = 'O'").orderBy("id").as[(Long, String, Double)]
+      .collect().toSeq
     assert(got === want)
-    // identical aggregate zone-map coverage for the replaced partition
-    def zone(m: ManifestStore.Manifest) = {
-      val fs = m.files.filter(_.cols.get("seg").exists(_._1 == "E"))
-        .filter(_.minKey.toLong >= 2000L)
-      (fs.map(_.rows).sum, fs.map(_.minKey.toLong).min,
-        fs.map(_.maxKey.toLong).max)
+    // the replaced cell's zone map covers exactly the source's key range,
+    // and each adopted file's stats equal a plain read of it
+    val fs = m.files.filter(_.cols.get("seg").exists(_._1 == "E"))
+    assert((fs.map(_.rows).sum, fs.map(_.minKey.toLong).min,
+      fs.map(_.maxKey.toLong).max) === ((500L, 2000L, 2499L)))
+    fs.foreach { f =>
+      val real = spark.read.parquet(s"${root("t5")}/files/${f.name}")
+        .agg(min("id"), max("id"), count(lit(1))).head()
+      assert((f.minKey, f.maxKey, f.rows) === ((real.getLong(0).toString,
+        real.getLong(1).toString, real.getLong(2))))
     }
-    assert(zone(mp) === zone(mr))
   }
 
   test("promoted writes fold per-file key blooms the probes can't miss on") {
@@ -205,13 +189,13 @@ class GraftPromotedWriteSpec extends SparkSpec {
     dynOverwrite("INSERT OVERWRITE gpw.db.t6 " +
       "SELECT id, 'B', CAST(id AS DOUBLE) FROM range(1000, 1500)")
     val m = store("t6").currentManifest.get
-    // the overwrite PROMOTED (bloom fold must not force the rewrite path)
+    // the overwrite PROMOTED (bloom fold must not force stage-and-commit)
     assert(m.streamId.startsWith("dsv2-owp1x-"), s"got '${m.streamId}'")
     assert(m.files.forall(_.bloom.isDefined),
       "an adopted file is missing its key bloom")
-    // task-writer-folded blooms hash the same strings the stats-pass
-    // builder does: every key present in a file must probe TRUE against
-    // that file's blob (no false negatives, across both build sites)
+    // task-writer-folded blooms hash the key's manifest stat strings:
+    // every key present in a file must probe TRUE against that file's
+    // blob (no false negatives)
     m.files.foreach { f =>
       val blob = java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(root("t6"), "files", f.bloom.get))
@@ -269,12 +253,12 @@ class GraftPromotedWriteSpec extends SparkSpec {
       "'lang', concat('m', CAST((id * 2654435761) % 37 AS STRING)), " +
       "'score', id * 3) FROM range(1000, 1500)")
     val m = store("t8").currentManifest.get
-    // the leaf-bloom fold must not force the 2x rewriting path
+    // the leaf-bloom fold must not force stage-and-commit
     assert(m.streamId.startsWith("dsv2-owp1x-"), s"got '${m.streamId}'")
     assert(m.files.forall(_.colBlooms.contains("meta.lang")),
       "an adopted file is missing its struct-leaf bloom")
-    // parity with the stats-pass builder: every leaf value present in a
-    // file probes TRUE against that file's blob (no false negatives)
+    // every leaf value present in a file probes TRUE against that
+    // file's blob (no false negatives)
     m.files.foreach { f =>
       val blob = java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(root("t8"), "files",

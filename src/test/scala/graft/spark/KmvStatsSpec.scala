@@ -9,9 +9,9 @@ import org.apache.spark.sql.types.LongType
 import java.nio.file.Files
 
 /** Per-file KMV NDV sketches -> DSv2 column statistics -> Spark CBO.
-  * Both writers fold the sketches (the stats pass via the kmv_build
-  * aggregate, the 1x-write promotion in the task writers), the manifest
-  * carries one tiny .kmv sidecar name per file, and the scan's
+  * The clustered task writer folds the sketches while it writes (store
+  * commits and promoted DSv2 writes alike), the manifest carries one tiny
+  * .kmv sidecar name per file, and the scan's
   * `estimateStatistics().columnStats()` reports merged distinct counts /
   * null counts / numeric min-max of exactly the planned files — so with
   * `spark.sql.cbo.enabled` the join planner sizes joins from NDV, not
@@ -48,7 +48,7 @@ class KmvStatsSpec extends SparkSpec {
     assert(KmvSketch.decodeMulti(multi)("x").sameElements(blob))
   }
 
-  test("rewriting writer folds sidecars; ndvStats merges within error") {
+  test("commit folds KMV sidecars; ndvStats merges within error") {
     val root = Files.createTempDirectory("kmvstats").toString
     val st = new ManifestStore(root, spark, "id")
     // grp has exactly 97 distinct values; id is unique
@@ -66,7 +66,7 @@ class KmvStatsSpec extends SparkSpec {
     assert(ndv("id")._2 == 0L && ndv("grp")._2 == 0L, "null counts ride along")
   }
 
-  test("promoted (1x-write) files fold sketches that agree with the stats pass") {
+  test("promoted files carry sketches equal to ones rebuilt from each file") {
     val warehouse = Files.createTempDirectory("kmv_wh").toString
     spark.conf.set("spark.sql.catalog.gkv", "graft.spark.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gkv.warehouse", warehouse)
@@ -93,19 +93,30 @@ class KmvStatsSpec extends SparkSpec {
       s"key ndv=${ndv("id")._1}")
     assert(ndv("seg")._1 == 2L, s"seg ndv=${ndv("seg")._1}")
 
-    // cross-path agreement: rewrite the same content through the stats
-    // pass and compare — same hash domain, so unsaturated sketches (seg)
-    // must agree EXACTLY and saturated ones (id) within 2x the error bar
-    val root2 = Files.createTempDirectory("kmv_rw").toString
-    val st2 = new ManifestStore(root2, spark, "id")
-    st2.commit(spark.table("gkv.db.t"), batchId = 0, nFiles = 4,
-      statsCols = Seq("seg"))
-    val ndv2 = st2.ndvStats(st2.currentManifest.get,
-      st2.currentManifest.get.files).get
-    assert(ndv2("seg")._1 == ndv("seg")._1)
-    assert(math.abs(ndv2("id")._1 - ndv("id")._1).toDouble /
-      math.max(ndv("id")._1, 1L) < 0.2,
-      s"paths disagree: promoted=${ndv("id")._1} rewritten=${ndv2("id")._1}")
+    // every file's sidecar equals a sketch rebuilt from a plain read of
+    // that file: same k, same null count, same retained hashes
+    m.files.foreach { f =>
+      val sidecar = KmvSketch.decodeMulti(Files.readAllBytes(
+        java.nio.file.Paths.get(root, "files", f.kmv.get)))
+      assert(sidecar.keySet == Set("id", "seg"), s"${f.name}: ${sidecar.keySet}")
+      val df = spark.read.parquet(s"$root/files/${f.name}")
+      sidecar.foreach { case (c, blob) =>
+        val dt = df.schema(c).dataType
+        val hasher = KmvSketch.hasherFor(dt)
+        val rebuilt = new KmvSketch.State(KmvSketch.DefaultK)
+        df.select(c).collect().map(_.get(0)).foreach {
+          case null => rebuilt.nulls += 1
+          case s: String => rebuilt.add(hasher(
+            org.apache.spark.unsafe.types.UTF8String.fromString(s)))
+          case v => rebuilt.add(hasher(v))
+        }
+        val (k, nulls, hashes) = KmvSketch.decode(blob)
+        assert(k == KmvSketch.DefaultK && nulls == rebuilt.nulls,
+          s"${f.name}.$c: k=$k nulls=$nulls vs ${rebuilt.nulls}")
+        assert(hashes.sameElements(rebuilt.toSortedArray),
+          s"${f.name}.$c: sketch differs from the rebuilt one")
+      }
+    }
   }
 
   test("columnStats reach the optimizer and NDV sizes a CBO join") {
