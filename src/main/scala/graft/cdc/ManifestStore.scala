@@ -1251,11 +1251,120 @@ object ManifestStore {
         } finally ch.close()
       }
     }
+
+  /** The columns of a deletion-vector sidecar part: the masked file's
+    * name and the masked key, in this order (the masked readers address
+    * them by position).
+    */
+  private[cdc] def dvSchema(keyType: org.apache.spark.sql.types.DataType): StructType =
+    StructType(Seq(
+      org.apache.spark.sql.types.StructField("_file",
+        org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("_key", keyType)))
+
+  /** One deletion-vector write TASK ([[ManifestStore]]`.applyMasks`): its
+    * `(_file, _key, _new)` rows arrive sorted by (_file, _key); every
+    * file's run whose rows include a `_new` one becomes one sidecar
+    * directory under `stageDir` holding the file's DISTINCT keys as one
+    * `(_file, _key)` parquet part — the layout every sidecar reader lists.
+    * Old keys seen before a file's first new one wait in memory (at most
+    * that file's old sidecar), so a file that gains no mask writes
+    * nothing. Returns (file, distinct keys, staged dir) per sidecar. Null
+    * keys mask nothing and are dropped.
+    */
+  private[cdc] def writeMaskTask(rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+                                 writers: org.apache.spark.sql.graft.ParquetWriteBridge.TaskWriters,
+                                 keyType: org.apache.spark.sql.types.DataType,
+                                 stageDir: String, partitionId: Int,
+                                 attempt: Long): Seq[(String, Long, String)] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val keyOrd = org.apache.spark.sql.graft.ParquetWriteBridge.orderingFor(keyType)
+    val ext = writers.extension()
+    val base = Paths.get(stageDir, s"$partitionId-$attempt")
+    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, String)]
+    val pending = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
+    var w: org.apache.spark.sql.graft.ParquetWriteBridge.RowFileWriter = null
+    var file: UTF8String = null
+    var prevKey: Any = null
+    var n = 0L
+    def write(k: Any): Unit = { row.update(0, file); row.update(1, k); w.write(row) }
+    def finish(): Unit = {
+      if (w != null) {
+        w.close(); w = null
+        out += ((file.toString, n, base.resolve(out.size.toString).toString))
+      }
+      pending.clear()
+    }
+    try {
+      rows.foreach { r =>
+        if (!r.isNullAt(1)) {
+          val f = r.getUTF8String(0)
+          if (file == null || f != file) {
+            finish()
+            file = f.clone()
+            prevKey = null; n = 0L
+          }
+          val k = r.get(1, keyType)
+          if (prevKey == null || keyOrd.compare(prevKey, k) != 0) {
+            prevKey = k match { case u: UTF8String => u.clone(); case v => v }
+            n += 1
+            if (w != null) write(k) else pending += prevKey
+          }
+          if (w == null && r.getBoolean(2)) {
+            w = writers.open(base.resolve(out.size.toString)
+              .resolve(s"part-00000$ext").toString, partitionId, attempt)
+            pending.foreach(write)
+            pending.clear()
+          }
+        }
+      }
+      finish()
+      out.toSeq
+    } catch {
+      case t: Throwable =>
+        if (w != null) scala.util.Try(w.close())
+        deleteRecursively(base)
+        throw t
+    }
+  }
+
+  private def deleteRecursively(p: Path): Unit = {
+    if (Files.isDirectory(p)) {
+      val s = Files.list(p)
+      try s.forEach(deleteRecursively) finally s.close()
+    }
+    Files.deleteIfExists(p)
+    ()
+  }
+
+  /** Table properties whose value is a comma list of column names: a
+    * column rename rewrites them in place, so partitioning, secondary
+    * Blooms and clustering follow the column.
+    */
+  private val ColumnListProps = Seq("partitioncol", "bloomfiltercols",
+    "clustering.cols")
+
+  /** `props` with `from` renamed to `to` in every column-list property
+    * that names it; other entries are returned as they are.
+    */
+  private[cdc] def renameInColumnProps(props: Map[String, String],
+                                       from: String, to: String)
+      : Map[String, String] =
+    props.map {
+      case (k, v) if ColumnListProps.contains(k) =>
+        val cols = v.split(",").map(_.trim).filter(_.nonEmpty)
+        if (cols.contains(from))
+          k -> cols.map(c => if (c == from) to else c).mkString(",")
+        else k -> v
+      case kv => kv
+    }
 }
 
 final class ManifestStore(val root: String, spark: SparkSession,
                           keyField: String) {
-  import ManifestStore.{FileEntry, Manifest, MergeOutcome, MergeStats}
+  import ManifestStore.{FileEntry, Manifest, MergeOutcome, MergeStats,
+    deleteRecursively}
   private val currentFile = Paths.get(root, "_CURRENT")
   private val mapper = new ObjectMapper()
 
@@ -1556,12 +1665,22 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * strategy is AQE's call and an oversized mask set degrades to a
     * shuffled join instead of a driver OOM.
     */
-  private def dvSide(dvPaths: Seq[String], totalDvRows: Long): DataFrame = {
-    val dvDf = spark.read.parquet(dvPaths: _*)
+  private def dvSide(dvPaths: Seq[String], totalDvRows: Long,
+                     keyType: org.apache.spark.sql.types.DataType): DataFrame = {
+    val dvDf = readSidecars(dvPaths, keyType)
     val maxRows = spark.conf.getOption("spark.graft.manifest.dvBroadcastMaxRows")
       .map(_.toLong).getOrElse(ManifestStore.DvBroadcastMaxRows)
     if (totalDvRows <= maxRows) broadcast(dvDf) else dvDf
   }
+
+  /** Deletion-vector sidecars, read through their schema
+    * ([[ManifestStore.dvSchema]]) instead of inferring it from the part
+    * footers — inference is a Spark job of its own on every read. A
+    * sidecar written under a narrower key type upcasts like its data file.
+    */
+  private def readSidecars(dvPaths: Seq[String],
+                           keyType: org.apache.spark.sql.types.DataType): DataFrame =
+    spark.read.schema(ManifestStore.dvSchema(keyType)).parquet(dvPaths: _*)
 
   /** The EFFECTIVE rows of `entries`: data files minus their deletion-
     * vector sidecars. Sidecar-less files stream straight through one scan;
@@ -1597,7 +1716,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
       val maskedDf = if (masked.isEmpty) None
       else {
         val dvDf = dvSide(masked.flatMap(_.dv).map(d => s"$root/files/$d"),
-          masked.map(_.dvRows).sum)
+          masked.map(_.dvRows).sum, schema(keyField).dataType)
         val data = scan(masked).withColumn("_file", fileBasename)
         Some(data.join(dvDf,
           data("_file") === dvDf("_file") &&
@@ -3154,7 +3273,8 @@ final class ManifestStore(val root: String, spark: SparkSession,
     */
   def readHit(keys: DataFrame): Option[DataFrame] =
     currentManifest.map { m =>
-      val hit = hitFileNames(keys, m.files, keyTypeOf(m))
+      val hit = hitFileNames(keys.select(col(Changelog.KeyCol)).distinct(),
+        m.files, keyTypeOf(m))
       readFiles(m, m.files.filter(f => hit(f.name)))
     }
 
@@ -3167,7 +3287,8 @@ final class ManifestStore(val root: String, spark: SparkSession,
       val keyType = keyTypeOf(m)
       // string-typed key frame: hitFileNames casts through the key's real
       // type, the same exact round-trip the stats themselves use
-      val keysDf = spark.createDataFrame(keys.map(k => Tuple1(String.valueOf(k))))
+      val keysDf = spark.createDataFrame(
+          keys.distinct.map(k => Tuple1(String.valueOf(k))))
         .toDF(Changelog.KeyCol)
       val hit = hitFileNames(keysDf, m.files, keyType)
       readFiles(m, m.files.filter(f => hit(f.name)))
@@ -3740,15 +3861,13 @@ final class ManifestStore(val root: String, spark: SparkSession,
         k == from || k.startsWith(s"$from."))) ++
         nestedMoved + (to -> m.phys(from))
       val stats = m.statsCols.map(c => if (c == from) to else c)
-      // a renamed partition column keeps partitioning: update the property
-      // (a comma list since multi-column partitioning — rename in place)
+      // a renamed partition, secondary-Bloom or clustering column keeps
+      // its role: the column-list properties are renamed in place
       val props = ManifestStore.readTableProps(root)
-      val pcList = props.get("partitioncol").toSeq
-        .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-      if (pcList.contains(from)) {
+      val renamedProps = ManifestStore.renameInColumnProps(props, from, to)
+      if (renamedProps != props) {
         Files.deleteIfExists(Paths.get(root, "_TBLPROPS"))
-        ManifestStore.writeTableProps(root, props + ("partitioncol" ->
-          pcList.map(c => if (c == from) to else c).mkString(",")))
+        ManifestStore.writeTableProps(root, renamedProps)
       }
       writeManifestAndSwap(m.version + 1, m.batchId, streamId,
         newSchema.toDDL, m.files, stats,
@@ -3923,9 +4042,9 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * Semantics are exactly [[merge]]'s (ts guard included) — the specs
     * pin read-path equality between the two. Reads still scan the touched
     * files (that is the "read" in merge-on-read); only write
-    * amplification changes. Sidecar maintenance is a driver loop of
-    * batch-sized jobs, one per masked file — O(touched files), the same
-    * bound the copy-on-write path pays in rewrites.
+    * amplification changes. Sidecar maintenance is one shuffle and one
+    * write job for all masked files together ([[applyMasks]]), whatever
+    * their number; its I/O is O(masks of the touched files).
     *
     * [[mergeOnRead]] itself is the single-writer primitive (swap without
     * CAS — for a stream that owns its table exclusively);
@@ -3979,12 +4098,14 @@ final class ManifestStore(val root: String, spark: SparkSession,
       val liveP = live.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
+        // `live` holds one row per key and only builds a semi-join here:
+        // no distinct needed
         val liveKeys = liveP
-          .select(col(Changelog.KeyCol).cast(keyType).as("_key")).distinct()
+          .select(col(Changelog.KeyCol).cast(keyType).as("_key"))
         // (file, key) pairs to mask: every RAW row of a touched file
         // whose key has a surviving net event. Raw (not effective) scan:
-        // re-masking an already-masked key is a no-op after the distinct
-        // union below, and it spares a second anti-join here.
+        // re-masking an already-masked key is a no-op after the per-file
+        // key dedup in the mask write, and it spares a second anti-join.
         val schema = StructType.fromDDL(m.schemaDDL)
         val newMasks =
           if (touched.isEmpty) None
@@ -3993,26 +4114,23 @@ final class ManifestStore(val root: String, spark: SparkSession,
             .select(fileBasename.as("_file"),
               col(keyField).cast(keyType).as("_key"))
             .join(broadcast(liveKeys), Seq("_key"), "left_semi")
-            .select("_file", "_key")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        try {
-          val (updatedTouched, maskCounts) =
-            applyMasks(touched, newMasks, keyType)
-          // the batch's after-images, shaped to the merged schema
-          val upserts = Changelog
-            .afterImage(liveP.filter(col(Changelog.OpCol) =!= "d"), fields)
-            .select(merged.columns.map(col).toSeq: _*)
-          // CDF capture rides the structures already in hand: the
-          // effective touched-file read is the preimage side, liveP the
-          // surviving net — one extra O(changed) pass, only when enabled
-          val cdc = if (!cdfEnabled) None
-            else deriveCdc(snapSubset, liveP, fields,
-              keyType, merged.schema, m.colMap)
-          val newEntries = writeDataFiles(upserts, 1, m.statsCols,
-            colMap = m.colMap)
-          MorDerived(touched, untouched, updatedTouched, maskCounts,
-            newEntries, merged.schema.toDDL, cdc)
-        } finally newMasks.foreach(_.unpersist())
+            .select("_file", "_key"))
+        val (updatedTouched, maskCounts) =
+          applyMasks(touched, newMasks, keyType)
+        // the batch's after-images, shaped to the merged schema
+        val upserts = Changelog
+          .afterImage(liveP.filter(col(Changelog.OpCol) =!= "d"), fields)
+          .select(merged.columns.map(col).toSeq: _*)
+        // CDF capture rides the structures already in hand: the
+        // effective touched-file read is the preimage side, liveP the
+        // surviving net — one extra O(changed) pass, only when enabled
+        val cdc = if (!cdfEnabled) None
+          else deriveCdc(snapSubset, liveP, fields,
+            keyType, merged.schema, m.colMap)
+        val newEntries = writeDataFiles(upserts, 1, m.statsCols,
+          colMap = m.colMap)
+        MorDerived(touched, untouched, updatedTouched, maskCounts,
+          newEntries, merged.schema.toDDL, cdc)
       } finally liveP.unpersist()
     } finally cleanup()
   }
@@ -4171,60 +4289,60 @@ final class ManifestStore(val root: String, spark: SparkSession,
     } finally netP.unpersist()
   }
 
-  /** Replace the sidecars of every file in `touched` that `newMasks`
-    * (`(_file, _key)` rows, persisted) names with old-mask ∪ new-mask, in
-    * ONE Spark job: write the union partitioned by file, then adopt each
-    * partition DIRECTORY as that file's new sidecar (a sidecar is a
-    * parquet dir; one driver rename per masked file, no per-file jobs).
+  /** Replace the sidecar of every file in `candidates` that `newMasks`
+    * (`(_file, _key)` rows) names with old-mask ∪ new-mask, in one shuffle
+    * and one write job: the new masks, tagged `_new`, union the old
+    * sidecars of the candidates, hash-partitioned by file; each task of
+    * one task-writer job ([[ManifestStore.writeMaskTask]]) sorts its rows
+    * by (file, key), drops duplicate keys and stages one sidecar per file
+    * that gained a mask, returning its name and distinct-key count — the
+    * mask names and counts come back with the task results, nothing is
+    * collected. One driver rename per masked file adopts its staged
+    * directory (a sidecar is a parquet dir of `(_file, _key)` parts).
     * Old sidecars become unreferenced — vacuum's work. Files `newMasks`
-    * does not name pass through untouched. Sidecar names carry a fresh
-    * token: the previous sidecar stays referenced by earlier manifests
-    * (time travel) until vacuum. Returns the updated entries and the
-    * combined per-file mask counts.
+    * does not name keep their (name, dv) identity. Sidecar names carry a
+    * fresh token: the previous sidecar stays referenced by earlier
+    * manifests (time travel) until vacuum. Returns the updated candidates
+    * and the combined per-file mask counts.
     */
-  private def applyMasks(touched: Seq[FileEntry], newMasks: Option[DataFrame],
+  private def applyMasks(candidates: Seq[FileEntry], newMasks: Option[DataFrame],
                          keyType: org.apache.spark.sql.types.DataType)
       : (Seq[FileEntry], Map[String, Long]) = {
     val dvToken = java.util.UUID.randomUUID().toString
     def dvNameFor(fname: String) = s"$fname.$dvToken.dv"
-    val newMaskNames: Set[String] = newMasks match {
-      case None => Set.empty
-      case Some(mk) => mk.select("_file").distinct()
-        .collect().map(_.getString(0)).toSet
+    val maskCounts: Map[String, Long] = newMasks match {
+      case None => Map.empty
+      case Some(mk) =>
+        def tagged(df: DataFrame, isNew: Boolean) =
+          df.select(col("_file"), col("_key").cast(keyType), lit(isNew).as("_new"))
+        val oldDvPaths = candidates.flatMap(_.dv).map(d => s"$root/files/$d")
+        val fresh = tagged(mk, isNew = true)
+        val all = if (oldDvPaths.isEmpty) fresh
+          else fresh.unionByName(
+            tagged(readSidecars(oldDvPaths, keyType), isNew = false))
+        val parts = math.max(1,
+          math.min(candidates.size, spark.sparkContext.defaultParallelism))
+        val sorted = all.repartition(parts, col("_file"))
+          .sortWithinPartitions("_file", "_key")
+        val writers = org.apache.spark.sql.graft.ParquetWriteBridge
+          .taskWriters(spark, ManifestStore.dvSchema(keyType))
+        Files.createDirectories(Paths.get(root, "files"))
+        val stage = Paths.get(root, s"_stage_dv_${java.util.UUID.randomUUID()}")
+        val stageDir = stage.toString
+        try {
+          spark.sparkContext.runJob(sorted.queryExecution.toRdd,
+            (ctx: org.apache.spark.TaskContext,
+             it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
+              ManifestStore.writeMaskTask(it, writers, keyType, stageDir,
+                ctx.partitionId(), ctx.taskAttemptId()))
+            .toSeq.flatten.map { case (fname, n, dir) =>
+              Files.move(Paths.get(dir), Paths.get(root, "files", dvNameFor(fname)),
+                StandardCopyOption.ATOMIC_MOVE)
+              fname -> n
+            }.toMap
+        } finally deleteRecursively(stage)
     }
-    Files.createDirectories(Paths.get(root, "files"))
-    val maskCounts: Map[String, Long] = if (newMaskNames.isEmpty)
-      Map.empty
-    else {
-      val oldDvPaths = touched
-        .filter(f => newMaskNames(f.name) && f.dv.isDefined)
-        .map(f => s"$root/files/${f.dv.get}")
-      val combined0 = newMasks.get
-      val combined = (if (oldDvPaths.isEmpty) combined0
-        else combined0.unionByName(spark.read.parquet(oldDvPaths: _*)
-          .select(col("_file"), col("_key").cast(keyType))))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val counts = combined.groupBy("_file").count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val stage = Paths.get(root,
-          s"_stage_dv_${java.util.UUID.randomUUID()}")
-        // repartition by the partition column: each file's mask rows land
-        // in one task -> one part file per directory
-        combined.withColumn("_p", col("_file"))
-          .repartition(col("_p"))
-          .write.partitionBy("_p").parquet(stage.toString)
-        counts.keys.foreach { fname =>
-          Files.move(stage.resolve(s"_p=$fname"),
-            Paths.get(root, "files", dvNameFor(fname)),
-            StandardCopyOption.ATOMIC_MOVE)
-        }
-        deleteRecursively(stage)
-        counts
-      } finally combined.unpersist()
-    }
-    val updated = touched.map { f =>
+    val updated = candidates.map { f =>
       if (!maskCounts.contains(f.name)) f
       else f.copy(dv = Some(dvNameFor(f.name)), dvRows = maskCounts(f.name))
     }
@@ -4334,7 +4452,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
       val live =
         if (dvPaths.isEmpty) data
         else {
-          val dvDf = dvSide(dvPaths, candidates.map(_.dvRows).sum)
+          val dvDf = dvSide(dvPaths, candidates.map(_.dvRows).sum, keyType)
           data.join(dvDf,
             data("_file") === dvDf("_file") &&
               data(keyField) === dvDf("_key"), "left_anti")
@@ -4350,7 +4468,10 @@ final class ManifestStore(val root: String, spark: SparkSession,
         try {
           if (matchedRows.isEmpty) Right(None)
           else {
-            val (updated, maskCounts) = applyMasks(m.files, Some(matches), keyType)
+            val (maskedCandidates, maskCounts) =
+              applyMasks(candidates, Some(matches), keyType)
+            val byName = maskedCandidates.map(f => f.name -> f).toMap
+            val updated = m.files.map(f => byName.getOrElse(f.name, f))
             val cdc = if (!cdfEnabled) None
               else writeCdcFile(matchedRows
                 .select(schema.fieldNames.toSeq.map(col): _*)
@@ -4600,17 +4721,19 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * batch keys — both sides are small, the table itself is never consulted.
     * The string-serialized stats and the batch keys are both cast through
     * `keyType` so the containment test runs in the key's native ordering.
+    * A left-semi probe: duplicate keys cannot change its answer, so the
+    * keys are not deduplicated here (the merges pass their per-key net;
+    * [[readHit]] dedupes its arbitrary key frame, [[lookup]] its Seq).
     */
   private def hitFileNames(netP: DataFrame, files: Seq[FileEntry],
                            keyType: org.apache.spark.sql.types.DataType): Set[String] =
     if (files.isEmpty) Set.empty
     else {
-      // ONE probe pass (r18; guide §1.2/§2.4 — this used to be two
-      // sequential passes, each re-scanning and re-distincting the batch
-      // keys; 6 -> 3 scheduler jobs per intersection, pinned in
+      // ONE probe pass (this used to be two sequential passes, each
+      // re-scanning and re-distincting the batch keys; pinned in
       // BloomFileSkipSpec): range intersection over stats already in
-      // memory — a file
-      // survives iff some batch key lands in its [min,max] — AND, where
+      // memory — a file survives iff some batch key lands in its
+      // [min,max] — AND, where
       // zone maps are blind (bucketed layouts, merge-grown overlap), the
       // per-file key Bloom sharpening, in a single left-semi probe.
       //
@@ -4641,8 +4764,8 @@ final class ManifestStore(val root: String, spark: SparkSession,
         .otherwise(sidecarMayContain(col("_bn"),
           statSerialize(col("_k"), keyType)))
       broadcast(statsDf)
-        .join(netP.select(col(Changelog.KeyCol).cast(keyType).as("_k"))
-          .distinct(), cond, "left_semi")
+        .join(netP.select(col(Changelog.KeyCol).cast(keyType).as("_k")),
+          cond, "left_semi")
         .collect().map(_.getString(0)).toSet
     }
 
@@ -5687,13 +5810,5 @@ final class ManifestStore(val root: String, spark: SparkSession,
         (stageVictims.map(_.getFileName.toString) ++ dataVictims).sorted
       }
     }
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(deleteRecursively) finally s.close()
-    }
-    Files.deleteIfExists(p)
   }
 }

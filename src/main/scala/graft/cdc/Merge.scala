@@ -77,19 +77,19 @@ object Merge {
     // Batch-sized: pin it so the two consumers below share one evaluation of
     // the (JSON parse + dedup shuffle) lineage.
     val netP = net.persist(StorageLevel.MEMORY_AND_DISK)
-    var curTsP: Option[DataFrame] = None
 
     val live =
       if (tsGuard) {
         // Current ts of the touched keys only: semi-reduce the (huge)
         // snapshot by broadcasting the (small) batch keys — the snapshot
         // side streams, nothing big shuffles, result is at most batch-sized.
+        // Not pinned: its one consumer is the join below, whose exchange
+        // both branches of the result reuse, so a cache would only add a
+        // materialisation job.
         val curTs = snap
           .join(side(netP.select(col(Changelog.KeyCol))),
             snap(keyField) === col(Changelog.KeyCol), "left_semi")
           .select(col(keyField).as("_k"), col(LastTsCol).as("_cur_ts"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        curTsP = Some(curTs)
         netP.join(side(curTs), netP(Changelog.KeyCol) === col("_k"), "left")
           .filter(col("_cur_ts").isNull || col(Changelog.TsCol) >= col("_cur_ts"))
           .drop("_k", "_cur_ts")
@@ -101,7 +101,7 @@ object Merge {
 
     val kept = snap.join(side(touched), Seq(keyField), "left_anti")
     val result = kept.unionByName(upserts.select(kept.columns.map(col).toSeq: _*))
-    (result, live, () => { netP.unpersist(); curTsP.foreach(_.unpersist()) })
+    (result, live, () => { netP.unpersist(); () })
   }
 
   /** K5: idempotent insert-only merge (ref: archive/...stable_v3.py:343-346)

@@ -167,8 +167,13 @@ final class ManifestCdcStream(
   // same path) starts a new lineage with fresh batch ids
   private lazy val streamId = CdcStream.lineageId(checkpointDir)
 
-  private def postgresNet(batch: DataFrame): NetBatch = {
-    val fields = SchemaTracker.resolve(batch, fieldsCache, cacheDir)
+  /** The Postgres step takes its emptiness check from the schema-block
+    * pass: one job answers both (None = an empty batch).
+    */
+  private def postgresNet(batch: DataFrame): Option[NetBatch] = {
+    val (nonEmpty, blocks) = SchemaTracker.scan(batch)
+    if (!nonEmpty) return None
+    val fields = SchemaTracker.resolveBlocks(blocks, fieldsCache, cacheDir)
     if (!fieldsCache.contains(fields)) fieldsCache = Some(fields)
     val withSeq =
       if (batch.columns.contains(Changelog.SeqCol)) batch
@@ -188,30 +193,32 @@ final class ManifestCdcStream(
         .select("sql_text")
         .write.mode("overwrite").text(s"$dir/batch_$batchId")
     }
-    NetBatch(net, StructType(saved.map(f =>
-      StructField(f.name, Envelope.sparkType(f.dbzType)))), audit)
+    Some(NetBatch(net, StructType(saved.map(f =>
+      StructField(f.name, Envelope.sparkType(f.dbzType)))), audit))
   }
 
-  private def mongoNet(batch: DataFrame, evolveSchema: Boolean): NetBatch = {
+  private def mongoNet(batch: DataFrame, evolveSchema: Boolean)
+      : Option[NetBatch] = if (batch.isEmpty) None else {
     val existing = store.currentManifest.map(m =>
       StructType.fromDDL(m.schemaDDL).fieldNames.toSeq
         .filterNot(_ == Merge.LastTsCol))
     val (net, fields, cleanup) = MongoPipeline.conformedNet(batch, keyField,
       existing, columnsToSave, evolveSchema)
-    NetBatch(net, StructType(fields.map(StructField(_, StringType))),
-      cleanup = cleanup)
+    Some(NetBatch(net, StructType(fields.map(StructField(_, StringType))),
+      cleanup = cleanup))
   }
 
-  private val netStep: DataFrame => NetBatch = changeFormat match {
+  /** The per-format net-change step; None for an empty batch, which
+    * commits nothing and consumes no batch id.
+    */
+  private val netStep: DataFrame => Option[NetBatch] = changeFormat match {
     case ManifestCdcStream.Postgres      => postgresNet
     case ManifestCdcStream.Mongo(evolve) => mongoNet(_, evolve)
   }
 
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     batchInProgress = true
-    try {
-      if (batch.isEmpty) return
-      val step = netStep(batch)
+    try netStep(batch).foreach { step =>
       try mergeBatch(step, batchId) finally step.cleanup()
     } finally batchInProgress = false
   }

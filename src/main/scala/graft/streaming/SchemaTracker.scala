@@ -3,6 +3,7 @@ package graft.streaming
 import graft.cdc.Envelope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-batch schema resolution for the Postgres envelope path of
   * [[ManifestCdcStream]].
@@ -37,21 +38,47 @@ private[graft] object SchemaTracker {
         "lossless widening; reprocessing this source requires a new table " +
         "(a stale cast would overflow values to silent nulls)")
 
+  /** ONE pass over the batch (one Spark job, no shuffle): whether it has
+    * any row, and its DISTINCT schema blocks — deduplicated inside each
+    * partition, merged on the driver, so only one exemplar string per
+    * variant and partition leaves the executors. The Postgres step of
+    * [[ManifestCdcStream]] takes its emptiness check from the same pass.
+    */
+  def scan(batch: DataFrame): (Boolean, Seq[String]) = {
+    val parts = batch
+      .select(get_json_object(col("value").cast("string"), "$.schema"))
+      .queryExecution.toRdd
+      .mapPartitions { it =>
+        var rows = false
+        val seen = scala.collection.mutable.LinkedHashSet.empty[UTF8String]
+        it.foreach { r =>
+          rows = true
+          if (!r.isNullAt(0)) {
+            val s = r.getUTF8String(0)
+            if (!seen.contains(s)) seen += s.clone() // rows reuse buffers
+          }
+        }
+        Iterator.single((rows, seen.iterator.map(_.toString).toArray))
+      }
+      .collect()
+    (parts.exists(_._1), parts.toSeq.flatMap(_._2).distinct)
+  }
+
   /** Resolve the batch's field list against the cached one, persisting any
     * evolution to `cacheDir`. Inference reads every DISTINCT schema block
-    * in the batch (the groupBy collapses distributed-side; only one
-    * exemplar string per variant reaches the driver), so a column added by
-    * DDL mid-batch is seen even when the first event predates it. Events
-    * without a schema block fall back to the cache.
+    * in the batch ([[scan]]), so a column added by DDL mid-batch is seen
+    * even when the first event predates it. Events without a schema block
+    * fall back to the cache.
     */
   def resolve(batch: DataFrame, cached: Option[Seq[Envelope.FieldInfo]],
-              cacheDir: String): Seq[Envelope.FieldInfo] = {
-    val blocks = batch
-      .select(get_json_object(col("value").cast("string"), "$.schema").as("s"))
-      .filter(col("s").isNotNull)
-      .groupBy(md5(col("s"))).agg(first(col("s")).as("s"))
-      .select("s").collect().map(_.getString(0))
-    val variants = blocks.toSeq.flatMap(b =>
+              cacheDir: String): Seq[Envelope.FieldInfo] =
+    resolveBlocks(scan(batch)._2, cached, cacheDir)
+
+  /** [[resolve]] over schema blocks already collected by [[scan]]. */
+  def resolveBlocks(blocks: Seq[String],
+                    cached: Option[Seq[Envelope.FieldInfo]],
+                    cacheDir: String): Seq[Envelope.FieldInfo] = {
+    val variants = blocks.flatMap(b =>
       scala.util.Try(Envelope.inferFieldInfo(s"""{"schema":$b}""")).toOption)
     val inferredOpt =
       if (variants.isEmpty) None

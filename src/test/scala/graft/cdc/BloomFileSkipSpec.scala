@@ -120,10 +120,10 @@ class BloomFileSkipSpec extends SparkSpec {
         Thread.sleep(500) // listener bus drains async
         spark.sparkContext.removeSparkListener(listener)
       }
-    // one probe PASS = 3 scheduler jobs under AQE (keys distinct, probe
-    // join, collect); the pre-r18 two-phase intersection ran the same
-    // pipeline twice = 6 (measured on this exact test before the change).
-    // A regression back to per-phase probing trips this.
+    // one probe PASS = 3 scheduler jobs under AQE, with or without a key
+    // distinct (the lookup's keys are a local relation, deduped on the
+    // driver); the pre-r18 two-phase intersection ran the same pipeline
+    // twice = 6. A regression back to per-phase probing trips this.
     assert(jobs.get() <= 3,
       s"range+bloom intersection must plan in ONE pass (<= 3 AQE stage " +
         s"jobs; the old two-phase path ran 6), ran ${jobs.get()}")
@@ -280,6 +280,26 @@ class BloomFileSkipSpec extends SparkSpec {
     // for fresh names; live ones still skip)
     assert(spark.read.format("graft").load(root)
       .filter(col("id") === 123L).count() == 1)
+  }
+
+  test("renameColumn renames bloomfiltercols; later writes keep the bloom") {
+    val root = Files.createTempDirectory("bloomrn").toString
+    ManifestStore.writeTableProps(root,
+      Map("bloomfiltercols" -> "v", "bloomfilter" -> "4096"))
+    val st = new ManifestStore(root, spark, "id")
+    st.commit((0L until 400L).map(i => (i, s"v$i")).toDF("id", "v"),
+      batchId = 0, nFiles = 4, statsCols = Seq("v"))
+    val before = st.currentManifest.get.files.map(_.name).toSet
+    st.renameColumn("v", "w")
+    assert(ManifestStore.readTableProps(root).get("bloomfiltercols")
+      .contains("w"))
+    assert(st.optimize(targetFiles = 1).isDefined)
+    val fresh = st.currentManifest.get.files.filterNot(f => before(f.name))
+    assert(fresh.nonEmpty)
+    // sidecars stay keyed by the column's PHYSICAL name, which is `v`
+    assert(fresh.forall(_.colBlooms.keySet == Set("v")),
+      fresh.map(_.colBlooms))
+    assert(st.read().get.filter(col("w") === "v123").count() == 1L)
   }
 
   test("secondary-column blooms prune a scattered non-key equality") {

@@ -193,10 +193,9 @@ class FusedWriteSpec extends SparkSpec {
     val st = new ManifestStore(root, spark, "id")
     st.commit(mkDf.withColumn("grp", concat(lit("cell-"), col("grp"))),
       batchId = 0, nFiles = 6, statsCols = Seq("opt", "grp"))
-    st.renameColumn("grp", "segment") // partitioncol follows the rename
+    // partitioncol and bloomfiltercols follow the renames
+    st.renameColumn("grp", "segment")
     st.renameColumn("opt", "option")
-    ManifestStore.writeTableProps(root, ManifestStore.readTableProps(root) +
-      ("bloomfiltercols" -> "option"))
     val mapped = st.currentManifest.get
     assert(mapped.colMap == Map("segment" -> "grp", "option" -> "opt"))
     val fields = Seq("id", "option", "segment", "score")
