@@ -107,15 +107,12 @@ object CdfBench {
         .filter(col("id") < hi))).min
 
     // STREAMING side (r14, vectorized micro-batches): drain the snapshot
-    // + captured feed through the STREAMING source with the columnar
-    // path off vs on — the delta is the row-iterator tax a consumer
-    // paid per epoch before r14. AvailableNow terminates when drained.
-    def drainStream(tag: String, columnar: Boolean,
-                    pruneFilter: Option[String] = None): Double = {
-      spark.conf.set("spark.graft.read.streamColumnar", columnar.toString)
-      // pin minRows=0 so the A/B stays pure columnar-vs-row: the r15
-      // small-batch demotion would otherwise silently flip the pruned
-      // leg (sub-2M planned rows) to row mode on the "columnar" setting
+    // + captured feed through the columnar STREAMING source.
+    // AvailableNow terminates when drained.
+    def drainStream(tag: String, pruneFilter: Option[String] = None): Double = {
+      // pin minRows=0 so the drain stays columnar: the r15 small-batch
+      // demotion would otherwise flip the pruned leg (sub-2M planned
+      // rows) to row mode
       spark.conf.set("spark.graft.read.streamColumnarMinRows", "0")
       try timed {
         var r = spark.readStream.format("graft")
@@ -128,17 +125,12 @@ object CdfBench {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-      } finally {
-        spark.conf.unset("spark.graft.read.streamColumnar")
-        spark.conf.unset("spark.graft.read.streamColumnarMinRows")
-      }
+      } finally spark.conf.unset("spark.graft.read.streamColumnarMinRows")
     }
-    val tStreamRow = drainStream("row", columnar = false)
-    val tStreamCol = drainStream("col", columnar = true)
+    val tStreamCol = drainStream("col")
     // a keyed consumer's drain: the pruneFilter option cuts the planned
     // files of every micro-batch to the matching key range
-    val tStreamPruned = drainStream("pruned", columnar = true,
-      pruneFilter = Some(s"id < $hi"))
+    val tStreamPruned = drainStream("pruned", pruneFilter = Some(s"id < $hi"))
 
     // PACED KEYED BOOTSTRAP (r15 skip-ahead): a byte-budgeted AvailableNow
     // drain of ONE key range (1 of 64 key-clustered files). The budget
@@ -207,7 +199,6 @@ object CdfBench {
       s""""backfill_feed_sec":${f"$tBackfill%.2f"},""" +
       s""""direct_scan_sec":${f"$tDirect%.2f"},""" +
       s""""pruned_feed_sec":${f"$tPruned%.2f"},""" +
-      s""""stream_drain_sec_row":${f"$tStreamRow%.2f"},""" +
       s""""stream_drain_sec_columnar":${f"$tStreamCol%.2f"},""" +
       s""""stream_drain_sec_pruned":${f"$tStreamPruned%.2f"},""" +
       s""""paced_keyed_sec":${f"$tPacedKeyed%.2f"},""" +

@@ -728,49 +728,6 @@ object ManifestStore {
     }.toMap
   }
 
-  /** Apply a column mapping to `logical`, producing the PHYSICAL (on-disk)
-    * schema: top-level names map via their own entries; STRUCT FIELDS map
-    * via dotted full-path entries at ANY depth ("a.b.c" — the mapping
-    * Delta calls nested column mapping; map/array element contents never
-    * map, their DDL is refused at the ALTER surface). Columns without an
-    * entry pass through unchanged, so the helper is safe on pruned
-    * subsets and on frames carrying writer-internal columns.
-    */
-  /** Driver-side parser + ordering for serialized per-file stats, when the
-    * type's string form is primitively parseable — the fast path of
-    * [[ManifestStore.topNFiles]]. Timestamps serialize as epoch micros
-    * (see `statDeserialize`). Strings compare as UTF8String (UTF-8 byte
-    * order) — Spark's sort order, which diverges from JVM
-    * `Ordering[String]` (UTF-16 code units) once supplementary characters
-    * mix with BMP chars above U+E000. ISO dates parse to epoch days so
-    * signed and 5-digit years order numerically, not lexicographically.
-    * Types not listed (decimals, binaries) return None and callers fall
-    * back to the typed in-Spark compare.
-    */
-  private[cdc] def statParser(dt: org.apache.spark.sql.types.DataType)
-      : Option[(String => Any, Ordering[Any])] = {
-    import org.apache.spark.sql.types._
-    def ord[T](implicit o: Ordering[T]): Ordering[Any] =
-      o.asInstanceOf[Ordering[Any]]
-    val utf8Ord: Ordering[Any] = new Ordering[Any] {
-      def compare(a: Any, b: Any): Int =
-        a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-          .compareTo(b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    }
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType | TimestampType =>
-        Some(((s: String) => s.toLong, ord[Long]))
-      case FloatType | DoubleType =>
-        Some(((s: String) => s.toDouble, ord[Double]))
-      case StringType =>
-        Some(((s: String) =>
-          org.apache.spark.unsafe.types.UTF8String.fromString(s), utf8Ord))
-      case DateType =>
-        Some(((s: String) => parseIsoDateToEpochDay(s), ord[Long]))
-      case _ => None
-    }
-  }
-
   /** Epoch day of a date in the store's serialized form (Spark's
     * date→string cast: `[+|-]y+-MM-dd` with a sign for BCE and an
     * unbounded year width), parsed by splitting fields rather than a
@@ -786,6 +743,14 @@ object ManifestStore {
     ).toEpochDay
   }
 
+  /** Apply a column mapping to `logical`, producing the PHYSICAL (on-disk)
+    * schema: top-level names map via their own entries; STRUCT FIELDS map
+    * via dotted full-path entries at ANY depth ("a.b.c" — the mapping
+    * Delta calls nested column mapping; map/array element contents never
+    * map, their DDL is refused at the ALTER surface). Columns without an
+    * entry pass through unchanged, so the helper is safe on pruned
+    * subsets and on frames carrying writer-internal columns.
+    */
   def toPhysical(logical: StructType, colMap: Map[String, String]): StructType =
     if (colMap.isEmpty) logical
     else {
@@ -805,14 +770,16 @@ object ManifestStore {
     }
 
   /** Typed driver-side interpretation of ONE column's serialized zone-map
-    * stats, for [[ManifestStore.prunedFiles]]' no-job evaluation path:
+    * stats — the one evaluator behind planning's stats consumers
+    * ([[ManifestStore.prunedFiles]], exactness, stats-answered aggregates,
+    * top-N, optimize's overlap groups), none of which runs a Spark job:
     * `parse` brings a recorded stat string into the column's comparison
     * domain (the exact inverse of `statSerialize` — timestamps are epoch
     * micros, dates epoch days, strings UTF8String so ordering is Spark's
     * binary collation); `convert` brings a pushed predicate value into
     * the SAME domain (mirroring `lit(v).cast(dt)` for the value shapes
     * Spark's filter pushdown actually produces — anything else refuses
-    * with None and the caller falls back to the in-Spark path); `ord` is
+    * with None and [[probeValue]] evaluates the cast itself); `ord` is
     * the comparison Spark itself would run (NaN-greatest total orders for
     * floats); `render` maps a domain value to the exact string
     * `statSerialize` would emit — the Bloom sidecars hashed that
@@ -871,10 +838,9 @@ object ManifestStore {
           {
             // the same micros Spark's fromJavaTimestamp / instantToMicros
             // produce — getNanos carries the sub-milli tail for Timestamp.
-            // A raw Long is REFUSED: the Column path evaluates it as
-            // `lit(long).cast(timestamp)` = epoch SECONDS, and treating it
-            // as internal micros here made the two paths disagree by 10^6
-            // — fall back wholesale so they can never mis-prune apart.
+            // A raw Long is REFUSED: `lit(long).cast(timestamp)` reads it
+            // as epoch SECONDS, not internal micros — probeValue runs
+            // that cast instead.
             case t: java.sql.Timestamp =>
               Some(t.getTime * 1000L + (t.getNanos / 1000) % 1000)
             case i: java.time.Instant =>
@@ -971,7 +937,7 @@ object ManifestStore {
           v => {
             val d = v.asInstanceOf[Long]
             // DateType is Int days internally; a probe beyond that range
-            // cannot be a column value — refuse, callers fall back
+            // cannot be a column value — refuse: no Bloom test
             if (d == d.toInt.toLong) Some(dateFmt.format(d.toInt)) else None
           }))
       case BooleanType =>
@@ -985,8 +951,8 @@ object ManifestStore {
           v => Some(v.toString)))
       case TimestampNTZType =>
         // zone-free: stats serialize via `cast(ntz as string)` and parse
-        // back through Spark's OWN parser (the literal function the
-        // Column path's statDeserialize cast runs), probe values convert
+        // back through Spark's OWN parser (the literal function
+        // statDeserialize's cast runs), probe values convert
         // through Spark's own localDateTimeToMicros, and renderings come
         // from Spark's own fraction formatter (the renderer behind the
         // NTZ string cast — probe-verified byte-identical across whole
@@ -1018,7 +984,7 @@ object ManifestStore {
               case _                       => None
             }
             // exact fit only: cast-to-type rounding or precision overflow
-            // would need Spark's own semantics — refuse, fall back
+            // would need Spark's own semantics — refuse (probeValue casts)
             bd.flatMap { x =>
               scala.util.Try(x.setScale(d.scale)).toOption
                 .filter(_.precision <= d.precision)
@@ -1030,25 +996,51 @@ object ManifestStore {
     }
   }
 
+  /** A predicate value in `dom`'s comparison domain. `dom.convert` takes
+    * the shapes filter pushdown produces; any other value runs the cast a
+    * Column filter's `lit(v).cast(dt)` runs — a Catalyst `Cast` evaluated
+    * on the driver in the session time zone `tz`, with no job and the same
+    * semantics by construction (a raw Long on a TIMESTAMP column is epoch
+    * SECONDS, a String on a numeric column parses). Some(None): the cast
+    * yields NULL, a SQL-null operand. None: `Literal` rejects the value
+    * or the cast throws (ANSI) — callers answer conservatively.
+    */
+  private[cdc] def probeValue(dom: PruneDomain,
+                              dt: org.apache.spark.sql.types.DataType,
+                              v: Any, tz: String): Option[Option[Any]] = {
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    dom.convert(v) match {
+      case Some(x) => Some(Some(x))
+      case None => scala.util.Try(Cast(Literal(v), dt, Some(tz)).eval())
+        .toOption.map(x => Option(x).map { x => dt match {
+          // Catalyst's internal value -> the domain's
+          case FloatType | DoubleType | StringType | BooleanType => x
+          case _: DecimalType => x.asInstanceOf[Decimal].toBigDecimal
+          case _ => x.asInstanceOf[Number].longValue // ints, days, micros
+        }})
+    }
+  }
+
   /** Decimal probe values canonicalized onto the column's (precision,
     * scale) GRID before any pruning or exactness pass — every stored
     * value of a `decimal(p,s)` column is an exact multiple of 10^-s, so
     * a probe of a different scale rewrites to an equivalent predicate
     * over on-grid values (`x > 1.225` on decimal(10,2) IS `x > 1.22`;
     * `x >= 1.225` IS `x >= 1.23`), and a probe beyond the type's range
-    * collapses to a constant. This replaces what `lit(v).cast(dt)` used
-    * to do to such probes in the Column path — HALF_UP rounding, which
-    * OVER-PRUNED strict inequalities (`> 1.225` rounded to `> 1.23`
-    * drops a file whose max is 1.23 even though its 1.23 rows match) and
-    * nulled out-of-range probes (dropping every file under 3VL). Both
-    * prune paths consume the canonical form, so they agree AND are
-    * exact. Ops emitted beyond the input set: `alwaysfalse` (no row can
+    * collapses to a constant. This replaces what `lit(v).cast(dt)` would
+    * do to such probes — HALF_UP rounding, which OVER-PRUNES strict
+    * inequalities (`> 1.225` rounded to `> 1.23` drops a file whose max
+    * is 1.23 even though its 1.23 rows match) and nulls out-of-range
+    * probes (dropping every file under 3VL). Pruning and exactness both
+    * consume the canonical form, so they are exact. Ops emitted beyond
+    * the input set: `alwaysfalse` (no row can
     * satisfy — `= off-grid`, `> beyond-max`) and `notnull` (every
     * NON-null row satisfies — `!= off-grid`, `< beyond-max`; null rows
     * fail any comparison, which is exactly `IS NOT NULL` row semantics,
     * and the existing notnull machinery already prunes/exacts it).
     * Probes that aren't integral/BigDecimal (doubles, strings) pass
-    * through untouched to the legacy fallback behavior.
+    * through untouched to [[probeValue]]'s cast.
     */
   private[cdc] def canonDecimalPreds(schema: StructType,
       preds: Seq[(String, String, Any)]): Seq[(String, String, Any)] = {
@@ -1136,7 +1128,7 @@ object ManifestStore {
     * java.math.BigDecimal for decimals) — what lets the stats-answered
     * aggregate paths fold MIN/MAX driver-side instead of running a local
     * Spark job per aggregate. None = no guaranteed-identical conversion;
-    * callers fall back to the in-Spark fold.
+    * callers give no stats answer.
     */
   private[cdc] def statToExternal(dt: org.apache.spark.sql.types.DataType)
       : Option[String => Any] = {
@@ -1769,8 +1761,8 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * path: scan ONLY the files whose recorded [min,max] for `colName`
     * intersects [lo, hi], then apply the exact predicate. Works on the key
     * column of any store and on every `statsCols` column the initial
-    * commit declared. The containment test runs in Spark through the
-    * column's own type (same discipline as merge pruning); files without
+    * commit declared. The containment test is [[prunedFiles]]' driver
+    * evaluation through the column's typed domain; files without
     * stats for the column are read conservatively. Returns the filtered
     * rows plus what was skipped — on a 100 TB table a selective range
     * touches a handful of files and the scan cost IS `rowsRead`, not the
@@ -1794,17 +1786,12 @@ final class ManifestStore(val root: String, spark: SparkSession,
         m.files.size - toRead.size, toRead.map(_.liveRows).sum))
     }
 
-  /** A file can hold an `IN (...)` hit only if some value falls inside its
-    * [min,max]; past this many values the OR blows up the local filter
-    * expression, so the predicate stops pruning (conservative, and at that
-    * cardinality an In barely prunes range-clustered files anyway).
-    */
   /** Above this, an IN prunes by its RANGE ENVELOPE [min(vs), max(vs)]
     * instead of exact membership: the per-file check stays O(1) however
     * many join keys a runtime filter hands over, at the cost of keeping
     * files that sit inside the envelope's gaps (conservative, never
-    * wrong). Below it, exact membership runs as ONE flat array+exists
-    * expression — O(#values) wide, O(1) deep.
+    * wrong; phase 3 of [[prunedFiles]] restores the Bloom cut). Below it,
+    * each value's range and Bloom test runs per file.
     */
   private val InPruneMaxValues = 10000
 
@@ -1833,25 +1820,21 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * (for "in", value is the Seq of sought values — the shape a runtime
     * join-key filter arrives in). Columns without per-file stats (neither
     * the key nor a `statsCols` zone-map column) never prune; a file
-    * lacking a stat for a statted column survives conservatively, and a
-    * value Spark's `lit` cannot represent drops its predicate rather than
-    * the file. The containment test runs through each column's own type
-    * via the same [[statDeserialize]] round-trip merge pruning uses, in
-    * one local O(#files) job — the identical shape (and losslessness
-    * argument) as [[readWhere]]'s pruning join, generalized to
-    * conjunctions.
+    * lacking a usable stat for a statted column survives conservatively,
+    * and a value the column's domain cannot take keeps every file for its
+    * predicate. The containment test runs on the driver through each
+    * column's typed domain ([[ManifestStore.pruneDomain]]) — O(#files)
+    * metadata work, no Spark job.
     */
   private[graft] def prunedFiles(m: Manifest,
                                  preds0: Seq[(String, String, Any)])
       : Seq[FileEntry] = {
-    import org.apache.spark.sql.types.{StringType, StructField}
+    import org.apache.spark.sql.types.StringType
     val schema = StructType.fromDDL(m.schemaDDL)
     // decimal probes land on the column's scale grid FIRST (see
-    // [[ManifestStore.canonDecimalPreds]]) — both paths below consume the
-    // canonical form, so off-grid probes prune exactly instead of
-    // rounding (Column path) or falling back wholesale (driver path)
+    // [[ManifestStore.canonDecimalPreds]]), so off-grid probes prune
+    // exactly instead of rounding
     val preds = ManifestStore.canonDecimalPreds(schema, preds0)
-    def litable(v: Any) = scala.util.Try(lit(v)).isSuccess
     // NULL-predicate pruning from the recorded per-file null counts —
     // pure driver-side metadata, no job: `c IS NULL` drops files whose
     // recorded null count for c is ZERO; `c IS NOT NULL` drops files
@@ -1885,17 +1868,11 @@ final class ManifestStore(val root: String, spark: SparkSession,
       (c == keyField || m.statsCols.contains(c)) &&
         leafDt(c).isDefined && (op match {
           case "alwaysfalse" => true // canonDecimalPreds: no row can match
-          case ">" | ">=" | "<" | "<=" | "=" | "!=" => litable(v)
+          case ">" | ">=" | "<" | "<=" | "=" | "!=" => true
           case "startswith" =>
             leafDt(c).contains(StringType) && v.isInstanceOf[String]
           case "in" => v match {
-            // oversized lists only ever reach Try-guarded paths (range
-            // envelope, row-based probe serialization), so a bounded
-            // SAMPLE decides litability — a 100k-key runtime filter must
-            // not pay 100k lit() constructions just to be classified
-            case vs: Seq[_] if vs.sizeIs > InPruneMaxValues =>
-              vs.nonEmpty && vs.take(16).forall(litable)
-            case vs: Seq[_] => vs.nonEmpty && vs.forall(litable)
+            case vs: Seq[_] => vs.nonEmpty
             case _ => false
           }
           case _ => false
@@ -1909,493 +1886,274 @@ final class ManifestStore(val root: String, spark: SparkSession,
       case (c, op, v) => leafCanPrune(c, op, v)
     }
     val statted = preds.filter(canPrune)
-    if (statted.isEmpty || nullPruned.isEmpty) nullPruned
-    else {
-      // columns whose [min,max] the pruning pass consults — every
-      // decidable leaf, OR branches included
-      def pruneCols(p: (String, String, Any)): Seq[String] = p match {
-        case (_, "or", bs) =>
-          orBranches(bs).flatten.filter(canPrune).flatMap(pruneCols)
-        case (c, _, _) => Seq(c)
+    if (statted.isEmpty || nullPruned.isEmpty) return nullPruned
+    val tz = sessionTimeZone
+    // ---- PHASES 1+2 (driver-side, no Spark job): the conjunction —
+    // ranges, prefix windows, IN membership AND Bloom probes — evaluated
+    // over the driver-held stat strings through each column's typed
+    // domain ([[ManifestStore.pruneDomain]]: the inverse of statSerialize,
+    // Spark's own orderings). Three-valued logic mirrors SQL: None is
+    // NULL, and a null conjunction DROPS a file like a WHERE does. A file
+    // without a usable stat (missing, all-null or unparseable) keeps; a
+    // value the domain cannot take ([[ManifestStore.probeValue]] None)
+    // makes its leaf keep every file. Every pruning surface (scan
+    // planning, feed planning, the skip-ahead mask, merge/delete
+    // candidate derivation) funnels through here.
+    // Bloom sidecars load LAZILY per file after its range test passes,
+    // so loads are bounded by the files a scan would otherwise read,
+    // never the table (a point lookup on a 100k-file clustered table
+    // loads ~1 blob, not 100k). For IN lists the per-value (range AND
+    // bloom) coupling holds jointly, so a file can't survive on one
+    // value's range and another's bloom. False positives read a file;
+    // false negatives are impossible (the build covers every key the
+    // file ever held), so pruning stays sound. Oversized IN lists prune
+    // by their range envelope here; phase 3 restores their Bloom cut.
+    // 3VL conjunction: any false -> false, else any null -> null, else
+    // true.
+    def andAll(fns: Seq[FileEntry => Option[Boolean]],
+               f: FileEntry): Option[Boolean] = {
+      var sawNull = false
+      val it = fns.iterator
+      while (it.hasNext) it.next()(f) match {
+        case Some(false) => return Some(false)
+        case None        => sawNull = true
+        case _           =>
       }
-      val colsRef = statted.flatMap(pruneCols).distinct
-      // every =/IN leaf (OR branches included) — what decides which Bloom
-      // blob columns a probing pass attaches
-      def eqLeaves(p: (String, String, Any)): Seq[(String, String)] = p match {
-        case (_, "or", bs) =>
-          orBranches(bs).flatten.filter(canPrune).flatMap(eqLeaves)
-        case (c, op, _) if op == "=" || op == "in" => Seq((c, op))
-        case _ => Nil
+      if (sawNull) None else Some(true)
+    }
+    // two-term 3VL conjunction (hot: runs per candidate file per leaf)
+    def and2(a: Option[Boolean], b: Option[Boolean]): Option[Boolean] =
+      if (a.contains(false) || b.contains(false)) Some(false)
+      else if (a.isEmpty || b.isEmpty) None
+      else Some(true)
+    def or3(parts: Seq[FileEntry => Option[Boolean]], f: FileEntry)
+        : Option[Boolean] = {
+      var sawNull = false
+      val it = parts.iterator
+      while (it.hasNext) it.next()(f) match {
+        case Some(true) => return Some(true)
+        case None       => sawNull = true
+        case _          =>
       }
-      val allEq = statted.flatMap(eqLeaves)
-      // ---- DRIVER-SIDE EVALUATION (r16): the same conjunction — ranges,
-      // prefix windows, IN membership AND Bloom probes — computed
-      // directly over the driver-held stat strings, NO Spark job. Every
-      // pruning surface (scan planning, feed planning, the skip-ahead
-      // mask, merge/delete candidate derivation) funnels through here,
-      // and the Column path below costs one LOCAL job per call (~0.5 s
-      // cold — at sf0.1 often more than the scan it saves). The typed
-      // interpretation mirrors statSerialize/statDeserialize exactly
-      // ([[ManifestStore.pruneDomain]]); three-valued logic mirrors
-      // Column null semantics (None = SQL null, and a null conjunction
-      // DROPS a file exactly like `statsDf.filter`); any (type, value,
-      // op) combination whose driver semantics we cannot GUARANTEE
-      // identical aborts WHOLESALE to the Spark-job path, so the two
-      // paths can never disagree on a set they both computed
-      // (property-pinned old-vs-new in DriverPruneSpec).
-      // `spark.graft.prune.driverEval=false` forces the old path for A/B.
-      // Bloom sidecars load LAZILY per file after its range test passes —
-      // strictly fewer loads than the Column path's phase-2 attach, same
-      // O(range survivors) bound. Oversized IN lists degrade to their
-      // range envelope here exactly like the Column path; phase 3 below
-      // restores their Bloom pruning driver-side either way.
-      def driverEval(candidates: Seq[FileEntry]): Option[Seq[FileEntry]] = {
-        if (!spark.conf.getOption("spark.graft.prune.driverEval")
-              .flatMap(_.toBooleanOption).getOrElse(true)) return None
-        // 3VL conjunction over the ALREADY-COMPILED per-file conditions
-        // (no per-file thunk wrapping; measured NEUTRAL vs the thunked
-        // fold at 1M synthetic files — the ~0.5 µs/file constant lives
-        // in the leaf parse/Option work, not the wrappers — kept for
-        // the strictly-simpler shape). Fold: any false -> false, else
-        // any null -> null, else true (a null conjunction DROPS a file,
-        // exactly like the Column path's `statsDf.filter`).
-        def andAll(fns: Seq[FileEntry => Option[Boolean]],
-                   f: FileEntry): Option[Boolean] = {
-          var sawNull = false
-          val it = fns.iterator
-          while (it.hasNext) it.next()(f) match {
-            case Some(false) => return Some(false)
-            case None        => sawNull = true
-            case _           =>
-          }
-          if (sawNull) None else Some(true)
+      if (sawNull) None else Some(false)
+    }
+    val keep: Option[Boolean] = Some(true)
+    val keepAll: FileEntry => Option[Boolean] = _ => keep
+    def compileLeaf(c: String, op: String, v: Any)
+        : FileEntry => Option[Boolean] = {
+      if (op == "alwaysfalse") // constant-false leaf, stats irrelevant
+        return _ => Some(false)
+      val dt = leafDt(c).get
+      val dom = ManifestStore.pruneDomain(dt).getOrElse(return keepAll)
+      val phys = m.phys(c)
+      val mayBlob =
+        if (c == keyField) nullPruned.exists(_.bloom.isDefined)
+        else nullPruned.exists(_.colBlooms.contains(phys))
+      // the file's parsed (min, max); None = no usable stat, keep
+      def stats(f: FileEntry): Option[(Any, Any)] =
+        colRange(m, f, c).flatMap {
+          case (mnS, mxS) if mnS != null && mxS != null =>
+            scala.util.Try((dom.parse(mnS), dom.parse(mxS))).toOption
+          case _ => None
         }
-        // two-term 3VL conjunction without the thunk wrappers (hot:
-        // runs per candidate file per leaf)
-        def and2(a: Option[Boolean], b: Option[Boolean]): Option[Boolean] =
-          if (a.contains(false) || b.contains(false)) Some(false)
-          else if (a.isEmpty || b.isEmpty) None
-          else Some(true)
-        def or3(parts: Seq[FileEntry => Option[Boolean]], f: FileEntry)
-            : Option[Boolean] = {
-          var sawNull = false
-          val it = parts.iterator
-          while (it.hasNext) it.next()(f) match {
-            case Some(true) => return Some(true)
-            case None       => sawNull = true
-            case _          =>
-          }
-          if (sawNull) None else Some(false)
-        }
-        def compileLeaf(c: String, op: String, v: Any)
-            : Option[FileEntry => Option[Boolean]] = {
-          if (op == "alwaysfalse") // constant-false leaf, stats irrelevant
-            return Some((_: FileEntry) => Some(false))
-          val dt = leafDt(c).get
-          val dom = ManifestStore.pruneDomain(dt).getOrElse(return None)
-          val phys = m.phys(c)
-          val mayBlob =
-            if (c == keyField) candidates.exists(_.bloom.isDefined)
-            else candidates.exists(_.colBlooms.contains(phys))
-          // None = the Column path's `_min.isNull ||` fast-keep (missing
-          // stat or null min); otherwise the parsed 3VL (min, max) pair —
-          // an unparseable stat is a null operand, like a failed cast
-          def stats(f: FileEntry): Option[(Option[Any], Option[Any])] =
-            colRange(m, f, c) match {
-              case None             => None
-              case Some((null, _))  => None
-              case Some((mnS, mxS)) => Some((
-                scala.util.Try(dom.parse(mnS)).toOption,
-                Option(mxS).flatMap(s =>
-                  scala.util.Try(dom.parse(s)).toOption)))
+      def value(x: Any) = ManifestStore.probeValue(dom, dt, x, tz)
+      def blobOf(f: FileEntry): Option[Array[Byte]] =
+        (if (c == keyField) f.bloom else f.colBlooms.get(phys))
+          .flatMap(loadBloomSidecar)
+      // a stat against a value operand; a null operand is SQL NULL
+      def lt3(a: Any, x: Option[Any]) = x.map(dom.ord.lt(a, _))
+      def le3(a: Any, x: Option[Any]) = x.map(dom.ord.lteq(a, _))
+      def gt3(a: Any, x: Option[Any]) = x.map(dom.ord.gt(a, _))
+      def ge3(a: Any, x: Option[Any]) = x.map(dom.ord.gteq(a, _))
+      // probe hashes precomputed ONCE per value (not per file); None = no
+      // Bloom test (no sidecar, null operand, or a rendering that can't be
+      // guaranteed byte-identical). A zero-valued float/double probes
+      // BOTH "0.0" and "-0.0" (see legacyZeroRender).
+      def hashesFor(x: Option[Any]): Option[Seq[(Long, Long)]] =
+        if (!mayBlob) None
+        else x.flatMap(y => dom.render(y).map { s =>
+          (s +: ManifestStore.legacyZeroRender(dt, y).toSeq).map(r =>
+            graft.functions.BloomSketch.probeHashes(
+              org.apache.spark.unsafe.types.UTF8String.fromString(r)))
+        })
+      def bloomOk(f: FileEntry, hs: Option[Seq[(Long, Long)]]): Boolean =
+        hs.forall(h => blobOf(f) match {
+          case Some(blob) => h.exists(p => graft.functions.BloomSketch
+            .containsBlobHashed(blob, p._1, p._2))
+          case None => true
+        })
+      // range AND Bloom for one sought value
+      def holds(f: FileEntry, mn: Any, mx: Any, x: Option[Any],
+                hs: Option[Seq[(Long, Long)]]): Option[Boolean] = {
+        val r = and2(le3(mn, x), ge3(mx, x))
+        if (r.contains(false) || !bloomOk(f, hs)) Some(false) else r
+      }
+      op match {
+        case ">" | ">=" | "<" | "<=" => value(v).fold(keepAll) { x =>
+          (f: FileEntry) => stats(f).fold(keep) { case (mn, mx) =>
+            op match {
+              case ">"  => gt3(mx, x)
+              case ">=" => ge3(mx, x)
+              case "<"  => lt3(mn, x)
+              case _    => le3(mn, x)
             }
-          def blobOf(f: FileEntry): Option[Array[Byte]] =
-            (if (c == keyField) f.bloom else f.colBlooms.get(phys))
-              .flatMap(loadBloomSidecar)
-          def lt3(a: Option[Any], b: Any) = a.map(dom.ord.lt(_, b))
-          def le3(a: Option[Any], b: Any) = a.map(dom.ord.lteq(_, b))
-          def gt3(a: Option[Any], b: Any) = a.map(dom.ord.gt(_, b))
-          def ge3(a: Option[Any], b: Any) = a.map(dom.ord.gteq(_, b))
-          // probe hashes precomputed ONCE per value (not per file); None
-          // = the rendering can't be guaranteed byte-identical -> abort.
-          // A zero-valued float/double probes BOTH "0.0" and "-0.0":
-          // sidecars built before the r17 -0.0 normalization hashed the
-          // raw sign, so a pre-r17 blob over -0.0 rows would otherwise
-          // miss a (Spark-equal) zero probe and over-prune the file.
-          def hashesFor(x: Any): Option[Seq[(Long, Long)]] =
-            if (!mayBlob) Some(Seq((0L, 0L))) // never consulted
-            else dom.render(x).map { s =>
-              val renders = s +: ManifestStore.legacyZeroRender(dt, x).toSeq
-              renders.map(r => graft.functions.BloomSketch.probeHashes(
-                org.apache.spark.unsafe.types.UTF8String.fromString(r)))
-            }
-          def bloomOk(f: FileEntry, hs: Seq[(Long, Long)]): Boolean =
-            !mayBlob || (blobOf(f) match {
-              case Some(blob) => hs.exists(h => graft.functions.BloomSketch
-                .containsBlobHashed(blob, h._1, h._2))
-              case None => true
-            })
-          val keep: Option[Boolean] = Some(true)
-          op match {
-            case ">" | ">=" | "<" | "<=" =>
-              dom.convert(v).map { x =>
-                (f: FileEntry) => stats(f).fold(keep) { case (mn, mx) =>
-                  op match {
-                    case ">"  => gt3(mx, x)
-                    case ">=" => ge3(mx, x)
-                    case "<"  => lt3(mn, x)
-                    case _    => le3(mn, x)
-                  }
-                }
-              }
-            case "=" =>
-              for (x <- dom.convert(v); h <- hashesFor(x)) yield {
-                (f: FileEntry) => stats(f).fold(keep) { case (mn, mx) =>
-                  val r = and2(le3(mn, x), ge3(mx, x))
-                  if (r.contains(false)) Some(false)
-                  else if (!bloomOk(f, h)) Some(false)
-                  else r
-                }
-              }
-            case "!=" =>
-              dom.convert(v).map { x =>
-                (f: FileEntry) => stats(f).fold(keep) { case (mn, mx) =>
-                  Some(!(mn.exists(dom.ord.equiv(_, x)) &&
-                         mx.exists(dom.ord.equiv(_, x))))
-                }
-              }
-            case "startswith" =>
-              val p = v.asInstanceOf[String]
-              dom.convert(p).map { pv =>
-                ManifestStore.prefixSuccessor(p).flatMap(dom.convert) match {
-                  case Some(uv) =>
-                    (f: FileEntry) => stats(f).fold(keep) { case (mn, mx) =>
-                      and2(ge3(mx, pv), lt3(mn, uv))
-                    }
-                  case None => // all-max prefix: no upper bound
-                    (f: FileEntry) =>
-                      stats(f).fold(keep)(s => ge3(s._2, pv))
-                }
-              }
-            case "in" =>
-              val vs = v.asInstanceOf[Seq[Any]]
-              if (vs.size <= InPruneMaxValues) {
-                val conv = vs.map(dom.convert)
-                if (conv.exists(_.isEmpty)) None
-                else {
-                  val hs = conv.map(x => hashesFor(x.get))
-                  if (hs.exists(_.isEmpty)) None
-                  else {
-                    val pairs = conv.map(_.get).zip(hs.map(_.get))
-                    Some { (f: FileEntry) =>
-                      stats(f).fold(keep) { case (mn, mx) =>
-                        // exists() 3VL: any true -> true, else any null
-                        // -> null, else false
-                        var sawNull = false
-                        var hit = false
-                        val it = pairs.iterator
-                        while (!hit && it.hasNext) {
-                          val (x, h) = it.next()
-                          val r = and2(le3(mn, x), ge3(mx, x))
-                          val rr =
-                            if (r.contains(false)) r
-                            else if (!bloomOk(f, h)) Some(false)
-                            else r
-                          rr match {
-                            case Some(true) => hit = true
-                            case None       => sawNull = true
-                            case _          =>
-                          }
-                        }
-                        if (hit) Some(true)
-                        else if (sawNull) None else Some(false)
-                      }
-                    }
-                  }
-                }
-              } else {
-                // oversized: range envelope only, same as the Column path
-                val cmp = new Ordering[Any] {
-                  def compare(a: Any, b: Any): Int =
-                    a.asInstanceOf[Comparable[Any]].compareTo(b)
-                }
-                scala.util.Try((vs.min(cmp), vs.max(cmp))).toOption match {
-                  case Some((lo, hi)) =>
-                    for (lx <- dom.convert(lo); hx <- dom.convert(hi))
-                      yield { (f: FileEntry) =>
-                        stats(f).fold(keep) { case (mn, mx) =>
-                          and2(ge3(mx, lx), le3(mn, hx))
-                        }
-                      }
-                  case None => // non-comparable: no pruning
-                    Some((_: FileEntry) => keep)
-                }
-              }
-            case _ => None
           }
         }
-        def compile(p: (String, String, Any))
-            : Option[FileEntry => Option[Boolean]] = p match {
-          case (_, "or", bs) =>
-            val branches = orBranches(bs).map { b =>
-              val ls = b.filter(canPrune)
-              if (ls.isEmpty)
-                Some((_: FileEntry) => (Some(true): Option[Boolean]))
-              else {
-                val cs = ls.map(compile)
-                if (cs.exists(_.isEmpty)) None
-                else {
-                  val fns = cs.map(_.get)
-                  Some((f: FileEntry) => andAll(fns, f))
-                }
-              }
+        case "=" => value(v).fold(keepAll) { x =>
+          val hs = hashesFor(x)
+          (f: FileEntry) =>
+            stats(f).fold(keep) { case (mn, mx) => holds(f, mn, mx, x, hs) }
+        }
+        case "!=" =>
+          // only a SINGLE-VALUE file at exactly v prunes — its non-null
+          // rows are all v and its null rows fail `!= v` too. On
+          // partition/bucket-pure layouts this is `part != 'x'` skipping
+          // the x-partition wholesale; under stats.truncate min == max
+          // still implies exactness. A null operand prunes nothing.
+          value(v).flatten.fold(keepAll) { x =>
+            (f: FileEntry) => stats(f).fold(keep) { case (mn, mx) =>
+              Some(!(dom.ord.equiv(mn, x) && dom.ord.equiv(mx, x)))
             }
-            if (branches.exists(_.isEmpty)) None
+          }
+        case "startswith" =>
+          // prefix range [p, succ(p)): a file can hold a p-prefixed string
+          // iff its [min,max] intersects it. String stats compare as
+          // UTF8String binary = code-point order — the order succ()
+          // increments in; truncated stats only WIDEN the range.
+          val p = v.asInstanceOf[String]
+          dom.convert(p).fold(keepAll) { pv =>
+            ManifestStore.prefixSuccessor(p).flatMap(dom.convert) match {
+              case Some(uv) =>
+                (f: FileEntry) => stats(f).fold(keep) { case (mn, mx) =>
+                  Some(dom.ord.gteq(mx, pv) && dom.ord.lt(mn, uv))
+                }
+              case None => // all-max prefix: no upper bound
+                (f: FileEntry) =>
+                  stats(f).fold(keep)(s => Some(dom.ord.gteq(s._2, pv)))
+            }
+          }
+        case "in" =>
+          val vs = v.asInstanceOf[Seq[Any]]
+          if (vs.size <= InPruneMaxValues) {
+            val conv = vs.map(value)
+            if (conv.exists(_.isEmpty)) keepAll
             else {
-              val fns = branches.map(_.get)
-              Some((f: FileEntry) => or3(fns, f))
-            }
-          case (c, op, v) => compileLeaf(c, op, v)
-        }
-        val compiled = statted.map(compile)
-        if (compiled.exists(_.isEmpty)) None
-        else {
-          val conds = compiled.map(_.get)
-          Some(candidates.filter(f => andAll(conds, f).contains(true)))
-        }
-      }
-      // One pruning pass over `files`; blob columns attach only when
-      // `withBlooms` (phase 2). `bloomKey`/`bloomCols` say which blob
-      // columns exist in this pass.
-      def runPrune(files: Seq[FileEntry], withBlooms: Boolean)
-          : Seq[FileEntry] = {
-        val bloomKey = withBlooms && files.exists(_.bloom.isDefined) &&
-          allEq.exists(_._1 == keyField)
-        val bloomCols: Seq[String] =
-          if (!withBlooms) Nil
-          else allEq.collect {
-            case (c, _) if c != keyField &&
-              files.exists(_.colBlooms.contains(m.phys(c))) => c
-          }.distinct
-        val rows: Seq[org.apache.spark.sql.Row] = files.map { f =>
-          org.apache.spark.sql.Row.fromSeq((f.name +: colsRef.flatMap { c =>
-            colRange(m, f, c) match {
-              case Some((mn, mx)) => Seq(mn, mx)
-              case None           => Seq(null, null)
-            }
-          }) ++ (if (bloomKey)
-            Seq(f.bloom.flatMap(loadBloomSidecar).orNull)
-          else Nil) ++ bloomCols.map(c =>
-            f.colBlooms.get(m.phys(c)).flatMap(loadBloomSidecar).orNull))
-        }
-        val st = StructType((StructField("_f", StringType, nullable = false) +:
-          colsRef.flatMap(c => Seq(
-            StructField(s"_min_$c", StringType, nullable = true),
-            StructField(s"_max_$c", StringType, nullable = true)))) ++
-          (if (bloomKey)
-            Seq(StructField("_bloom",
-              org.apache.spark.sql.types.BinaryType, nullable = true))
-          else Nil) ++ bloomCols.map(c =>
-            StructField(s"_bloomc_$c",
-              org.apache.spark.sql.types.BinaryType, nullable = true)))
-        val statsDf = spark.createDataFrame(rows.asJava, st)
-        // true iff this file's Bloom admits the probe (or it has no Bloom
-        // / the predicate column carries none in this pass)
-        def bloomOk(c: String, probeStr: Column,
-                    extraProbes: Seq[Column] = Nil): Column = {
-          val blobCol =
-            if (c == keyField && bloomKey) Some(col("_bloom"))
-            else if (bloomCols.contains(c)) Some(col(s"`_bloomc_$c`"))
-            else None
-          blobCol.map(b => b.isNull ||
-              (probeStr +: extraProbes).map(bloomMayContain(b, _))
-                .reduce(_ || _))
-            .getOrElse(lit(true))
-        }
-        def leafCond(c: String, op: String, v: Any): Column = {
-          if (op == "alwaysfalse") return lit(false) // not isNull-guarded:
-          // the predicate is false for EVERY row, stats or no stats
-          val dt = leafDt(c).get
-          val mn = statDeserialize(col(s"`_min_$c`"), dt)
-          val mx = statDeserialize(col(s"`_max_$c`"), dt)
-          def value = lit(v).cast(dt)
-          val survive = op match {
-            case ">"  => mx > value
-            case ">=" => mx >= value
-            case "<"  => mn < value
-            case "<=" => mn <= value
-            case "="  => mn <= value && mx >= value &&
-              // pre-r17 sidecars hashed "-0.0" raw: a zero probe tests
-              // the legacy rendering too (see legacyZeroRender)
-              bloomOk(c, statSerialize(value, dt),
-                ManifestStore.legacyZeroRender(dt, v).map(lit(_)).toSeq)
-            case "!=" =>
-              // only a SINGLE-VALUE file at exactly v prunes — its
-              // non-null rows are all v (excluded) and its null rows fail
-              // `!= v` too (NULL semantics), so the whole file drops. On
-              // partition/bucket-pure layouts this is `part != 'x'`
-              // skipping the x-partition wholesale. Under stats.truncate
-              // min==max still implies exactness, so the cut stays sound.
-              !(mn <=> value && mx <=> value)
-            case "startswith" =>
-              // prefix range [p, succ(p)): a file can hold a p-prefixed
-              // string iff its [min,max] intersects it. String stats
-              // compare as UTF8String binary = code-point order — the
-              // order succ() increments in; `stats.truncate`d stats only
-              // WIDEN the range (bounds still bracket the rows), so the
-              // intersection test over-keeps, never over-prunes.
-              ManifestStore.prefixSuccessor(v.asInstanceOf[String]) match {
-                case Some(u) => mx >= value && mn < lit(u)
-                case None    => mx >= value // all-max prefix: no upper bound
-              }
-            case "in" =>
-              // FLAT, not folded: a reduce(_ || _) chain is O(#values)
-              // DEEP and a DSv2 runtime filter (DPP) can hand thousands
-              // of join keys here — the fold blew the driver stack at ~a
-              // few hundred values. array(...) is one node wide-N;
-              // exists adds O(1). Past InPruneMaxValues, degrade to the
-              // values' range envelope (two comparisons) so cost stays
-              // bounded at ANY key count — phase 3 below restores Bloom
-              // pruning for that case driver-side.
-              val vs = v.asInstanceOf[Seq[Any]]
-              if (vs.size <= InPruneMaxValues) {
-                val base = org.apache.spark.sql.functions.exists(
-                  array(vs.map(x => lit(x).cast(dt)): _*),
-                  x => mn <= x && mx >= x && bloomOk(c, statSerialize(x, dt)))
-                // a zero-valued float/double in the list also probes the
-                // pre-r17 "-0.0" rendering (see legacyZeroRender)
-                vs.find(x => ManifestStore.legacyZeroRender(dt, x).isDefined)
-                  match {
-                    case Some(z) =>
-                      val zc = lit(z).cast(dt)
-                      base || (mn <= zc && mx >= zc &&
-                        bloomOk(c, lit("-0.0")))
-                    case None => base
+              val pairs = conv.map(x => (x.get, hashesFor(x.get)))
+              (f: FileEntry) => stats(f).fold(keep) { case (mn, mx) =>
+                // exists() 3VL: any true -> true, else any null -> null,
+                // else false
+                var sawNull = false
+                var hit = false
+                val it = pairs.iterator
+                while (!hit && it.hasNext) {
+                  val (x, h) = it.next()
+                  holds(f, mn, mx, x, h) match {
+                    case Some(true) => hit = true
+                    case None       => sawNull = true
+                    case _          =>
                   }
-              } else {
-                val cmp = new Ordering[Any] {
-                  def compare(a: Any, b: Any): Int =
-                    a.asInstanceOf[Comparable[Any]].compareTo(b)
                 }
-                scala.util.Try((vs.min(cmp), vs.max(cmp))).toOption match {
-                  case Some((lo, hi)) =>
-                    mx >= lit(lo).cast(dt) && mn <= lit(hi).cast(dt)
-                  case None => lit(true) // non-comparable: no pruning
-                }
+                if (hit) Some(true) else if (sawNull) None else Some(false)
               }
+            }
+          } else {
+            // oversized: the values' range envelope only — two
+            // comparisons per file at ANY key count
+            val cmp = new Ordering[Any] {
+              def compare(a: Any, b: Any): Int =
+                a.asInstanceOf[Comparable[Any]].compareTo(b)
+            }
+            scala.util.Try((vs.min(cmp), vs.max(cmp))).toOption
+              .flatMap { case (lo, hi) =>
+                for (lx <- value(lo); hx <- value(hi)) yield
+                  (f: FileEntry) => stats(f).fold(keep) { case (mn, mx) =>
+                    and2(ge3(mx, lx), le3(mn, hx))
+                  }
+              }.getOrElse(keepAll) // non-comparable: no pruning
           }
-          col(s"`_min_$c`").isNull || survive
-        }
-        // OR nodes recurse: a file survives the node iff it survives ANY
-        // branch's decidable conjuncts (each branch re-using the same leaf
-        // machinery, so `=` leaves inside OR branches Bloom-probe too);
-        // undecidable leaves inside a branch contribute lit(true).
-        def predCond(p: (String, String, Any)): Column = p match {
-          case (_, "or", bs) =>
-            orBranches(bs).map { b =>
-              val ls = b.filter(canPrune)
-              if (ls.isEmpty) lit(true)
-              else ls.map(predCond).reduce(_ && _)
-            }.reduce(_ || _)
-          case (c, op, v) => leafCond(c, op, v)
-        }
-        val cond = statted.map(predCond).reduce(_ && _)
-        val keep = statsDf.filter(cond).collect().map(_.getString(0)).toSet
-        files.filter(f => keep(f.name))
+        case _ => keepAll
       }
-      // Phases 1+2 run driver-side when every leaf is typed-decidable
-      // there (the common case: low-ms instead of a ~0.5 s local job);
-      // otherwise the Column path computes the identical set in two
-      // passes:
-      // PHASE 1: ranges only — stats already in memory, zero sidecar I/O.
-      // PHASE 2: Bloom probes over the range SURVIVORS only, so sidecar
-      // loads are bounded by the files a scan would otherwise read, never
-      // the table (a point lookup on a 100k-file clustered table loads ~1
-      // blob, not 100k; on a bucketed table, ~#buckets). The full
-      // conjunction re-evaluates — for IN lists the per-value (range AND
-      // bloom) coupling must hold jointly, so a file can't survive on one
-      // value's range and another's bloom. False positives read a file;
-      // false negatives are impossible (the build covers every key the
-      // file ever held), so pruning stays sound.
-      val bloomed = driverEval(nullPruned).getOrElse {
-        val ranged = runPrune(nullPruned, withBlooms = false)
-        val probeNeeded = ranged.exists(f =>
-          (f.bloom.isDefined && allEq.exists(_._1 == keyField)) ||
-          allEq.exists { case (c, _) =>
-            c != keyField && f.colBlooms.contains(m.phys(c)) })
-        if (!probeNeeded) ranged else runPrune(ranged, withBlooms = true)
+    }
+    // OR nodes recurse: a file survives the node iff it survives ANY
+    // branch's decidable conjuncts (`=` leaves inside OR branches
+    // Bloom-probe too); a branch without one admits every file.
+    def compile(p: (String, String, Any)): FileEntry => Option[Boolean] =
+      p match {
+        case (_, "or", bs) =>
+          val branches = orBranches(bs).map { b =>
+            val fns = b.filter(canPrune).map(compile)
+            (f: FileEntry) => andAll(fns, f)
+          }
+          (f: FileEntry) => or3(branches, f)
+        case (c, op, v) => compileLeaf(c, op, v)
       }
-      // PHASE 3 (driver-side): IN lists past InPruneMaxValues degraded to
-      // their range envelope in the Column pass — exactly the DPP /
-      // runtime-filter case the sidecars were built for (on a
-      // hash-clustered/bucketed table a range envelope admits almost any
-      // join-key set). Probe each surviving file's blob against the full
-      // key set directly: double-hashes precomputed once per value, so the
-      // cost is O(survivors x values x numHashes) byte reads, bounded by
-      // the phase-1/2 survivors, never the table. Top-level conjuncts only
-      // — inside an OR one branch's Bloom miss can't veto a file.
-      val oversized = statted.collect {
-        case (c, "in", vs: Seq[_]) if vs.size > InPruneMaxValues => (c, vs)
-      }
-      if (oversized.isEmpty || bloomed.isEmpty) bloomed
-      else {
-        // driver-bill cap: the worst case (a file holding NONE of the
-        // keys) pays O(keys x numHashes) bit reads before it can be
-        // dropped, and the fold's total is O(survivors x keys x hashes)
-        // single-threaded — a 100k-key DPP filter over a 1k-file scan
-        // would otherwise stall planning for seconds. One shared budget
-        // of per-value probes across the WHOLE fold; once spent, the
-        // remaining files keep conservatively (their range envelope
-        // already held in phase 1 — skipping the probe loses pruning,
-        // never answers). A containing file exits on its FIRST hit
-        // (`exists` short-circuits), so budget burns fastest exactly
-        // where files don't contain the keys — the case worth capping.
-        // CACHE-COLD I/O bills the SAME budget (r15): each sidecar LOAD
-        // charges its byte size (1 byte = 1 probe unit — both ~ns-scale
-        // work; cache hits charge 0), so a cold pathological fold
-        // degrades to range-envelope keeps after ~InProbeBudget bytes of
-        // sidecar reads instead of paying O(survivors) loads before the
-        // probe cap can trip. A cache-miss load BIGGER than the
-        // remaining budget is refused up front (one file stat, r16) —
-        // the budget can no longer overshoot by a final oversized load.
-        // Conservative keeps only — never a false negative.
-        var budget = InProbeBudget
-        oversized.foldLeft(bloomed) { case (files, (c, vs)) =>
-          def blobOf(f: FileEntry): Option[String] =
-            if (c == keyField) f.bloom else f.colBlooms.get(m.phys(c))
-          if (budget <= 0L || !files.exists(blobOf(_).isDefined)) files
-          else {
-            val probes = serializeInProbes(vs, leafDt(c).get)
-            // zero probes (all-null list, or every value refused the stat
-            // cast): Spark's residual filter owns the semantics — keep
-            // everything rather than reason about cast edge cases here
-            if (probes.isEmpty) files
-            else files.filter { f =>
-              if (budget <= 0L) true // spent: keep, range envelope held
-              else blobOf(f) match {
-                case None => true // blob-less file never Bloom-skips
-                case Some(name) =>
-                  val (blob, readBytes) = ManifestStore.loadBloomBilledCapped(
-                    rootKey, java.nio.file.Paths.get(root, "files"), name,
-                    maxBytes = budget)
-                  budget -= readBytes
-                  blob match {
-                    case Some(blob) =>
-                      var i = 0
-                      var hit = false
-                      while (i < probes.length && !hit && budget > 0L) {
-                        val (h1, h2) = probes(i)
-                        hit = graft.functions.BloomSketch
-                          .containsBlobHashed(blob, h1, h2)
-                        budget -= 1L
-                        i += 1
-                      }
-                      // an undecided file (budget died mid-probe, or the
-                      // load itself spent it) keeps
-                      hit || (i < probes.length && !hit)
-                    case None => true
-                  }
-              }
+    val conds = statted.map(compile)
+    val bloomed = nullPruned.filter(f => andAll(conds, f).contains(true))
+    // PHASE 3 (driver-side): IN lists past InPruneMaxValues pruned by
+    // their range envelope above — exactly the DPP / runtime-filter case
+    // the sidecars were built for (on a hash-clustered/bucketed table a
+    // range envelope admits almost any join-key set). Probe each
+    // surviving file's blob against the full key set directly:
+    // double-hashes precomputed once per value, so the cost is
+    // O(survivors x values x numHashes) byte reads, bounded by the
+    // phase-1/2 survivors, never the table. Top-level conjuncts only —
+    // inside an OR one branch's Bloom miss can't veto a file.
+    val oversized = statted.collect {
+      case (c, "in", vs: Seq[_]) if vs.size > InPruneMaxValues => (c, vs)
+    }
+    if (oversized.isEmpty || bloomed.isEmpty) bloomed
+    else {
+      // driver-bill cap: the worst case (a file holding NONE of the keys)
+      // pays O(keys x numHashes) bit reads before it can be dropped, and
+      // the fold's total is O(survivors x keys x hashes) single-threaded
+      // — a 100k-key DPP filter over a 1k-file scan would otherwise stall
+      // planning for seconds. One shared budget of per-value probes
+      // across the WHOLE fold; once spent, the remaining files keep
+      // conservatively (their range envelope already held — skipping the
+      // probe loses pruning, never answers). A containing file exits on
+      // its FIRST hit, so budget burns fastest exactly where files don't
+      // contain the keys — the case worth capping. CACHE-COLD I/O bills
+      // the SAME budget (r15): each sidecar LOAD charges its byte size (1
+      // byte = 1 probe unit — both ~ns-scale work; cache hits charge 0),
+      // so a cold pathological fold degrades to range-envelope keeps
+      // after ~InProbeBudget bytes of sidecar reads. A cache-miss load
+      // BIGGER than the remaining budget is refused up front (one file
+      // stat, r16). Conservative keeps only — never a false negative.
+      var budget = InProbeBudget
+      oversized.foldLeft(bloomed) { case (files, (c, vs)) =>
+        def blobOf(f: FileEntry): Option[String] =
+          if (c == keyField) f.bloom else f.colBlooms.get(m.phys(c))
+        if (budget <= 0L || !files.exists(blobOf(_).isDefined)) files
+        else inProbes(vs, leafDt(c).get, tz) match {
+          // a value without a guaranteed probe, or zero probes (an
+          // all-null list): the residual filter owns the semantics
+          case None => files
+          case Some(probes) if probes.isEmpty => files
+          case Some(probes) => files.filter { f =>
+            if (budget <= 0L) true // spent: keep, range envelope held
+            else blobOf(f) match {
+              case None => true // blob-less file never Bloom-skips
+              case Some(name) =>
+                val (blob, readBytes) = ManifestStore.loadBloomBilledCapped(
+                  rootKey, java.nio.file.Paths.get(root, "files"), name,
+                  maxBytes = budget)
+                budget -= readBytes
+                blob match {
+                  case Some(blob) =>
+                    var i = 0
+                    var hit = false
+                    while (i < probes.length && !hit && budget > 0L) {
+                      val (h1, h2) = probes(i)
+                      hit = graft.functions.BloomSketch
+                        .containsBlobHashed(blob, h1, h2)
+                      budget -= 1L
+                      i += 1
+                    }
+                    // an undecided file (budget died mid-probe, or the
+                    // load itself spent it) keeps
+                    hit || (i < probes.length && !hit)
+                  case None => true
+                }
             }
           }
         }
@@ -2457,55 +2215,38 @@ final class ManifestStore(val root: String, spark: SparkSession,
     })
   }
 
-  /** The [[statSerialize]] renderings of an IN list's values, as
-    * precomputed Bloom double-hash pairs — rendered through the SAME cast
-    * expressions the Column-side probe uses (a driver-side
-    * reimplementation of Spark's cast-to-string would risk disagreeing on
-    * e.g. decimal/timestamp rendering and turn a formatting quirk into a
-    * missed file). Chunked so no single expression tree holds more than
-    * InPruneMaxValues literals; each chunk is one driver-local job.
+  /** An IN list's Bloom probes, as precomputed double-hash pairs: each
+    * value in its column's domain ([[ManifestStore.probeValue]]), rendered
+    * by `dom.render` — byte-identical to the stat serialization the
+    * sidecars hashed. NULL values, given or cast, never IN-match and probe
+    * nothing; a zero-valued float/double also probes the pre-r17 "-0.0"
+    * rendering (see legacyZeroRender). None when some value has no domain
+    * value or no guaranteed rendering: the caller keeps every file.
     */
-  private def serializeInProbes(vs: Seq[Any],
-                                dt: org.apache.spark.sql.types.DataType)
-      : Array[(Long, Long)] = {
-    def hashed(rows: Seq[org.apache.spark.sql.Row]): Array[(Long, Long)] =
-      rows.collect { case r if !r.isNullAt(0) =>
-        graft.functions.BloomSketch.probeHashes(
-          org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)))
-      }.toArray
-    val nonNull = vs.filterNot(_ == null) // NULL never IN-matches
-    if (nonNull.isEmpty) return Array.empty
-    // a zero-valued float/double in the list also probes the pre-r17
-    // "-0.0" rendering (see legacyZeroRender) — appended to whichever
-    // path below computed the normalized probes
-    val legacyZero: Array[(Long, Long)] =
-      if (nonNull.exists(x => ManifestStore.legacyZeroRender(dt, x).isDefined))
-        Array(graft.functions.BloomSketch.probeHashes(
-          org.apache.spark.unsafe.types.UTF8String.fromString("-0.0")))
-      else Array.empty
-    // FAST path: the values ride as ROWS of one local single-column
-    // relation, so the plan is O(1) wide however many join keys a runtime
-    // filter hands over — the previous chunked-literal form paid seconds
-    // of ANALYSIS on ten 10k-literal trees for a 100k-key IN (the r13 #7
-    // driver-bill finding). Same statSerialize cast as every other probe.
-    legacyZero ++ scala.util.Try {
-      val litT = org.apache.spark.sql.catalyst.expressions.Literal(nonNull.head).dataType
-      val df = spark.createDataFrame(
-        nonNull.map(org.apache.spark.sql.Row(_)).asJava,
-        StructType(Seq(org.apache.spark.sql.types.StructField(
-          "v", litT, nullable = true))))
-      hashed(df.select(statSerialize(col("v").cast(dt), dt).as("s"))
-        .collect().toSeq)
-    }.getOrElse {
-      // fallback: chunked literal arrays, for values whose external form
-      // only lit() understands
-      vs.grouped(InPruneMaxValues).flatMap { chunk =>
-        spark.range(1).select(explode(array(chunk.map(x =>
-          statSerialize(lit(x).cast(dt), dt)): _*)).as("s"))
-          .collect().toSeq
-      }.toSeq match { case rows => hashed(rows) }
+  private def inProbes(vs: Seq[Any], dt: org.apache.spark.sql.types.DataType,
+                       tz: String): Option[Array[(Long, Long)]] = {
+    val dom = ManifestStore.pruneDomain(dt).getOrElse(return None)
+    def hash(s: String) = graft.functions.BloomSketch.probeHashes(
+      org.apache.spark.unsafe.types.UTF8String.fromString(s))
+    val out = Array.newBuilder[(Long, Long)]
+    var legacyZero = false
+    val it = vs.iterator
+    while (it.hasNext) ManifestStore.probeValue(dom, dt, it.next(), tz) match {
+      case None          => return None
+      case Some(None)    => ()
+      case Some(Some(x)) =>
+        out += hash(dom.render(x).getOrElse(return None))
+        legacyZero ||= ManifestStore.legacyZeroRender(dt, x).isDefined
     }
+    if (legacyZero) out += hash("-0.0")
+    Some(out.result())
   }
+
+  /** The session time zone, in which a probe value's cast evaluates
+    * ([[ManifestStore.probeValue]]).
+    */
+  private def sessionTimeZone: String =
+    spark.conf.get("spark.sql.session.timeZone")
 
   /** Answer simple aggregates (COUNT(*) / COUNT(col) / MIN(col) /
     * MAX(col)) from manifest METADATA alone — Delta/Iceberg's
@@ -2536,9 +2277,9 @@ final class ManifestStore(val root: String, spark: SparkSession,
     *     ignore nulls).
     *
     * Values return in Scala form (the caller converts to its row format);
-    * min/max deserialize through the column's own type in one local
-    * O(#files) job — the same exactness discipline as every other stats
-    * consumer here.
+    * min/max fold on the driver through the column's typed domain
+    * ([[ManifestStore.pruneDomain]]) — no Spark job, and a stat that will
+    * not parse gives no answer.
     */
   /** The null count of `c` in `f`, treating the key as never-null (it is
     * the row identity; [[graft.cdc.Changelog.dedupLatest]] drops null-key
@@ -2558,32 +2299,29 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * result: the scan builder consumes such filters with no residual, and
     * stats-answered aggregates ([[aggFromStats]]) push through them.
     * None = not provable (unknown null counts, partial file coverage,
-    * unstatted column) — callers fall back to conservative pruning plus
-    * residual re-evaluation, never to a wrong answer. One local O(#files)
-    * metadata job, same typed-compare discipline as [[prunedFiles]].
+    * unstatted column, a value the column's domain cannot take) — callers
+    * fall back to conservative pruning plus residual re-evaluation, never
+    * to a wrong answer. Driver-side O(#files) metadata work through the
+    * same typed domains as [[prunedFiles]], no Spark job.
     */
   private[graft] def exactlyDecidedFiles(m: Manifest,
                                          preds1: Seq[(String, String, Any)])
       : Option[Seq[FileEntry]] = {
-    import org.apache.spark.sql.types.{StringType => SStr, StructField}
     if (preds1.isEmpty) return Some(m.files)
     val schema = StructType.fromDDL(m.schemaDDL)
     // the same grid canonicalization as [[prunedFiles]] (idempotent — the
     // nested prunedFiles call re-applies it): an off-grid decimal probe
-    // becomes exactly decidable (`>= 1.225` IS `>= 1.23` on the grid)
-    // instead of refusing driver-side; a canonical `alwaysfalse` fails
-    // the op allowlist below and the caller runs the real scan (rare,
-    // correct — the scan returns zero rows)
+    // becomes exactly decidable (`>= 1.225` IS `>= 1.23` on the grid); a
+    // canonical `alwaysfalse` fails the op allowlist below and the caller
+    // runs the real scan (rare, correct — the scan returns zero rows)
     val preds = ManifestStore.canonDecimalPreds(schema, preds1)
-    def litable(v: Any) = scala.util.Try(lit(v)).isSuccess
     // every predicate must be on a statted column with a recognized op
     val predsOk = preds.forall { case (c, op, v) =>
       (c == keyField || m.statsCols.contains(c)) &&
         ManifestStore.leafType(schema, c).isDefined && (op match {
-          case ">" | ">=" | "<" | "<=" | "=" | "!=" => litable(v)
+          case ">" | ">=" | "<" | "<=" | "=" | "!=" => true
           case "in" => v match {
-            case vs: Seq[_] =>
-              vs.nonEmpty && vs.size <= InPruneMaxValues && vs.forall(litable)
+            case vs: Seq[_] => vs.nonEmpty && vs.size <= InPruneMaxValues
             case _ => false
           }
           case "startswith" => v.isInstanceOf[String] &&
@@ -2597,120 +2335,74 @@ final class ManifestStore(val root: String, spark: SparkSession,
     val pruning = preds.filterNot(_._2 == "notnull")
     val candidates = if (pruning.isEmpty) m.files else prunedFiles(m, pruning)
     val predCols = preds.map(_._1).distinct
-    // DRIVER-SIDE exactness (r16): the all-rows-satisfy check through
-    // the same typed domains as prunedFiles' driver path — a file is
-    // exact iff its condition evaluates TRUE (SQL 3VL: a null condition
-    // fails, mirroring the Column path's `!coalesce(cond, false)`).
-    // None = some (type, value) has no guaranteed-identical driver
-    // semantics -> the Column job below decides instead.
-    def driverExact(): Option[Boolean] = {
-      if (!spark.conf.getOption("spark.graft.prune.driverEval")
-            .flatMap(_.toBooleanOption).getOrElse(true)) return None
-      val tests: Seq[Option[FileEntry => Boolean]] =
-        pruning.map { case (c, op, v) =>
-          val dt = ManifestStore.leafType(schema, c).get
-          ManifestStore.pruneDomain(dt).flatMap { dom =>
-            // per-side 3VL operands: None = missing stat / null /
-            // unparseable (what a failed cast yields in the Column path)
-            def stat3(f: FileEntry): (Option[Any], Option[Any]) =
-              colRange(m, f, c) match {
-                case None => (None, None)
-                case Some((mnS, mxS)) =>
-                  (Option(mnS).flatMap(s =>
-                    scala.util.Try(dom.parse(s)).toOption),
-                    Option(mxS).flatMap(s =>
-                      scala.util.Try(dom.parse(s)).toOption))
+    val tz = sessionTimeZone
+    // the all-rows-satisfy check per conjunct: a file is exact iff it
+    // holds; None = a value the column's domain cannot take — not exact
+    def exactTest(c: String, op: String, v: Any): Option[FileEntry => Boolean] = {
+      val dt = ManifestStore.leafType(schema, c).get
+      val dom = ManifestStore.pruneDomain(dt).getOrElse(return None)
+      // per-side operands: None = missing stat / null / unparseable
+      def stat2(f: FileEntry): (Option[Any], Option[Any]) =
+        colRange(m, f, c) match {
+          case None => (None, None)
+          case Some((mnS, mxS)) =>
+            (Option(mnS).flatMap(s => scala.util.Try(dom.parse(s)).toOption),
+              Option(mxS).flatMap(s => scala.util.Try(dom.parse(s)).toOption))
+        }
+      op match {
+        case ">" | ">=" | "<" | "<=" | "=" | "!=" =>
+          ManifestStore.probeValue(dom, dt, v, tz).map {
+            case None => (_: FileEntry) => false // a NULL operand never holds
+            case Some(x) => (f: FileEntry) =>
+              val (mn, mx) = stat2(f)
+              op match {
+                case ">"  => mn.exists(dom.ord.gt(_, x))
+                case ">=" => mn.exists(dom.ord.gteq(_, x))
+                case "<"  => mx.exists(dom.ord.lt(_, x))
+                case "<=" => mx.exists(dom.ord.lteq(_, x))
+                case "="  => mn.exists(dom.ord.equiv(_, x)) &&
+                  mx.exists(dom.ord.equiv(_, x))
+                // all rows provably differ from v iff the file's range
+                // excludes v (nulls are excluded by the zero-null rule)
+                case _ => mx.exists(dom.ord.lt(_, x)) ||
+                  mn.exists(dom.ord.gt(_, x))
               }
-            op match {
-              case ">" | ">=" | "<" | "<=" | "=" | "!=" =>
-                dom.convert(v).map { x => (f: FileEntry) =>
-                  val (mn, mx) = stat3(f)
-                  op match {
-                    case ">"  => mn.exists(dom.ord.gt(_, x))
-                    case ">=" => mn.exists(dom.ord.gteq(_, x))
-                    case "<"  => mx.exists(dom.ord.lt(_, x))
-                    case "<=" => mx.exists(dom.ord.lteq(_, x))
-                    case "="  => mn.exists(dom.ord.equiv(_, x)) &&
-                      mx.exists(dom.ord.equiv(_, x))
-                    case _ => // "!=": null || true IS true in the Column OR
-                      mx.exists(dom.ord.lt(_, x)) ||
-                        mn.exists(dom.ord.gt(_, x))
-                  }
-                }
-              case "in" =>
-                val conv = v.asInstanceOf[Seq[Any]].map(dom.convert)
-                if (conv.exists(_.isEmpty)) None
-                else Some { (f: FileEntry) =>
-                  val (mn, mx) = stat3(f)
-                  mn.isDefined && mx.isDefined &&
-                    dom.ord.equiv(mn.get, mx.get) &&
-                    conv.exists(x => dom.ord.equiv(mn.get, x.get))
-                }
-              case "startswith" =>
-                val p = org.apache.spark.unsafe.types.UTF8String
-                  .fromString(v.asInstanceOf[String])
-                Some { (f: FileEntry) =>
-                  val (mn, mx) = stat3(f)
-                  mn.exists(_.asInstanceOf[
-                    org.apache.spark.unsafe.types.UTF8String].startsWith(p)) &&
-                    mx.exists(_.asInstanceOf[
-                      org.apache.spark.unsafe.types.UTF8String].startsWith(p))
-                }
-              case _ => None
+          }
+        case "in" =>
+          val conv = v.asInstanceOf[Seq[Any]]
+            .map(ManifestStore.probeValue(dom, dt, _, tz))
+          if (conv.exists(_.isEmpty)) None
+          else {
+            val xs = conv.flatMap(_.get) // a NULL value never matches
+            Some { (f: FileEntry) =>
+              val (mn, mx) = stat2(f)
+              mn.isDefined && mx.isDefined && dom.ord.equiv(mn.get, mx.get) &&
+                xs.exists(dom.ord.equiv(mn.get, _))
             }
           }
-        }
-      if (tests.exists(_.isEmpty)) None
-      else Some(candidates.forall(f => tests.forall(_.get(f))))
+        case "startswith" =>
+          // min and max sharing the prefix pins EVERY row between them to
+          // it (bytewise UTF8 order fixes the first |p| bytes) — sound
+          // under stats.truncate too: widened bounds still BRACKET the
+          // rows, so a shared prefix on the bounds is one on the data
+          val p = org.apache.spark.unsafe.types.UTF8String
+            .fromString(v.asInstanceOf[String])
+          def prefixed(x: Option[Any]) = x.exists(
+            _.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].startsWith(p))
+          Some { (f: FileEntry) =>
+            val (mn, mx) = stat2(f)
+            prefixed(mn) && prefixed(mx)
+          }
+        case _ => None
+      }
     }
     val exact =
       candidates.forall(f =>
         predCols.forall(c => nullsOf(m, f, c).contains(0L))) &&
-        (candidates.isEmpty || pruning.isEmpty || driverExact().getOrElse {
-          val colsRef = pruning.map(_._1).distinct
-          val rows: Seq[org.apache.spark.sql.Row] = candidates.map { f =>
-            org.apache.spark.sql.Row.fromSeq(colsRef.flatMap { c =>
-              colRange(m, f, c) match {
-                case Some((mn, mx)) => Seq(mn, mx)
-                case None           => Seq(null, null)
-              }
-            })
-          }
-          val st = StructType(colsRef.flatMap(c => Seq(
-            StructField(s"_min_$c", SStr, nullable = true),
-            StructField(s"_max_$c", SStr, nullable = true))))
-          val fullCond = pruning.map { case (c, op, v) =>
-            val dt = ManifestStore.leafType(schema, c).get
-            val mn = statDeserialize(col(s"`_min_$c`"), dt)
-            val mx = statDeserialize(col(s"`_max_$c`"), dt)
-            def value = lit(v).cast(dt)
-            op match {
-              case ">"  => mn > value
-              case ">=" => mn >= value
-              case "<"  => mx < value
-              case "<=" => mx <= value
-              case "="  => mn <=> value && mx <=> value
-              case "in" =>
-                val vs = v.asInstanceOf[Seq[Any]]
-                mn <=> mx && org.apache.spark.sql.functions.exists(
-                  array(vs.map(x => lit(x).cast(dt)): _*), x => mn <=> x)
-              case "!=" =>
-                // all rows provably differ from v iff the file's range
-                // excludes v (nulls are excluded separately by the
-                // zero-null requirement above)
-                mx < value || mn > value
-              case "startswith" =>
-                // min and max sharing the prefix pins EVERY row between
-                // them to it (bytewise UTF8 order fixes the first |p|
-                // bytes) — sound under stats.truncate too: widened
-                // bounds still BRACKET the rows, so a shared prefix on
-                // the bounds is a shared prefix on the data
-                val p = v.asInstanceOf[String]
-                mn.startsWith(lit(p)) && mx.startsWith(lit(p))
-            }
-          }.reduce(_ && _)
-          spark.createDataFrame(rows.asJava, st)
-            .filter(!coalesce(fullCond, lit(false))).isEmpty
+        (candidates.isEmpty || pruning.isEmpty || {
+          val tests = pruning.map { case (c, op, v) => exactTest(c, op, v) }
+          tests.forall(_.isDefined) &&
+            candidates.forall(f => tests.forall(_.get(f)))
         })
     if (exact) Some(candidates) else None
   }
@@ -2749,30 +2441,20 @@ final class ManifestStore(val root: String, spark: SparkSession,
       if (strs.isEmpty) Some(null)
       else {
         val dt = schema(c).dataType
-        // driver fold (r16): pick the extreme stat string in the
-        // column's own ordering and convert through Spark's own
-        // external-value conversions ([[ManifestStore.statToExternal]])
-        // — no local job per aggregate. The in-Spark fold remains for
-        // types without a guaranteed-identical driver domain and as the
-        // A/B path (`spark.graft.prune.driverEval=false`).
-        val folded: Option[Any] =
-          if (!spark.conf.getOption("spark.graft.prune.driverEval")
-                .flatMap(_.toBooleanOption).getOrElse(true)) None
-          else scala.util.Try {
-            for {
-              dom <- ManifestStore.pruneDomain(dt)
-              toExt <- ManifestStore.statToExternal(dt)
-            } yield {
-              val parsed = strs.map(s => (dom.parse(s), s))
-              toExt((if (isMin) parsed.minBy(_._1)(dom.ord)
-                     else parsed.maxBy(_._1)(dom.ord))._2)
-            }
-          }.toOption.flatten
-        Some(folded.getOrElse {
-          spark.createDataFrame(strs.map(Tuple1(_))).toDF("s")
-            .agg(if (isMin) min(statDeserialize(col("s"), dt))
-                 else max(statDeserialize(col("s"), dt))).head().get(0)
-        })
+        // pick the extreme stat string in the column's own ordering and
+        // convert through Spark's own external-value conversions
+        // ([[ManifestStore.statToExternal]]); a stat that will not parse
+        // gives no answer
+        scala.util.Try {
+          for {
+            dom <- ManifestStore.pruneDomain(dt)
+            toExt <- ManifestStore.statToExternal(dt)
+          } yield {
+            val parsed = strs.map(s => (dom.parse(s), s))
+            toExt((if (isMin) parsed.minBy(_._1)(dom.ord)
+                   else parsed.maxBy(_._1)(dom.ord))._2)
+          }
+        }.toOption.flatten
       }
     }
     val values: Seq[Option[Any]] = aggs.map {
@@ -2802,9 +2484,9 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * same shape from its add-file stats. Per-aggregate answerability
     * mirrors the ungrouped path (count(*) absorbs DV masks via liveRows;
     * count(col)/min/max need unmasked files with recorded stats). The
-    * whole evaluation is ONE local job over the O(#files) stats frame:
-    * group keys deserialize through their column's own type, mins/maxes
-    * combine with all-null files excluded by their null count. Returns
+    * whole evaluation is one driver pass over the O(#files) stats: group
+    * keys parse through their column's typed domain, mins/maxes combine
+    * with all-null files excluded by their null count. Returns
     * rows shaped `groupCols ++ aggs` (Spark's complete-pushdown contract);
     * None = not provable, callers run the real scan.
     */
@@ -2814,7 +2496,6 @@ final class ManifestStore(val root: String, spark: SparkSession,
                                          aggs: Seq[ManifestStore.StatAgg])
       : Option[Seq[Seq[Any]]] = {
     import ManifestStore.StatAgg
-    import org.apache.spark.sql.types.{LongType, StringType, StructField}
     if (groupCols.isEmpty || aggs.isEmpty) return None
     val schema = StructType.fromDDL(m.schemaDDL)
     // Fully-masked files (liveRows == 0 — every row deleted by a DV, kept
@@ -2860,127 +2541,84 @@ final class ManifestStore(val root: String, spark: SparkSession,
       case StatAgg.MinCol(c)   => c
       case StatAgg.MaxCol(c)   => c
     }.distinct
-    // DRIVER FOLD (r16): one pass over O(#files) metadata, no local job.
-    // Group keys parse through their typed domains (float/double ±0.0
-    // normalized like Spark's groupBy), counts are long sums, MIN/MAX
-    // fold in the column's own ordering with all-null files excluded by
-    // their null count; keys and extremes convert to external values
-    // through Spark's own conversions ([[ManifestStore.statToExternal]]).
-    // Falls back to the one-local-job Column fold when any involved type
-    // lacks a guaranteed-identical driver domain, or under
-    // `spark.graft.prune.driverEval=false` (the family A/B knob).
-    def driverGrouped(): Option[Seq[Seq[Any]]] = {
-      if (!spark.conf.getOption("spark.graft.prune.driverEval")
-            .flatMap(_.toBooleanOption).getOrElse(true)) return None
-      def domFor(c: String) = for {
-        dom <- ManifestStore.pruneDomain(schema(c).dataType)
-        ext <- ManifestStore.statToExternal(schema(c).dataType)
-      } yield (dom, ext)
-      val gDoms = groupCols.map(domFor)
-      if (gDoms.exists(_.isEmpty)) return None
-      val rangeCols = aggs.collect {
-        case StatAgg.MinCol(c) => c
-        case StatAgg.MaxCol(c) => c
-      }.distinct
-      val rDoms = rangeCols.map(c => c -> domFor(c)).toMap
-      if (rDoms.values.exists(_.isEmpty)) return None
-      def normKey(v: Any): Any = v match {
-        case d: java.lang.Double if d.doubleValue == 0.0 =>
-          java.lang.Double.valueOf(0.0)
-        case f: java.lang.Float if f.floatValue == 0.0f =>
-          java.lang.Float.valueOf(0.0f)
-        case other => other
-      }
-      scala.util.Try {
-        // per group: representative group-key stat strings (purity makes
-        // any file's min the group value), live rows, per-col
-        // (rows - nulls), per-col best (parsed, string) min/max
-        final case class GState(
-            keyStrs: Seq[String], var live: Long,
-            colCnt: scala.collection.mutable.Map[String, Long],
-            colMin: scala.collection.mutable.Map[String, (Any, String)],
-            colMax: scala.collection.mutable.Map[String, (Any, String)])
-        val groups = scala.collection.mutable
-          .LinkedHashMap.empty[Seq[Any], GState]
-        candidates.foreach { f =>
-          val keyStrs = groupCols.map(g => colRange(m, f, g).get._1)
-          val key = keyStrs.zip(gDoms).map { case (s, d) =>
-            normKey(d.get._1.parse(s))
-          }
-          val st = groups.getOrElseUpdate(key, GState(keyStrs, 0L,
-            scala.collection.mutable.Map.empty,
-            scala.collection.mutable.Map.empty,
-            scala.collection.mutable.Map.empty))
-          st.live += f.liveRows
-          aggCols.foreach { c =>
-            val n = nullsOf(m, f, c).getOrElse(0L)
-            st.colCnt(c) = st.colCnt.getOrElse(c, 0L) + (f.rows - n)
-            if (rangeCols.contains(c) && n < f.rows) {
-              val dom = rDoms(c).get._1
-              colRange(m, f, c).foreach { case (mnS, mxS) =>
-                val mn = dom.parse(mnS); val mx = dom.parse(mxS)
-                if (!st.colMin.get(c).exists(p => dom.ord.lteq(p._1, mn)))
-                  st.colMin(c) = (mn, mnS)
-                if (!st.colMax.get(c).exists(p => dom.ord.gteq(p._1, mx)))
-                  st.colMax(c) = (mx, mxS)
-              }
+    // one pass over O(#files) metadata, no Spark job. Group keys parse
+    // through their typed domains (float/double ±0.0 normalized like
+    // Spark's groupBy), counts are long sums, MIN/MAX fold in the column's
+    // own ordering with all-null files excluded by their null count; keys
+    // and extremes convert to external values through Spark's own
+    // conversions ([[ManifestStore.statToExternal]]). A stat that will not
+    // parse gives no answer.
+    def domFor(c: String) = for {
+      dom <- ManifestStore.pruneDomain(schema(c).dataType)
+      ext <- ManifestStore.statToExternal(schema(c).dataType)
+    } yield (dom, ext)
+    val gDoms = groupCols.map(domFor)
+    if (gDoms.exists(_.isEmpty)) return None
+    val rangeCols = aggs.collect {
+      case StatAgg.MinCol(c) => c
+      case StatAgg.MaxCol(c) => c
+    }.distinct
+    val rDoms = rangeCols.map(c => c -> domFor(c)).toMap
+    if (rDoms.values.exists(_.isEmpty)) return None
+    def normKey(v: Any): Any = v match {
+      case d: java.lang.Double if d.doubleValue == 0.0 =>
+        java.lang.Double.valueOf(0.0)
+      case f: java.lang.Float if f.floatValue == 0.0f =>
+        java.lang.Float.valueOf(0.0f)
+      case other => other
+    }
+    scala.util.Try {
+      // per group: representative group-key stat strings (purity makes
+      // any file's min the group value), live rows, per-col
+      // (rows - nulls), per-col best (parsed, string) min/max
+      final case class GState(
+          keyStrs: Seq[String], var live: Long,
+          colCnt: scala.collection.mutable.Map[String, Long],
+          colMin: scala.collection.mutable.Map[String, (Any, String)],
+          colMax: scala.collection.mutable.Map[String, (Any, String)])
+      val groups = scala.collection.mutable
+        .LinkedHashMap.empty[Seq[Any], GState]
+      candidates.foreach { f =>
+        val keyStrs = groupCols.map(g => colRange(m, f, g).get._1)
+        val key = keyStrs.zip(gDoms).map { case (s, d) =>
+          normKey(d.get._1.parse(s))
+        }
+        val st = groups.getOrElseUpdate(key, GState(keyStrs, 0L,
+          scala.collection.mutable.Map.empty,
+          scala.collection.mutable.Map.empty,
+          scala.collection.mutable.Map.empty))
+        st.live += f.liveRows
+        aggCols.foreach { c =>
+          val n = nullsOf(m, f, c).getOrElse(0L)
+          st.colCnt(c) = st.colCnt.getOrElse(c, 0L) + (f.rows - n)
+          if (rangeCols.contains(c) && n < f.rows) {
+            val dom = rDoms(c).get._1
+            colRange(m, f, c).foreach { case (mnS, mxS) =>
+              val mn = dom.parse(mnS); val mx = dom.parse(mxS)
+              if (!st.colMin.get(c).exists(p => dom.ord.lteq(p._1, mn)))
+                st.colMin(c) = (mn, mnS)
+              if (!st.colMax.get(c).exists(p => dom.ord.gteq(p._1, mx)))
+                st.colMax(c) = (mx, mxS)
             }
           }
         }
-        groups.iterator.map { case (_, st) =>
-          val gVals: Seq[Any] = st.keyStrs.zip(gDoms).map { case (s, d) =>
-            d.get._2(s)
-          }
-          val aVals: Seq[Any] = aggs.map {
-            case StatAgg.CountStar   => java.lang.Long.valueOf(st.live)
-            case StatAgg.CountCol(c) =>
-              java.lang.Long.valueOf(st.colCnt.getOrElse(c, 0L))
-            case StatAgg.MinCol(c) =>
-              st.colMin.get(c).map(p => rDoms(c).get._2(p._2)).orNull
-            case StatAgg.MaxCol(c) =>
-              st.colMax.get(c).map(p => rDoms(c).get._2(p._2)).orNull
-          }
-          gVals ++ aVals
-        }.toSeq
-      }.toOption
-    }
-    driverGrouped() match {
-      case Some(out) => return Some(out)
-      case None      => ()
-    }
-    val rows: Seq[org.apache.spark.sql.Row] = candidates.map { f =>
-      org.apache.spark.sql.Row.fromSeq(
-        groupCols.map(g => colRange(m, f, g).get._1) ++
-          Seq(f.rows, f.liveRows) ++
-          aggCols.flatMap { c =>
-            val r = colRange(m, f, c)
-            Seq(r.map(_._1).orNull, r.map(_._2).orNull,
-              nullsOf(m, f, c).map(java.lang.Long.valueOf).orNull)
-          })
-    }
-    val st = StructType(
-      groupCols.map(g => StructField(s"_g_$g", StringType, nullable = true)) ++
-        Seq(StructField("_rows", LongType, nullable = false),
-          StructField("_live", LongType, nullable = false)) ++
-        aggCols.flatMap(c => Seq(
-          StructField(s"_min_$c", StringType, nullable = true),
-          StructField(s"_max_$c", StringType, nullable = true),
-          StructField(s"_nulls_$c", LongType, nullable = true))))
-    val df = spark.createDataFrame(rows.asJava, st)
-    val gexprs = groupCols.map(g =>
-      statDeserialize(col(s"_g_$g"), schema(g).dataType).as(g))
-    val aexprs: Seq[Column] = aggs.zipWithIndex.map {
-      case (StatAgg.CountStar, i) => sum(col("_live")).as(s"_a$i")
-      case (StatAgg.CountCol(c), i) =>
-        sum(col("_rows") - col(s"_nulls_$c")).as(s"_a$i")
-      case (StatAgg.MinCol(c), i) => min(when(col(s"_nulls_$c") < col("_rows"),
-        statDeserialize(col(s"_min_$c"), schema(c).dataType))).as(s"_a$i")
-      case (StatAgg.MaxCol(c), i) => max(when(col(s"_nulls_$c") < col("_rows"),
-        statDeserialize(col(s"_max_$c"), schema(c).dataType))).as(s"_a$i")
-    }
-    val out = df.groupBy(gexprs: _*).agg(aexprs.head, aexprs.tail: _*)
-      .collect() // O(#groups) ≤ O(#files) — metadata-sized by construction
-    Some(out.toSeq.map(_.toSeq))
+      }
+      groups.iterator.map { case (_, st) =>
+        val gVals: Seq[Any] = st.keyStrs.zip(gDoms).map { case (s, d) =>
+          d.get._2(s)
+        }
+        val aVals: Seq[Any] = aggs.map {
+          case StatAgg.CountStar   => java.lang.Long.valueOf(st.live)
+          case StatAgg.CountCol(c) =>
+            java.lang.Long.valueOf(st.colCnt.getOrElse(c, 0L))
+          case StatAgg.MinCol(c) =>
+            st.colMin.get(c).map(p => rDoms(c).get._2(p._2)).orNull
+          case StatAgg.MaxCol(c) =>
+            st.colMax.get(c).map(p => rDoms(c).get._2(p._2)).orNull
+        }
+        gVals ++ aVals
+      }.toSeq
+    }.toOption
   }
 
   /** The files that can contain the global top-`n` rows under `ORDER BY
@@ -2996,16 +2634,16 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * that may hold nulls in the column vetoes pruning entirely (min/max
     * know nothing about where null rows live, and either null ordering
     * can put them in the top-n); deletion-vector staleness only ever
-    * over-keeps (a masked extreme widens F's apparent range). ONE local
-    * job: a sorted sweep over bound events (a file's last value carrying
-    * its liveRows) and probe events (a file's first value), bounds
-    * sorting before probes on ties — the running bound mass at each
-    * probe IS covered, minus the file's own single-value contribution.
+    * over-keeps (a masked extreme widens F's apparent range). A driver
+    * sweep through the column's typed domain, no Spark job: a sorted pass
+    * over bound events (a file's last value carrying its liveRows) and
+    * probe events (a file's first value), bounds sorting before probes on
+    * ties — the running bound mass at each probe IS covered, minus the
+    * file's own single-value contribution.
     */
   private[graft] def topNFiles(m: Manifest, files: Seq[FileEntry],
                                colName: String, asc: Boolean,
                                n: Int): Seq[FileEntry] = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField}
     val schema = StructType.fromDDL(m.schemaDDL)
     if (files.isEmpty || n <= 0) return files
     if (!(colName == keyField || m.statsCols.contains(colName)) ||
@@ -3015,76 +2653,40 @@ final class ManifestStore(val root: String, spark: SparkSession,
     val (statted, unstatted) =
       files.partition(f => colRange(m, f, colName).isDefined)
     if (statted.size <= 1) return files
-    val dt = schema(colName).dataType
     // (file, firstStat, lastStat): first/last in the sort direction
     val pairs: Seq[(FileEntry, String, String)] = statted.map { f =>
       val (mn, mx) = colRange(m, f, colName).get
       if (mn == null || mx == null) return files // stats of an all-null file
       if (asc) (f, mn, mx) else (f, mx, mn)
     }
-    // DRIVER fast path for primitively-parseable stat types: the sweep is
-    // O(F log F) local work, no Spark job on the planning path. Types the
-    // parser doesn't know fall back to the typed Spark-job sweep below —
-    // identical semantics through statDeserialize.
-    ManifestStore.statParser(dt) match {
-      case Some((parse, baseOrd)) =>
-        val ord = if (asc) baseOrd else baseOrd.reverse
-        // events: (value, kind) — bounds (kind 0, carrying live mass)
-        // sort before probes (kind 1) on equal values
-        val events: Seq[(Any, Int, FileEntry)] = pairs.flatMap {
-          case (fe, first, last) =>
-            Seq((parse(last), 0, fe), (parse(first), 1, fe))
-        }
-        val sorted = events.sortWith { case ((v1, k1, _), (v2, k2, _)) =>
-          val c = ord.compare(v1, v2)
-          if (c != 0) c < 0 else k1 < k2
-        }
-        // a single-value file's own bound sweeps before its probe: uncount
-        val selfMass: Map[String, Long] = pairs.collect {
-          case (fe, a, b) if a == b => fe.name -> fe.liveRows
-        }.toMap
-        var cum = 0L
-        val kept = Set.newBuilder[String]
-        sorted.foreach {
-          case (_, 0, fe) => cum += fe.liveRows
-          case (_, _, fe) =>
-            if (cum - selfMass.getOrElse(fe.name, 0L) < n) kept += fe.name
-        }
-        val keptSet = kept.result()
-        unstatted ++ statted.filter(f => keptSet(f.name))
-      case None =>
-        import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField}
-        val rows: Seq[org.apache.spark.sql.Row] = pairs.flatMap {
-          case (fe, first, last) => Seq(
-            org.apache.spark.sql.Row(fe.name, first, last, fe.liveRows, 1),
-            org.apache.spark.sql.Row(fe.name, first, last, fe.liveRows, 0))
-        }
-        val st = StructType(Seq(
-          StructField("_f", StringType, nullable = false),
-          StructField("_first", StringType, nullable = false),
-          StructField("_last", StringType, nullable = false),
-          StructField("_live", LongType, nullable = false),
-          StructField("_probe", IntegerType, nullable = false)))
-        val ev = spark.createDataFrame(rows.asJava, st)
-          .withColumn("_v", statDeserialize(
-            when(col("_probe") === 1, col("_first")).otherwise(col("_last")), dt))
-          .withColumn("_mass", when(col("_probe") === 0, col("_live"))
-            .otherwise(lit(0L)))
-        val order = Seq(if (asc) col("_v").asc else col("_v").desc,
-          col("_probe").asc)
-        val w = org.apache.spark.sql.expressions.Window.orderBy(order: _*)
-          .rowsBetween(
-            org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-        val kept: Set[String] = ev
-          .withColumn("_cum", sum(col("_mass")).over(w))
-          .filter(col("_probe") === 1)
-          .withColumn("_covered", col("_cum") -
-            when(col("_first") === col("_last"), col("_live"))
-              .otherwise(lit(0L)))
-          .filter(col("_covered") < n)
-          .select("_f").collect().map(_.getString(0)).toSet
-        unstatted ++ statted.filter(f => kept(f.name))
+    // the sweep: O(F log F) driver work through the column's typed
+    // domain, no Spark job; a stat that will not parse keeps every file
+    val dom = ManifestStore.pruneDomain(schema(colName).dataType)
+      .getOrElse(return files)
+    val ord = if (asc) dom.ord else dom.ord.reverse
+    // events: (value, kind) — bounds (kind 0, carrying live mass) sort
+    // before probes (kind 1) on equal values
+    val events: Seq[(Any, Int, FileEntry)] = scala.util.Try(pairs.flatMap {
+      case (fe, first, last) =>
+        Seq((dom.parse(last), 0, fe), (dom.parse(first), 1, fe))
+    }).getOrElse(return files)
+    val sorted = events.sortWith { case ((v1, k1, _), (v2, k2, _)) =>
+      val c = ord.compare(v1, v2)
+      if (c != 0) c < 0 else k1 < k2
     }
+    // a single-value file's own bound sweeps before its probe: uncount
+    val selfMass: Map[String, Long] = pairs.collect {
+      case (fe, a, b) if a == b => fe.name -> fe.liveRows
+    }.toMap
+    var cum = 0L
+    val kept = Set.newBuilder[String]
+    sorted.foreach {
+      case (_, 0, fe) => cum += fe.liveRows
+      case (_, _, fe) =>
+        if (cum - selfMass.getOrElse(fe.name, 0L) < n) kept += fe.name
+    }
+    val keptSet = kept.result()
+    unstatted ++ statted.filter(f => keptSet(f.name))
   }
 
   /** RESTORE TABLE to `targetVersion` — Delta's RESTORE semantics: ONE
@@ -4786,15 +4388,6 @@ final class ManifestStore(val root: String, spark: SparkSession,
   private def loadBloomSidecar(name: String): Option[Array[Byte]] =
     ManifestStore.loadBloom(rootKey, Paths.get(root, "files"), name)
 
-  /** `BloomBlobContains` over a per-file blob column — Column-API wrap of
-    * the native expression, no session function registration needed.
-    */
-  private def bloomMayContain(blob: Column, probeStr: Column): Column = {
-    import org.apache.spark.sql.graft.ParquetWriteBridge.{column, expression}
-    column(graft.functions.BloomBlobContains(
-      expression(blob), expression(probeStr)))
-  }
-
   /** [[BloomSidecarContains]] over a per-file sidecar-NAME column: the blob
     * loads lazily (LRU) at evaluation, so planning joins don't ship blob
     * bytes in their broadcast.
@@ -5420,34 +5013,33 @@ final class ManifestStore(val root: String, spark: SparkSession,
     if (won) Some(m.version + 1) else None
   }
 
-  /** Assign each file to an overlap group: sort by min key and sweep,
-    * merging a file into the open group while its min does not exceed the
-    * running max — the classic interval-merge, run IN SPARK so the
-    * string-serialized stats compare through the key's native type (the
-    * driver never orders keys itself). O(#files) rows through one
-    * single-partition window — bounded by the layout, not the data.
-    * Returns file name -> group id, where group ids ascend in key order.
+  /** Assign each file to an overlap group: sort by (min, max, name) and
+    * sweep, merging a file into the open group while its min does not
+    * exceed the running max — the classic interval-merge, on the driver
+    * through the key's typed domain ([[ManifestStore.pruneDomain]]), so
+    * the string-serialized stats compare in the key's native order. A
+    * missing or unparseable stat sorts first and never opens a group of
+    * its own after the first. Returns file name -> group id, where group
+    * ids ascend in key order.
     */
-  private def overlapGroups(files: Seq[FileEntry],
+  private[cdc] def overlapGroups(files: Seq[FileEntry],
                             keyType: org.apache.spark.sql.types.DataType)
       : Map[String, Long] = {
-    import org.apache.spark.sql.expressions.Window
-    val df = spark.createDataFrame(files.map(f => (f.name, f.minKey, f.maxKey)))
-      .toDF("_f", "_min0", "_max0")
-      .select(col("_f"), statDeserialize(col("_min0"), keyType).as("_min"),
-        statDeserialize(col("_max0"), keyType).as("_max"))
-    // single-partition by design: the frame is O(#files) by construction
-    // (EliminateWindowPartitions strips the lit(0) spec, so the window runs
-    // unpartitioned — the intended O(metadata) shape; the session mutes
-    // WindowExecBase's advisory WARN, see graft.Verify.session)
-    val w = Window.partitionBy(lit(0)).orderBy("_min", "_max", "_f")
-    val runMax = max(col("_max")).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    df.withColumn("_new",
-        when(runMax.isNull || col("_min") > runMax, 1L).otherwise(0L))
-      .withColumn("_grp",
-        sum(col("_new")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .select("_f", "_grp")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val dom = ManifestStore.pruneDomain(keyType).getOrElse(
+      throw new IllegalArgumentException(
+        s"no stat domain for key type ${keyType.sql}"))
+    def parse(s: String): Option[Any] =
+      Option(s).flatMap(x => scala.util.Try(dom.parse(x)).toOption)
+    val byRange = Ordering.Tuple3(Ordering.Option(dom.ord),
+      Ordering.Option(dom.ord), Ordering.String)
+    var runMax: Option[Any] = None
+    var grp = 0L
+    files.map(f => (parse(f.minKey), parse(f.maxKey), f.name))
+      .sorted(byRange).map { case (mn, mx, name) =>
+        if (runMax.forall(r => mn.exists(dom.ord.gt(_, r)))) grp += 1
+        runMax = (runMax ++ mx).reduceOption[Any](dom.ord.max(_, _))
+        name -> grp
+      }.toMap
   }
 
   /** Partial re-clustering — Delta OPTIMIZE's file selection, replacing

@@ -139,42 +139,6 @@ case class BloomMaybeContains(left: Expression, right: Expression)
   override def prettyName: String = "bloom_maybe_contains"
 }
 
-/** Membership probe where the blob is a per-row COLUMN, not a foldable
-  * literal — the shape the manifest's per-FILE key Bloom filters need: a
-  * planning-time pruning join carries one blob per data file (a tiny
-  * broadcast side), and each (file, probe-key) pair tests membership
-  * against THAT file's blob. Probing reads the bits straight out of the
-  * byte array ([[BloomSketch.containsBlob]]) — no per-row decode into a
-  * long array, no allocation — so a runtime join-key filter handing
-  * thousands of keys to the pruner stays O(pairs · numHashes) byte reads.
-  */
-case class BloomBlobContains(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(
-        s"bloom_blob_contains expects a binary blob column, got ${left.dataType.catalogString}")
-    else if (right.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"bloom_blob_contains expects a string probe, got ${right.dataType.catalogString}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = BooleanType
-
-  override def nullSafeEval(blob: Any, v: Any): Any =
-    BloomSketch.containsBlob(blob.asInstanceOf[Array[Byte]],
-      v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (blobCode, vCode) =>
-      s"graft.functions.BloomSketch.containsBlob($blobCode, $vCode)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression)
-      : BloomBlobContains = copy(left = l, right = r)
-  override def prettyName: String = "bloom_blob_contains"
-}
-
 object BloomSketch {
   private val Seed1 = 0x9747b28cL
   private val Seed2 = 0x5bd1e995L

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.cdc.{Changelog, ChangelogGen, Envelope, ManifestStore}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Oracle-gated queries for the `format("graft")` DataSource V2 connector
@@ -550,13 +550,12 @@ object DsvQueries {
 
     "dsv2_decimal_prune" -> ((s, dir) => {
       // off-grid decimal probes prune EXACTLY (r17): a probe of finer
-      // scale canonicalizes onto the column's (12,2) grid before BOTH
-      // prune paths — `> 7.505` IS `> 7.50` over grid values, `= 7.505`
-      // IS false — so a money-keyed filter plans jobless, can never
-      // over-prune the boundary file (the old HALF_UP cast tested
-      // `> 7.51` and dropped the file holding the 7.51 rows), and both
-      // modes keep identical sets. Row answers flow through the scan and
-      // are oracle-checked; the file-cut gates probe the store directly
+      // scale canonicalizes onto the column's (12,2) grid before pruning
+      // — `> 7.505` IS `> 7.50` over grid values, `= 7.505` IS false — so
+      // a money-keyed filter plans jobless and can never over-prune the
+      // boundary file (a HALF_UP cast would test `> 7.51` and drop the
+      // file holding the 7.51 rows). Row answers flow through the scan
+      // and are oracle-checked; the file-cut gates probe the store directly
       // (decimal comparisons reach pruning via readWhere/merge scopes
       // and pushdown alike — the canonicalization is shared).
       val root = scratch("decp", dir)
@@ -575,23 +574,19 @@ object DsvQueries {
         .head().getLong(0)
       val probe = new java.math.BigDecimal(maxK / 2).movePointLeft(2)
         .add(new java.math.BigDecimal("0.005"))
-      def kept(driver: Boolean, op: String): Seq[String] = {
-        // restore the PRE-CALL value (or unset), not a hardcoded "true":
-        // a suite running with driverEval=false for A/B must not be
-        // silently flipped back for every query after this one
-        val prev = s.conf.getOption("spark.graft.prune.driverEval")
-        s.conf.set("spark.graft.prune.driverEval", driver.toString)
-        try st.prunedFiles(m, Seq(("dec_key", op, probe))).map(_.name)
-        finally prev match {
-          case Some(p) => s.conf.set("spark.graft.prune.driverEval", p)
-          case None    => s.conf.unset("spark.graft.prune.driverEval")
-        }
-      }
-      val keptGtD = kept(driver = true, ">")
-      val pruned = keptGtD.size < m.files.size &&
-        keptGtD == kept(driver = false, ">") &&
-        kept(driver = true, "=").isEmpty &&
-        kept(driver = false, "=").isEmpty
+      def kept(op: String): Set[String] =
+        st.prunedFiles(m, Seq(("dec_key", op, probe))).map(_.name).toSet
+      // the files an UNPRUNED read finds a row matching `c` in — each must
+      // survive the cut
+      def holding(c: Column): Set[String] =
+        s.read.parquet(m.files.map(f => s"$root/files/${f.name}"): _*)
+          .filter(c)
+          .select(element_at(split(input_file_name(), "/"), -1))
+          .distinct().collect().map(_.getString(0)).toSet
+      val keptGt = kept(">")
+      val pruned = keptGt.size < m.files.size &&
+        holding(col("dec_key") > lit(probe)).subsetOf(keptGt) &&
+        kept("=").isEmpty && holding(col("dec_key") === lit(probe)).isEmpty
       val t = s.read.format("graft").load(root)
       val gt = t.filter(col("dec_key") > lit(probe))
         .agg(count(lit(1)).as("cnt_gt"),

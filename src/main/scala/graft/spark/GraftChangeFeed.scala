@@ -1061,8 +1061,7 @@ final class GraftCdfMicroBatchStream(root: String, keyField: String,
       cur.map(_.schemaDDL).getOrElse(dataSchema.toDDL),
       colMap = cur.map(_.colMap).getOrElse(Map.empty),
       required = required,
-      columnarOk = GraftMicroBatchStream.streamColumnarOk(spark) &&
-        GraftMicroBatchStream.columnarWorthIt(spark, plannedRows),
+      columnarOk = GraftMicroBatchStream.columnarWorthIt(spark, plannedRows),
       pushed = effPushed)
   }
 }

@@ -389,31 +389,20 @@ final class GraftMicroBatchStream(root: String, keyField: String,
     // SMALL batches demote to row mode (r15): the vectorized setup
     // constant (~0.1 s/epoch of extra planning + codegen) outweighs the
     // ~44 ns/row iterator tax below ~2M rows — see `columnarWorthIt`.
-    // `spark.graft.read.streamColumnar=false|off` is the escape hatch
-    // (and the bench's A/B control); junk values must not throw.
     GraftPartitions.factory(spark, root, keyField, tableSchema, required,
       effPushed, options, ddl,
-      wantColumnar = GraftMicroBatchStream.streamColumnarOk(spark) &&
-        GraftMicroBatchStream.columnarWorthIt(spark, plannedRows),
+      wantColumnar = GraftMicroBatchStream.columnarWorthIt(spark, plannedRows),
       anyMasked = true,
       colMap = cur.map(_.colMap).getOrElse(Map.empty))
   }
 }
 
 object GraftMicroBatchStream {
-  /** The streaming-vectorization escape hatch: only an explicit
-    * `spark.graft.read.streamColumnar=false|off` disables (defensive
-    * parse — junk never throws at planning time). Shared by the tail
-    * source and the CDF stream.
-    */
-  private[spark] def streamColumnarOk(spark: SparkSession): Boolean =
-    !spark.conf.getOption("spark.graft.read.streamColumnar")
-      .exists(v => v.equalsIgnoreCase("false") || v.equalsIgnoreCase("off"))
-
   /** SMALL-BATCH row-mode demotion (r15): vectorized streaming pays a
     * per-epoch setup constant — ~2x queryPlanning (~70 ms) plus columnar
-    * codegen — that the per-row iterator win (~44 ns/row measured on the
-    * 60M CdfBench drain, 5.47 -> 2.84 s) only amortizes past ~2M rows.
+    * codegen — that the per-row iterator win (~44 ns/row measured on a
+    * 60M-row change-feed drain, 5.47 -> 2.84 s) only amortizes past ~2M
+    * rows. Shared by the tail source and the CDF stream.
     * A micro-batch planning fewer live rows than
     * `spark.graft.read.streamColumnarMinRows` (default 2,000,000; 0 pins
     * columnar always) reads row-mode; the mode is per-batch, decided

@@ -766,11 +766,12 @@ final class GraftScan(root: String, tableSchema: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory =
     // Spark forbids mixing columnar and row partitions within one scan, so
-    // the mode is a whole-scan decision: vectorized when every PLANNED
-    // (post-pruning) file is pristine — a selective query over a
-    // mostly-masked table still goes columnar if its survivors are clean.
-    // Decided on the STATIC survivors: runtime filtering must not flip the
-    // mode after Spark has already asked supportsColumnar.
+    // the mode is a whole-scan decision: vectorized whenever the projection
+    // batches — masked survivors take the masked columnar reader (the
+    // factory falls back to row mode only when that reader cannot batch
+    // the projection plus key). Decided on the STATIC survivors: runtime
+    // filtering must not flip the mode after Spark has already asked
+    // supportsColumnar.
     // CONSUMED filters (exactly decided at file granularity — no residual
     // in the plan) must not reach the parquet readers: they are vacuous on
     // every planned file, and their columns may be pruned out of the
@@ -779,13 +780,7 @@ final class GraftScan(root: String, tableSchema: StructType,
     GraftPartitions.factory(spark, root, keyField, tableSchema, required,
       if (filtersConsumed) Array.empty else pushed, options,
       manifest.schemaDDL,
-      // kill switch parses defensively: only an explicit false/off
-      // disables — junk must not throw a bare NumberFormat-style error
-      // at planning time with no mention of the conf key
-      wantColumnar = planned.forall(_.dv.isEmpty) ||
-        !spark.conf.getOption("spark.graft.read.maskedColumnar")
-          .exists(v => v.equalsIgnoreCase("false") ||
-            v.equalsIgnoreCase("off")),
+      wantColumnar = true,
       anyMasked = planned.exists(_.dv.isDefined),
       colMap = manifest.colMap)
 }

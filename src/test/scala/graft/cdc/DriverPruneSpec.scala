@@ -1,28 +1,31 @@
 package graft.cdc
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-/** Driver-side zone-map pruning (r16): `ManifestStore.prunedFiles` now
-  * evaluates range / prefix / IN / Bloom containment directly over the
-  * driver-held stat strings — no local Spark job — and falls back to the
-  * legacy Column-expression path whenever any leaf's typed semantics
-  * can't be guaranteed identical. The contract this spec pins:
+/** Driver-side planning over zone-map stats: `ManifestStore.prunedFiles`,
+  * the exactness check behind stats-answered aggregates, the aggregates
+  * themselves (plain and grouped), top-N and optimize's overlap groups
+  * read the driver-held stat strings through one typed domain
+  * (`ManifestStore.pruneDomain`) and run no Spark job. Values the domain
+  * does not take directly (a String on the Long key, a raw Long on a
+  * TIMESTAMP column) go through Spark's own cast, evaluated on the driver.
+  * The contract this spec pins, against a plain read of the table's files:
   *
-  *   1. KEPT-SET EQUALITY: across a grid of every supported op on every
-  *      supported type (dotted struct leaves, nulls, NaN, truncated
-  *      string stats, OR trees, Bloom-backed = / IN included), the
-  *      driver path and the forced Spark-job path
-  *      (`spark.graft.prune.driverEval=false`) keep EXACTLY the same
-  *      files, in order.
-  *   2. JOBLESSNESS: the whole supported grid runs ZERO Spark jobs under
-  *      the driver path — the ~0.5 s per-plan constant is gone.
-  *   3. Fallback soundness: unsupported value shapes (e.g. a String
-  *      probe on a numeric column) quietly take the legacy path and the
-  *      two modes still agree.
+  *   1. SOUNDNESS: across a grid of every supported op on every supported
+  *      type (dotted struct leaves, nulls, NaN, ±0.0, extreme-year dates,
+  *      off-grid decimals, truncated string stats, OR trees, Bloom-backed
+  *      = / IN, the cast value shapes and an oversized IN), every file a
+  *      plain read finds a matching row in is kept.
+  *   2. STRENGTH: each kept set, as file indices in key order, equals the
+  *      set pinned below, so no pruning is lost.
+  *   3. JOBLESSNESS: every case plans with ZERO Spark jobs.
+  *   4. Stats answers equal `count`/`min`/`max` (`GROUP BY`) over a plain
+  *      read.
   */
 class DriverPruneSpec extends SparkSpec {
   import spark.implicits._
@@ -117,7 +120,7 @@ class DriverPruneSpec extends SparkSpec {
       // timestamp_ntz: Spark's own parse/convert/format functions make
       // ranges AND Bloomed equality jobless — including the trimmed
       // fraction renderings (".123456" probes against whole-second
-      // builds must MISS, identically in both modes)
+      // builds must MISS)
       "ntz gt" -> p(("nt", ">", java.time.LocalDateTime
         .ofEpochSecond(1704067200L + 400L * 3600L, 0,
           java.time.ZoneOffset.UTC))),
@@ -132,7 +135,7 @@ class DriverPruneSpec extends SparkSpec {
           1704067200L + 250L * 3600L, 123456000,
           java.time.ZoneOffset.UTC))),
       // extreme-year dates: ranges AND Bloom probes through the exotic
-      // sign/width renderings, kept-set-equal at zero jobs
+      // sign/width renderings, at zero jobs
       "extreme date eq (bloomed)" ->
         p(("dy", "=", java.time.LocalDate.ofEpochDay(-999850L))),
       "extreme date gt" ->
@@ -143,9 +146,9 @@ class DriverPruneSpec extends SparkSpec {
       "decimal eq" -> p(("dec", "=", new java.math.BigDecimal("1.23"))),
       "decimal lt" -> p(("dec", "<", new java.math.BigDecimal("4.00"))),
       // off-grid decimal probes: canonicalized onto the (10,2) grid so
-      // both paths prune EXACTLY (`> 1.225` ≡ `> 1.22` over scale-2
-      // values; the old Column-path HALF_UP cast would test `> 1.23`
-      // and over-prune a file whose max is 1.23)
+      // they prune EXACTLY (`> 1.225` ≡ `> 1.22` over scale-2 values; a
+      // HALF_UP cast would test `> 1.23` and over-prune a file whose max
+      // is 1.23)
       "decimal gt off-grid" ->
         p(("dec", ">", new java.math.BigDecimal("1.225"))),
       "decimal ge off-grid" ->
@@ -167,7 +170,7 @@ class DriverPruneSpec extends SparkSpec {
       "decimal integral probe" -> p(("dec", "=", 3L)),
       // ±0.0: stats serialize -0.0 as "0.0", the driver ordering treats
       // the zeros as equal (Spark semantics), and Bloom probes render
-      // the normalized form — all four ops agree across paths
+      // the normalized form
       "float zero ge (+0 probe on -0 stats)" -> p(("z", ">=", 0.0f)),
       "float zero le (-0 probe)" -> p(("z", "<=", -0.0f)),
       "float zero eq (bloomed)" -> p(("z", "=", 0.0f)),
@@ -197,158 +200,304 @@ class DriverPruneSpec extends SparkSpec {
     )
   }
 
-  private def keptNames(st: ManifestStore, m: ManifestStore.Manifest,
-                        preds: Seq[(String, String, Any)],
-                        driver: Boolean): Seq[String] = {
-    spark.conf.set("spark.graft.prune.driverEval", driver.toString)
-    try st.prunedFiles(m, preds).map(_.name)
-    finally spark.conf.set("spark.graft.prune.driverEval", "true")
+  /** The shapes [[ManifestStore.probeValue]] casts, each with the row
+    * filter it stands for (`lit(v).cast(dt)` semantics).
+    */
+  private def castShapes: Seq[(String, Seq[(String, String, Any)], Column)] = {
+    val tsSec = 1704067200L + 400L * 3600L
+    Seq(
+      ("string on long key eq", Seq(("id", "=", "123")),
+        col("id") === lit("123").cast("long")),
+      ("string on long key lt", Seq(("id", "<", "250")),
+        col("id") < lit("250").cast("long")),
+      ("string on long key in", Seq(("id", "in", Seq("5", "450"))),
+        col("id").isin(5L, 450L)),
+      // epoch SECONDS, as `lit(long).cast(timestamp)` reads it
+      ("tsLong", Seq(("ts", ">", java.lang.Long.valueOf(tsSec))),
+        col("ts") > lit(tsSec).cast("timestamp")))
   }
 
-  test("kept sets identical driver-vs-Spark across the typed grid; " +
-    "the driver path runs ZERO Spark jobs") {
-    val (_, st) = mkTyped(truncate = None)
-    val m = st.currentManifest.get
-    assert(m.files.size == 8)
-    // warm the Bloom sidecar cache OUTSIDE the job gate (loads are pure
-    // file I/O, no jobs — but keep the measurement clean anyway)
-    ManifestStore.clearBloomCache()
+  /** A predicate triple as the row filter it stands for. */
+  private def rowCond(preds: Seq[(String, String, Any)]): Column =
+    preds.map {
+      case (_, "or", bs) =>
+        bs.asInstanceOf[Seq[Seq[(String, String, Any)]]].map(rowCond)
+          .reduce(_ || _)
+      case (c, op, v) =>
+        val x = col(c)
+        op match {
+          case "="          => x === lit(v)
+          case "!="         => x =!= lit(v)
+          case ">"          => x > lit(v)
+          case ">="         => x >= lit(v)
+          case "<"          => x < lit(v)
+          case "<="         => x <= lit(v)
+          case "in"         => x.isin(v.asInstanceOf[Seq[Any]]: _*)
+          case "startswith" => x.startsWith(v.asInstanceOf[String])
+          case "isnull"     => x.isNull
+          case "notnull"    => x.isNotNull
+        }
+    }.reduce(_ && _)
+
+  /** Runs `body`, asserting it started no Spark job and no Dataset
+    * action: a collect over a local relation runs without a job, so the
+    * SQL executions are counted too.
+    */
+  private def jobless[A](what: String)(body: => A): A = {
     val jobs = new AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(); ()
       }
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          jobs.incrementAndGet(); ()
+        case _ =>
+      }
     }
-    val driverKept = scala.collection.mutable.LinkedHashMap
-      .empty[String, Seq[String]]
     spark.sparkContext.addSparkListener(listener)
-    try grid.foreach { case (name, preds) =>
-      driverKept(name) = keptNames(st, m, preds, driver = true)
-    } finally {
+    val out = try body finally {
       Thread.sleep(500) // listener bus drains async
       spark.sparkContext.removeSparkListener(listener)
     }
     assert(jobs.get() == 0,
-      s"driver-side pruning must plan with ZERO Spark jobs, ran " +
-        s"${jobs.get()} across the grid")
-    grid.foreach { case (name, preds) =>
-      val slow = keptNames(st, m, preds, driver = false)
-      assert(driverKept(name) == slow,
-        s"[$name] kept-set mismatch: driver=${driverKept(name)} " +
-          s"spark=$slow")
+      s"$what must run ZERO Spark jobs or queries, ran ${jobs.get()}")
+    out
+  }
+
+  /** File name -> index in key order. */
+  private def keyOrder(m: ManifestStore.Manifest): Map[String, Int] =
+    m.files.sortBy(_.minKey.toLong).map(_.name).zipWithIndex.toMap
+
+  /** Key-order indices of the files a PLAIN read (every file, no pruning)
+    * finds a row matching `cond` in. Parquet row-group pushdown is off:
+    * its float stats order -0.0 below 0.0 and would skip -0.0 rows that
+    * `= 0.0` matches.
+    */
+  private def holding(root: String, m: ManifestStore.Manifest,
+                      cond: Column): Set[Int] = {
+    val idx = keyOrder(m)
+    spark.conf.set("spark.sql.parquet.filterPushdown", "false")
+    try spark.read.parquet(m.files.map(f => s"$root/files/${f.name}"): _*)
+      .filter(cond).select(element_at(split(input_file_name(), "/"), -1))
+      .distinct().collect().map(r => idx(r.getString(0))).toSet
+    finally spark.conf.unset("spark.sql.parquet.filterPushdown")
+  }
+
+  /** Prune every case without a job, then check each kept set against a
+    * plain read (sound) and against its pin (as strong as pinned).
+    */
+  private def checkCases(root: String, st: ManifestStore,
+                         cases: Seq[(String, Seq[(String, String, Any)], Column)],
+                         pins: Map[String, Seq[Int]]): Map[String, Seq[Int]] = {
+    val m = st.currentManifest.get
+    val idx = keyOrder(m)
+    ManifestStore.clearBloomCache()
+    val kept = jobless("driver-side pruning") {
+      cases.map { case (name, preds, _) =>
+        name -> st.prunedFiles(m, preds).map(f => idx(f.name)).sorted
+      }.toMap
     }
+    cases.foreach { case (name, _, cond) =>
+      val need = holding(root, m, cond)
+      assert(need.subsetOf(kept(name).toSet),
+        s"[$name] unsound: rows in files $need, kept ${kept(name)}")
+      assert(kept(name) == pins(name),
+        s"[$name] kept ${kept(name)}, pinned ${pins(name)}")
+    }
+    kept
+  }
+
+  // kept sets as file indices in key order (file k holds ids
+  // [100k, 100k + 99]), captured before the Spark-job evaluator was
+  // deleted: where it and the driver evaluator agreed, and for the cast
+  // shapes the sets it alone computed
+  private val gridPins: Map[String, Seq[Int]] = Map(
+    "key eq" -> Seq(1),
+    "key gt" -> Seq(5, 6, 7),
+    "key le" -> Seq(0, 1, 2),
+    "key ne single" -> Seq(0, 1, 2, 3, 4, 5, 6, 7),
+    "key in small" -> Seq(0, 4, 7),
+    "string eq (bloomed)" -> Seq(2),
+    "string eq absent" -> Seq(),
+    "string prefix" -> Seq(2),
+    "string in" -> Seq(0, 7),
+    "string isnull" -> Seq(0, 1, 2, 3, 4, 5, 6, 7),
+    "string notnull + range" -> Seq(0, 1, 2, 3),
+    "double gt" -> Seq(0, 1, 2, 3, 4, 5, 6, 7),
+    "double eq" -> Seq(0),
+    "double le NaN (NaN greatest)" -> Seq(0, 1, 2, 3, 4, 5, 6, 7),
+    "float eq" -> Seq(0, 1, 2, 3, 4, 5, 6, 7),
+    "float gt all" -> Seq(),
+    "int in" -> Seq(0, 7),
+    "int ge" -> Seq(5, 6, 7),
+    "date eq (java.sql)" -> Seq(0, 3, 4, 7),
+    "date lt (LocalDate)" -> Seq(0, 3, 7),
+    "ts gt (java.sql)" -> Seq(4, 5, 6, 7),
+    "ts le (Instant)" -> Seq(0, 1),
+    "ntz gt" -> Seq(4, 5, 6, 7),
+    "ntz le" -> Seq(0, 1),
+    "ntz eq (bloomed)" -> Seq(2),
+    "ntz eq fractional absent (bloomed)" -> Seq(),
+    "extreme date eq (bloomed)" -> Seq(1),
+    "extreme date gt" -> Seq(4, 5, 6, 7),
+    "extreme date in (bloomed)" -> Seq(4, 7),
+    "decimal eq" -> Seq(1),
+    "decimal lt" -> Seq(0, 1, 2, 3),
+    "decimal gt off-grid" -> Seq(1, 2, 3, 4, 5, 6, 7),
+    "decimal ge off-grid" -> Seq(1, 2, 3, 4, 5, 6, 7),
+    "decimal lt off-grid" -> Seq(0, 1, 2, 3),
+    "decimal le off-grid" -> Seq(0, 1, 2, 3),
+    "decimal eq off-grid (no row can match)" -> Seq(),
+    "decimal in mixed grid" -> Seq(1, 7),
+    "decimal beyond max lt (keeps non-null)" -> Seq(0, 1, 2, 3, 4, 5, 6, 7),
+    "decimal beyond max gt (no row can match)" -> Seq(),
+    "decimal integral probe" -> Seq(3),
+    "float zero ge (+0 probe on -0 stats)" -> Seq(0, 1, 2, 3, 4, 5, 6, 7),
+    "float zero le (-0 probe)" -> Seq(0, 1, 2, 3),
+    "float zero eq (bloomed)" -> Seq(0, 1, 2, 3),
+    "float zero eq neg (bloomed)" -> Seq(0, 1, 2, 3),
+    "float zero in" -> Seq(0, 1, 2, 3),
+    "bool eq" -> Seq(0, 1, 2, 3, 4, 5, 6, 7),
+    "struct leaf eq (bloomed)" -> Seq(1),
+    "struct leaf in" -> Seq(0),
+    "struct leaf range" -> Seq(0, 1, 2, 3, 4, 5, 6, 7),
+    "conjunction mixed" -> Seq(1, 2),
+    "or two ranges" -> Seq(0, 7),
+    "or with bloom branch" -> Seq(0, 6),
+    "or nested" -> Seq(0, 4, 7),
+    "string on long key eq" -> Seq(1),
+    "string on long key lt" -> Seq(0, 1, 2),
+    "string on long key in" -> Seq(0, 4),
+    "tsLong" -> Seq(4, 5, 6, 7),
+    "oversized IN" -> Seq(0, 1, 2, 3, 4, 5, 6, 7)
+  )
+
+  private val truncPins: Map[String, Seq[Int]] = Map(
+    "eq" -> Seq(2),
+    "prefix" -> Seq(7),
+    "lt" -> Seq(0, 1, 2, 3, 4),
+    "in" -> Seq(0)
+  )
+
+  test("kept sets identical driver-vs-Spark across the typed grid; " +
+    "the driver path runs ZERO Spark jobs") {
+    val (root, st) = mkTyped(truncate = None)
+    assert(st.currentManifest.get.files.size == 8)
+    val kept = checkCases(root, st,
+      grid.map { case (n, ps) => (n, ps, rowCond(ps)) }, gridPins)
     // sanity: the grid actually prunes (not vacuously all-keep)
-    assert(driverKept("key eq").size == 1)
-    assert(driverKept("string eq absent").size <= 2) // bloom cut
-    assert(driverKept("or two ranges").size < m.files.size)
+    assert(kept("key eq").size == 1)
+    assert(kept("string eq absent").size <= 2) // bloom cut
+    assert(kept("or two ranges").size < 8)
     // ±0.0: the -0.0-statted files 0-3 are KEPT against a +0.0 probe
     // (all 8 survive `>= 0.0`), and only they survive `<= -0.0` / `= 0.0`
-    assert(driverKept("float zero ge (+0 probe on -0 stats)").size == 8)
-    assert(driverKept("float zero le (-0 probe)").size == 4)
-    assert(driverKept("float zero eq (bloomed)").size == 4)
-    assert(driverKept("float zero eq neg (bloomed)").size == 4)
+    assert(kept("float zero ge (+0 probe on -0 stats)").size == 8)
+    assert(kept("float zero le (-0 probe)").size == 4)
+    assert(kept("float zero eq (bloomed)").size == 4)
+    assert(kept("float zero eq neg (bloomed)").size == 4)
     // off-grid decimals prune EXACTLY: `> 1.225` keeps the file whose
     // max is on-grid 1.23+ (7 of 8), an off-grid `=` keeps nothing, a
     // beyond-range `<` keeps everything, an integral probe lands on-grid
-    assert(driverKept("decimal gt off-grid").size == 7)
-    assert(driverKept("decimal lt off-grid").size == 4)
-    assert(driverKept("decimal eq off-grid (no row can match)").isEmpty)
-    assert(driverKept("decimal beyond max lt (keeps non-null)").size == 8)
-    assert(driverKept("decimal beyond max gt (no row can match)").isEmpty)
-    assert(driverKept("decimal integral probe").size == 1)
+    assert(kept("decimal gt off-grid").size == 7)
+    assert(kept("decimal lt off-grid").size == 4)
+    assert(kept("decimal eq off-grid (no row can match)").isEmpty)
+    assert(kept("decimal beyond max lt (keeps non-null)").size == 8)
+    assert(kept("decimal beyond max gt (no row can match)").isEmpty)
+    assert(kept("decimal integral probe").size == 1)
     // extreme-year date renderings really probe (not vacuous keeps)
-    assert(driverKept("extreme date eq (bloomed)").size == 1)
-    assert(driverKept("extreme date gt").size == 4)
-    assert(driverKept("ntz eq fractional absent (bloomed)").size <= 1)
+    assert(kept("extreme date eq (bloomed)").size == 1)
+    assert(kept("extreme date gt").size == 4)
+    assert(kept("ntz eq fractional absent (bloomed)").size <= 1)
   }
 
-  test("truncated string stats: both paths agree and stay sound") {
+  test("unsupported value shapes fall back and still agree") {
+    // values `dom.convert` refuses fall back to the driver-side cast; the
+    // pins are the sets the Spark-job evaluator computed for them
+    val (root, st) = mkTyped(truncate = None)
+    val kept = checkCases(root, st, castShapes, gridPins)
+    // a raw Long on a TIMESTAMP column is epoch SECONDS (cast semantics,
+    // not internal micros): hour 400 of the ramp splits the files in half
+    assert(kept("tsLong").size == 4)
+  }
+
+  test("oversized IN rides the shared phase-3 fold in both modes") {
+    // an IN past `InPruneMaxValues`: its Bloom cut is phase 3, on the
+    // one evaluator both former modes now share
+    val (root, st) = mkTyped(truncate = None)
+    val odd: Seq[Any] = (0L until 10050L).map(i => i * 2 + 1) // mostly absent
+    checkCases(root, st,
+      Seq(("oversized IN", Seq(("id", "in", odd)), col("id").isin(odd: _*))),
+      gridPins)
+  }
+
+  test("truncated string stats: kept sets sound against a plain read and " +
+    "pinned") {
     val (root, st) = mkTyped(truncate = Some(6))
-    val m = st.currentManifest.get
     val preds = Seq(
-      Seq(("s", "=", "str-250"): (String, String, Any)),
-      Seq(("s", "startswith", "str-7"): (String, String, Any)),
-      Seq(("s", "<", "str-400"): (String, String, Any)),
-      Seq(("s", "in", Seq("str-001", "str-799")): (String, String, Any)))
-    preds.foreach { ps =>
-      assert(keptNames(st, m, ps, driver = true) ==
-        keptNames(st, m, ps, driver = false), s"mismatch on $ps")
-    }
+      "eq" -> Seq(("s", "=", "str-250"): (String, String, Any)),
+      "prefix" -> Seq(("s", "startswith", "str-7"): (String, String, Any)),
+      "lt" -> Seq(("s", "<", "str-400"): (String, String, Any)),
+      "in" -> Seq(("s", "in", Seq("str-001", "str-799")): (String, String, Any)))
+    checkCases(root, st, preds.map { case (n, ps) => (n, ps, rowCond(ps)) },
+      truncPins)
     // soundness through truncation: the hit row is still found
     assert(spark.read.format("graft").load(root)
       .filter(col("s") === "str-250").count() == 1)
   }
 
-  test("unsupported value shapes fall back and still agree") {
-    val (_, st) = mkTyped(truncate = None)
-    val m = st.currentManifest.get
-    // a String probe on the Long key: driver conversion refuses, the
-    // legacy path computes — and both modes return the same set
-    val odd: Seq[(String, String, Any)] = Seq(("id", "=", "123"))
-    assert(keptNames(st, m, odd, driver = true) ==
-      keptNames(st, m, odd, driver = false))
-    // a raw Long probe on a TIMESTAMP column: the Column path evaluates
-    // `lit(long).cast(timestamp)` as epoch SECONDS — the driver domain
-    // REFUSES the Long (treating it as internal micros would disagree by
-    // 10^6) and both modes compute the identical, Column-decided set
-    val tsLong: Seq[(String, String, Any)] =
-      Seq(("ts", ">", java.lang.Long.valueOf(1704067200L + 400L * 3600L)))
-    assert(keptNames(st, m, tsLong, driver = true) ==
-      keptNames(st, m, tsLong, driver = false))
-    assert(keptNames(st, m, tsLong, driver = true).size == 4)
-  }
-
   test("stats-answered aggregates fold driver-side: same answers as " +
     "the Spark fold, zero jobs") {
     import ManifestStore.StatAgg
-    val (_, st) = mkTyped(truncate = None)
+    val (root, st) = mkTyped(truncate = None)
     val m = st.currentManifest.get
-    val cases: Seq[(Seq[(String, String, Any)], Seq[ManifestStore.StatAgg])] =
-      Seq(
-        (Nil, Seq(StatAgg.CountStar, StatAgg.MinCol("id"),
-          StatAgg.MaxCol("id"))),
-        (Nil, Seq(StatAgg.MinCol("dt"), StatAgg.MaxCol("ts"),
-          StatAgg.MinCol("dec"), StatAgg.MaxCol("fl"),
-          StatAgg.MinCol("d"), StatAgg.MaxCol("i32"),
-          StatAgg.MinCol("nt"), StatAgg.MaxCol("nt"))),
-        (Nil, Seq(StatAgg.CountCol("s"), StatAgg.MinCol("s"),
-          StatAgg.MaxCol("b"))),
-        // exactness fallback parity: a predicate no file is pure under
-        // must refuse in BOTH modes
-        (Seq(("b", "=", true)), Seq(StatAgg.CountStar)),
-        // a range predicate (file-aligned or not, both modes must agree)
-        (Seq(("id", "<", 400L)), Seq(StatAgg.CountStar)),
-        (Seq(("id", ">=", 100L), ("id", "<", 300L)),
-          Seq(StatAgg.CountStar, StatAgg.CountCol("s"))))
-    def run(driver: Boolean): Seq[Option[Seq[Any]]] = {
-      spark.conf.set("spark.graft.prune.driverEval", driver.toString)
-      try cases.map { case (preds, aggs) => st.aggFromStats(m, preds, aggs) }
-      finally spark.conf.set("spark.graft.prune.driverEval", "true")
+    val tsSec = 1704067200L + 400L * 3600L
+    // (predicates, aggregates, the row filter the predicates stand for)
+    val cases: Seq[(Seq[(String, String, Any)], Seq[ManifestStore.StatAgg],
+        Column)] = Seq(
+      (Nil, Seq(StatAgg.CountStar, StatAgg.MinCol("id"),
+        StatAgg.MaxCol("id")), lit(true)),
+      (Nil, Seq(StatAgg.MinCol("dt"), StatAgg.MaxCol("ts"),
+        StatAgg.MinCol("dec"), StatAgg.MaxCol("fl"),
+        StatAgg.MinCol("d"), StatAgg.MaxCol("i32"),
+        StatAgg.MinCol("nt"), StatAgg.MaxCol("nt")), lit(true)),
+      (Nil, Seq(StatAgg.CountCol("s"), StatAgg.MinCol("s"),
+        StatAgg.MaxCol("b")), lit(true)),
+      // a predicate no file is pure under refuses
+      (Seq(("b", "=", true)), Seq(StatAgg.CountStar), col("b") === true),
+      // file-aligned range predicates answer
+      (Seq(("id", "<", 400L)), Seq(StatAgg.CountStar), col("id") < 400L),
+      (Seq(("id", ">=", 100L), ("id", "<", 300L)),
+        Seq(StatAgg.CountStar, StatAgg.CountCol("s")),
+        col("id") >= 100L && col("id") < 300L),
+      // a String on the Long key: decided through the cast, answers
+      (Seq(("id", "<", "400")), Seq(StatAgg.CountStar),
+        col("id") < lit("400").cast("long")),
+      // a raw Long on TIMESTAMP (epoch seconds) — not file-aligned
+      (Seq(("ts", ">", java.lang.Long.valueOf(tsSec))), Seq(StatAgg.CountStar),
+        col("ts") > lit(tsSec).cast("timestamp")))
+    val answers = jobless("driver-side agg answers") {
+      cases.map { case (preds, aggs, _) => st.aggFromStats(m, preds, aggs) }
     }
-    val jobs = new AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
+    // which cases answer: pinned, so no stats answer is lost
+    assert(answers.map(_.isDefined) ==
+      Seq(true, true, true, false, true, true, true, false))
+    val t = spark.read.parquet(m.files.map(f => s"$root/files/${f.name}"): _*)
+    cases.zip(answers).foreach { case ((preds, aggs, cond), ans) =>
+      ans.foreach { got =>
+        val cols = aggs.map {
+          case StatAgg.CountStar   => count(lit(1))
+          case StatAgg.CountCol(c) => count(col(c))
+          case StatAgg.MinCol(c)   => min(col(c))
+          case StatAgg.MaxCol(c)   => max(col(c))
+        }
+        val want = t.filter(cond).agg(cols.head, cols.tail: _*).head().toSeq
+        assert(got == want, s"$preds $aggs: stats=$got, plain read=$want")
       }
     }
-    spark.sparkContext.addSparkListener(listener)
-    val fast = try run(driver = true)
-    finally {
-      Thread.sleep(500)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    assert(jobs.get() == 0,
-      s"driver-side agg answers must run ZERO Spark jobs, ran ${jobs.get()}")
-    val slow = run(driver = false)
-    cases.indices.foreach { i =>
-      assert(fast(i) == slow(i),
-        s"case $i answer mismatch: driver=${fast(i)} spark=${slow(i)}")
-    }
-    // sanity: the unfiltered answers actually computed (not all-None)
-    assert(fast(0).isDefined && fast(1).isDefined && fast(2).isDefined)
-    assert(fast(0).get.head == 800L)
+    assert(answers.head.get.head == 800L)
   }
 
   test("grouped stats-answered aggregates fold driver-side: same rows, " +
@@ -369,32 +518,58 @@ class DriverPruneSpec extends SparkSpec {
     val m = st.currentManifest.get
     val aggs = Seq(StatAgg.CountStar, StatAgg.CountCol("s"),
       StatAgg.MinCol("d"), StatAgg.MaxCol("ts"), StatAgg.MinCol("s"))
-    def run(driver: Boolean): Option[Set[Seq[Any]]] = {
-      spark.conf.set("spark.graft.prune.driverEval", driver.toString)
-      try st.aggFromStatsGrouped(m, Nil, Seq("part"), aggs)
-        .map(_.map(_.toSeq).toSet)
-      finally spark.conf.set("spark.graft.prune.driverEval", "true")
+    val got = jobless("driver-side grouped answers") {
+      st.aggFromStatsGrouped(m, Nil, Seq("part"), aggs)
     }
-    val jobs = new AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
+    assert(got.isDefined, "partition-pure fixture must answer")
+    val want = spark.read
+      .parquet(m.files.map(f => s"$root/files/${f.name}"): _*)
+      .groupBy("part").agg(count(lit(1)), count(col("s")), min(col("d")),
+        max(col("ts")), min(col("s")))
+      .collect().map(_.toSeq).toSet
+    assert(got.get.map(_.toSeq).toSet == want,
+      s"grouped: stats=${got.get} plain read=$want")
+    assert(want.size == 4) // part in 0..3
+  }
+
+  test("top-N and optimize's overlap groups sort on the driver: " +
+    "typed order, ZERO Spark jobs") {
+    import ManifestStore.FileEntry
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val (root, st) = mkTyped(truncate = None)
+    val m = st.currentManifest.get
+    val idx = keyOrder(m)
+    val (topN, groups, numeric, strings) = jobless("top-N and overlap groups") {
+      def top(c: String, asc: Boolean, n: Int): Seq[Int] =
+        st.topNFiles(m, m.files, c, asc, n).map(f => idx(f.name)).sorted
+      val topN = Seq(
+        top("id", asc = true, 150), top("i32", asc = false, 50),
+        // decimal, timestamp_ntz and boolean stats sort through their
+        // typed domains too
+        top("dec", asc = true, 15), top("nt", asc = false, 120),
+        top("b", asc = true, 10))
+      val groups = st.overlapGroups(m.files, LongType)
+        .map { case (f, g) => idx(f) -> g }
+      // overlapping ranges chain into one group; the same stats order
+      // as Longs under LongType and as strings ("9" > "40") under
+      // StringType
+      def fe(n: String, lo: String, hi: String) = FileEntry(n, lo, hi, 1L)
+      val layout = Seq(fe("a", "0", "10"), fe("b", "5", "20"),
+        fe("c", "21", "30"), fe("d", "30", "40"), fe("e", "100", "200"),
+        fe("x", "9", "9"))
+      val numeric = st.overlapGroups(layout, LongType)
+      val strings = st.overlapGroups(layout, StringType)
+      (topN, groups, numeric, strings)
     }
-    spark.sparkContext.addSparkListener(listener)
-    val fast = try run(driver = true)
-    finally {
-      Thread.sleep(500)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    assert(jobs.get() == 0,
-      s"driver-side grouped answers must run ZERO Spark jobs, " +
-        s"ran ${jobs.get()}")
-    val slow = run(driver = false)
-    assert(fast.isDefined, "partition-pure fixture must answer")
-    assert(fast == slow, s"grouped mismatch: driver=$fast spark=$slow")
-    assert(fast.get.size == 4) // part in 0..3
+    assert(topN == Seq(Seq(0, 1), Seq(7), Seq(0), Seq(6, 7),
+      (0 until 8)))
+    assert(groups == (0 until 8).map(i => i -> (i + 1L)).toMap)
+    assert(numeric == Map("a" -> 1L, "b" -> 1L, "x" -> 1L, "c" -> 2L,
+      "d" -> 2L, "e" -> 3L))
+    assert(strings == Map("a" -> 1L, "e" -> 2L, "c" -> 3L, "d" -> 3L,
+      "b" -> 4L, "x" -> 5L))
+    // the kept prefix holds the true top rows (a plain read)
+    assert(holding(root, m, col("id") < 150L) == topN.head.toSet)
   }
 
   test("canonDecimalPreds rewrite table: grid-exact ops, constants, " +
@@ -445,14 +620,5 @@ class DriverPruneSpec extends SparkSpec {
     assert(canon(or) == (("", "or", Seq(
       Seq(("dec", ">", bd("1.22")): (String, String, Any)),
       Seq(("s", "=", "x"): (String, String, Any))))))
-  }
-
-  test("oversized IN rides the shared phase-3 fold in both modes") {
-    val (_, st) = mkTyped(truncate = None)
-    val m = st.currentManifest.get
-    val vs: Seq[Any] = (0L until 10050L).map(i => i * 2 + 1) // mostly absent
-    val ps: Seq[(String, String, Any)] = Seq(("id", "in", vs))
-    assert(keptNames(st, m, ps, driver = true) ==
-      keptNames(st, m, ps, driver = false))
   }
 }

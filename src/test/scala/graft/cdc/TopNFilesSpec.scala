@@ -95,7 +95,7 @@ class TopNFilesSpec extends SparkSpec {
         colNulls = Map("d" -> 0L))
     }
     val m = manifest(files, statsCols = Seq("d"))
-    // decimal -> statParser None -> the in-Spark sweep; same answer shape
+    // decimal stats sort through their typed domain; same answer shape
     val kept = store.topNFiles(m, files, "d", asc = true, n = 15)
     assert(kept.map(_.name) === Seq("f0", "f1"), s"got ${kept.map(_.name)}")
     // a file with RECORDED nulls in the ordering column vetoes pruning

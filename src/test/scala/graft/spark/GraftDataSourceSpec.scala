@@ -214,7 +214,7 @@ class GraftDataSourceSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming tail reads VECTORIZED, masked snapshot included; kill switch reverts") {
+  test("streaming tail reads VECTORIZED, masked snapshot included; small batches demote to rows") {
     def lastBatchPlan(q: org.apache.spark.sql.streaming.StreamingQuery): String =
       q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
         .streamingQuery.lastExecution.executedPlan.toString
@@ -249,20 +249,11 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(colPlan.contains("ColumnarToRow"),
       s"streaming tail must read vectorized:\n$colPlan")
     assert(colCount == 129L) // 100 - 1 masked + 30 tail adds
-    spark.conf.set("spark.graft.read.streamColumnar", "false")
-    spark.conf.set("spark.graft.read.streamColumnarMinRows", "0")
-    val (rowCount, rowPlan) = try drain("graft_tail_vec_off")
-    finally {
-      spark.conf.unset("spark.graft.read.streamColumnar")
-      spark.conf.unset("spark.graft.read.streamColumnarMinRows")
-    }
-    assert(!rowPlan.contains("ColumnarToRow"),
-      s"kill switch must revert the stream to row-mode:\n$rowPlan")
-    assert(rowCount == colCount)
     // SMALL-BATCH demotion is the default: this 130-row lifecycle sits
     // far under streamColumnarMinRows (2M), so with no conf at all the
     // stream reads row-mode — the r15 fast path that refunds the
-    // vectorized setup constant on trickle epochs. Junk threshold values
+    // vectorized setup constant on trickle epochs — and its masked
+    // snapshot row stays masked on the row path. Junk threshold values
     // fall back to the default instead of throwing at planning.
     spark.conf.set("spark.graft.read.streamColumnarMinRows", "junk")
     val (defCount, defPlan) = try drain("graft_tail_vec_def")
@@ -293,7 +284,7 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(t2.select(col("_file")).distinct().count() === 4L)
   }
 
-  test("deletion-vector masked scans stay COLUMNAR; escape hatch falls to rows") {
+  test("deletion-vector masked scans stay COLUMNAR") {
     val root = newRoot
     val st = new ManifestStore(root, spark, "id")
     st.commit((0L until 4000L).map(i => (i, s"n$i", i.toDouble))
@@ -320,15 +311,6 @@ class GraftDataSourceSpec extends SparkSpec {
     // aggregates over the masked columnar scan agree with the complement
     assert(t.agg(sum($"v")).head().getDouble(0) ===
       (0L until 4000L).filterNot(_ % 1000 == 7).map(_.toDouble).sum)
-    // escape hatch: conf off restores the row-mode masked scan
-    spark.conf.set("spark.graft.read.maskedColumnar", "false")
-    try {
-      val t2 = spark.read.format("graft").load(root)
-      t2.collect()
-      assert(!t2.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        "escape hatch must fall back to row mode")
-      assert(t2.count() === 3996L)
-    } finally spark.conf.unset("spark.graft.read.maskedColumnar")
   }
 
   test("streaming: maxBytesPerTrigger paces the INITIAL SNAPSHOT too") {
