@@ -52,8 +52,8 @@ object ManifestStore {
   /** One immutable data file and its key statistics. `minKey`/`maxKey` are
     * the manifest serialization of the key column's min/max (zone-free
     * string cast; epoch micros for TimestampType); compare them only after
-    * deserializing through the key's real type (see
-    * [[ManifestStore.hitFileNames]]) — raw string comparison is wrong for
+    * parsing through the key's real type (see
+    * [[ManifestStore.pruneDomain]]) — raw string comparison is wrong for
     * unpadded numerics ("9" > "10").
     *
     * `dv` is the file's DELETION VECTOR sidecar (Delta's merge-on-read
@@ -379,7 +379,7 @@ object ManifestStore {
     * oversized-IN fold previously overspent by up to one sidecar): the
     * size check is one file stat, cache hits still load free, and a
     * refused load returns (None, 0) — the caller keeps the file on its
-    * range envelope, conservative as ever. A stat failure refuses too
+    * range verdict, conservative as ever. A stat failure refuses too
     * (the load would have failed the same way).
     */
   private[cdc] def loadBloomBilledCapped(rootKey: String,
@@ -975,6 +975,13 @@ object ManifestStore {
           ordOf(Ordering.Long),
           v => Some(ntzFmt.format(v.asInstanceOf[Long]))))
       case d: DecimalType =>
+        // renders through Spark's own decimal-to-string Cast, the one the
+        // stats and the Bloom builds ran (ParquetWriteBridge.statStringifier):
+        // plain text under ANSI, "0E-18" / "6.00000000000E-7" for small
+        // values otherwise, so no hand-rolled rendering matches both
+        val toStr = org.apache.spark.sql.catalyst.expressions.Cast(
+          org.apache.spark.sql.catalyst.expressions.BoundReference(0, d,
+            nullable = true), StringType, Some("UTC"))
         Some(PruneDomain(
           s => BigDecimal(s),
           { v =>
@@ -991,7 +998,11 @@ object ManifestStore {
             }
           },
           ordOf(Ordering.BigDecimal),
-          v => Some(v.asInstanceOf[BigDecimal].underlying.toString)))
+          // on the column's grid, as every stored value is; off it: None
+          v => scala.util.Try(v.asInstanceOf[BigDecimal].setScale(d.scale))
+            .toOption.filter(_.precision <= d.precision).map(x =>
+              toStr.eval(org.apache.spark.sql.catalyst.InternalRow(
+                Decimal(x))).toString)))
       case _ => None
     }
   }
@@ -1008,19 +1019,69 @@ object ManifestStore {
   private[cdc] def probeValue(dom: PruneDomain,
                               dt: org.apache.spark.sql.types.DataType,
                               v: Any, tz: String): Option[Option[Any]] = {
-    import org.apache.spark.sql.types._
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
     dom.convert(v) match {
       case Some(x) => Some(Some(x))
       case None => scala.util.Try(Cast(Literal(v), dt, Some(tz)).eval())
-        .toOption.map(x => Option(x).map { x => dt match {
-          // Catalyst's internal value -> the domain's
-          case FloatType | DoubleType | StringType | BooleanType => x
-          case _: DecimalType => x.asInstanceOf[Decimal].toBigDecimal
-          case _ => x.asInstanceOf[Number].longValue // ints, days, micros
-        }})
+        .toOption.map(x => Option(x).map(domainValue(dt, _)))
     }
   }
+
+  /** A non-null Catalyst internal value of type `dt` in `pruneDomain(dt)`'s
+    * domain: what a cast evaluates to ([[probeValue]]) and what a task
+    * reads from a key column ([[ManifestStore.hitFileNames]]).
+    */
+  private[cdc] def domainValue(dt: org.apache.spark.sql.types.DataType,
+                               x: Any): Any = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case FloatType | DoubleType | StringType | BooleanType => x
+      case _: DecimalType => x.asInstanceOf[Decimal].toBigDecimal
+      case _ => x.asInstanceOf[Number].longValue // ints, days, micros
+    }
+  }
+
+  /** Bloom probe hashes of the domain value `x`: its `dom.render` string,
+    * byte-identical to the rendering the sidecars hashed, plus the pre-r17
+    * "-0.0" for a zero float/double (see [[legacyZeroRender]]). None when
+    * no rendering is guaranteed: no Bloom test.
+    */
+  private[cdc] def bloomHashes(dom: PruneDomain,
+                               dt: org.apache.spark.sql.types.DataType,
+                               x: Any): Option[Seq[(Long, Long)]] =
+    dom.render(x).map(s => (s +: legacyZeroRender(dt, x).toSeq).map(r =>
+      graft.functions.BloomSketch.probeHashes(
+        org.apache.spark.unsafe.types.UTF8String.fromString(r))))
+
+  /** A file's key [min, max] parsed through `dom`: the one reading of key
+    * stats every key probe shares ([[ManifestStore#prunedFiles]]' key
+    * leaves, [[ManifestStore#hitFileNames]]' task pass). Right: the parsed
+    * range. Left(false): null stats, a file of null keys only, on which no
+    * comparison holds, so no key hits it. Left(true): a stat the domain
+    * cannot parse (older manifests stored a null stat as the string
+    * "null"), which every key hits.
+    */
+  private[cdc] def keyRange(f: FileEntry,
+                            dom: PruneDomain): Either[Boolean, (Any, Any)] =
+    if (f.minKey == null || f.maxKey == null) Left(false)
+    else scala.util.Try((dom.parse(f.minKey), dom.parse(f.maxKey)))
+      .toOption.toRight(true)
+
+  /** The (file, key) test of every key probe: the sought value `x` lies in
+    * the file's parsed [mn, mx] AND, when `hashes` is defined, the file's
+    * Bloom `blob` may hold it. Three-valued: a null operand (`x` None) is
+    * NULL. The blob is read only after the range test passes, so sidecar
+    * loads stay bounded by the files a read would open; a missing blob
+    * keeps the range verdict. Both [[prunedFiles]]' `=`/`in` leaves and
+    * [[hitFileNames]]' task pass run it.
+    */
+  private[cdc] def keyHolds(ord: Ordering[Any], mn: Any, mx: Any,
+                            x: Option[Any],
+                            hashes: Option[Seq[(Long, Long)]],
+                            blob: => Option[Array[Byte]]): Option[Boolean] =
+    x.map(y => ord.lteq(mn, y) && ord.gteq(mx, y) &&
+      hashes.forall(hs => blob.forall(b => hs.exists(h =>
+        graft.functions.BloomSketch.containsBlobHashed(b, h._1, h._2)))))
 
   /** Decimal probe values canonicalized onto the column's (precision,
     * scale) GRID before any pruning or exactness pass — every stored
@@ -1508,8 +1569,12 @@ final class ManifestStore(val root: String, spark: SparkSession,
     val colBlooms = Option(f.get("colBlooms")).filterNot(_.isNull).map { cb =>
       cb.fieldNames().asScala.map(c => c -> cb.path(c).asText()).toMap
     }.getOrElse(Map.empty[String, String])
-    FileEntry(f.path("name").asText(), f.path("minKey").asText(),
-      f.path("maxKey").asText(), f.path("rows").asLong(),
+    // a file of null keys only records JSON null stats: keep them null,
+    // not the string "null"
+    def keyStat(field: String): String =
+      Option(f.get(field)).filterNot(_.isNull).map(_.asText()).orNull
+    FileEntry(f.path("name").asText(), keyStat("minKey"),
+      keyStat("maxKey"), f.path("rows").asLong(),
       Option(f.get("dv")).filterNot(_.isNull).map(_.asText()),
       f.path("dvRows").asLong(0L), cols, f.path("bytes").asLong(0L),
       colNulls,
@@ -1641,7 +1706,9 @@ final class ManifestStore(val root: String, spark: SparkSession,
     }
 
   /** Inverse of [[statSerialize]]: a manifest stat string back to its
-    * native type, for pruning comparisons in the column's own ordering.
+    * native type as a Column, for the partition-overwrite scope's
+    * comparisons in the column's own ordering (planning parses stats on
+    * the driver through [[ManifestStore.pruneDomain]]).
     */
   private def statDeserialize(c: Column,
                               dt: org.apache.spark.sql.types.DataType): Column =
@@ -1805,7 +1872,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * [[prunedFiles]]): one unit per per-value probe AND per cache-cold
     * sidecar byte loaded (both ~ns-scale driver work) — ~20M is a few
     * hundred driver milliseconds; past it the remaining files keep
-    * conservatively on their phase-1 range envelope instead of stalling
+    * conservatively on their phase-1 range verdict instead of stalling
     * planning on either probing OR cold sidecar I/O.
     * `-Dgraft.inprobe.budget` is a test seam (specs pin the spent-budget
     * semantics without a 20M-unit fixture); junk falls back.
@@ -1894,7 +1961,8 @@ final class ManifestStore(val root: String, spark: SparkSession,
     // domain ([[ManifestStore.pruneDomain]]: the inverse of statSerialize,
     // Spark's own orderings). Three-valued logic mirrors SQL: None is
     // NULL, and a null conjunction DROPS a file like a WHERE does. A file
-    // without a usable stat (missing, all-null or unparseable) keeps; a
+    // without a usable stat (missing, all-null or unparseable) keeps,
+    // except a file of null keys only ([[ManifestStore.keyRange]]); a
     // value the domain cannot take ([[ManifestStore.probeValue]] None)
     // makes its leaf keep every file. Every pruning surface (scan
     // planning, feed planning, the skip-ahead mask, merge/delete
@@ -1907,7 +1975,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
     // value's range and another's bloom. False positives read a file;
     // false negatives are impossible (the build covers every key the
     // file ever held), so pruning stays sound. Oversized IN lists prune
-    // by their range envelope here; phase 3 restores their Bloom cut.
+    // by range alone here; phase 3 restores their Bloom cut.
     // 3VL conjunction: any false -> false, else any null -> null, else
     // true.
     def andAll(fns: Seq[FileEntry => Option[Boolean]],
@@ -1921,11 +1989,6 @@ final class ManifestStore(val root: String, spark: SparkSession,
       }
       if (sawNull) None else Some(true)
     }
-    // two-term 3VL conjunction (hot: runs per candidate file per leaf)
-    def and2(a: Option[Boolean], b: Option[Boolean]): Option[Boolean] =
-      if (a.contains(false) || b.contains(false)) Some(false)
-      else if (a.isEmpty || b.isEmpty) None
-      else Some(true)
     def or3(parts: Seq[FileEntry => Option[Boolean]], f: FileEntry)
         : Option[Boolean] = {
       var sawNull = false
@@ -1949,13 +2012,22 @@ final class ManifestStore(val root: String, spark: SparkSession,
       val mayBlob =
         if (c == keyField) nullPruned.exists(_.bloom.isDefined)
         else nullPruned.exists(_.colBlooms.contains(phys))
-      // the file's parsed (min, max); None = no usable stat, keep
-      def stats(f: FileEntry): Option[(Any, Any)] =
-        colRange(m, f, c).flatMap {
-          case (mnS, mxS) if mnS != null && mxS != null =>
-            scala.util.Try((dom.parse(mnS), dom.parse(mxS))).toOption
-          case _ => None
-        }
+      // `test` on the file's parsed (min, max). A file without a usable
+      // stat keeps, but key stats follow keyRange: a null-key-only file
+      // holds no comparison
+      def ranged(f: FileEntry)(test: (Any, Any) => Option[Boolean])
+          : Option[Boolean] = {
+        val r =
+          if (c == keyField)
+            ManifestStore.keyRange(f, dom).left.map(Option(_))
+          else colRange(m, f, c) match {
+            case Some((mnS, mxS)) if mnS != null && mxS != null =>
+              scala.util.Try((dom.parse(mnS), dom.parse(mxS))).toOption
+                .toRight(keep)
+            case _ => Left(keep)
+          }
+        r.fold(identity, { case (mn, mx) => test(mn, mx) })
+      }
       def value(x: Any) = ManifestStore.probeValue(dom, dt, x, tz)
       def blobOf(f: FileEntry): Option[Array[Byte]] =
         (if (c == keyField) f.bloom else f.colBlooms.get(phys))
@@ -1967,30 +2039,17 @@ final class ManifestStore(val root: String, spark: SparkSession,
       def ge3(a: Any, x: Option[Any]) = x.map(dom.ord.gteq(a, _))
       // probe hashes precomputed ONCE per value (not per file); None = no
       // Bloom test (no sidecar, null operand, or a rendering that can't be
-      // guaranteed byte-identical). A zero-valued float/double probes
-      // BOTH "0.0" and "-0.0" (see legacyZeroRender).
+      // guaranteed byte-identical)
       def hashesFor(x: Option[Any]): Option[Seq[(Long, Long)]] =
         if (!mayBlob) None
-        else x.flatMap(y => dom.render(y).map { s =>
-          (s +: ManifestStore.legacyZeroRender(dt, y).toSeq).map(r =>
-            graft.functions.BloomSketch.probeHashes(
-              org.apache.spark.unsafe.types.UTF8String.fromString(r)))
-        })
-      def bloomOk(f: FileEntry, hs: Option[Seq[(Long, Long)]]): Boolean =
-        hs.forall(h => blobOf(f) match {
-          case Some(blob) => h.exists(p => graft.functions.BloomSketch
-            .containsBlobHashed(blob, p._1, p._2))
-          case None => true
-        })
+        else x.flatMap(ManifestStore.bloomHashes(dom, dt, _))
       // range AND Bloom for one sought value
       def holds(f: FileEntry, mn: Any, mx: Any, x: Option[Any],
-                hs: Option[Seq[(Long, Long)]]): Option[Boolean] = {
-        val r = and2(le3(mn, x), ge3(mx, x))
-        if (r.contains(false) || !bloomOk(f, hs)) Some(false) else r
-      }
+                hs: Option[Seq[(Long, Long)]]): Option[Boolean] =
+        ManifestStore.keyHolds(dom.ord, mn, mx, x, hs, blobOf(f))
       op match {
         case ">" | ">=" | "<" | "<=" => value(v).fold(keepAll) { x =>
-          (f: FileEntry) => stats(f).fold(keep) { case (mn, mx) =>
+          (f: FileEntry) => ranged(f) { (mn, mx) =>
             op match {
               case ">"  => gt3(mx, x)
               case ">=" => ge3(mx, x)
@@ -2001,8 +2060,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
         }
         case "=" => value(v).fold(keepAll) { x =>
           val hs = hashesFor(x)
-          (f: FileEntry) =>
-            stats(f).fold(keep) { case (mn, mx) => holds(f, mn, mx, x, hs) }
+          (f: FileEntry) => ranged(f)(holds(f, _, _, x, hs))
         }
         case "!=" =>
           // only a SINGLE-VALUE file at exactly v prunes — its non-null
@@ -2011,7 +2069,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
           // the x-partition wholesale; under stats.truncate min == max
           // still implies exactness. A null operand prunes nothing.
           value(v).flatten.fold(keepAll) { x =>
-            (f: FileEntry) => stats(f).fold(keep) { case (mn, mx) =>
+            (f: FileEntry) => ranged(f) { (mn, mx) =>
               Some(!(dom.ord.equiv(mn, x) && dom.ord.equiv(mx, x)))
             }
           }
@@ -2024,52 +2082,47 @@ final class ManifestStore(val root: String, spark: SparkSession,
           dom.convert(p).fold(keepAll) { pv =>
             ManifestStore.prefixSuccessor(p).flatMap(dom.convert) match {
               case Some(uv) =>
-                (f: FileEntry) => stats(f).fold(keep) { case (mn, mx) =>
+                (f: FileEntry) => ranged(f) { (mn, mx) =>
                   Some(dom.ord.gteq(mx, pv) && dom.ord.lt(mn, uv))
                 }
               case None => // all-max prefix: no upper bound
                 (f: FileEntry) =>
-                  stats(f).fold(keep)(s => Some(dom.ord.gteq(s._2, pv)))
+                  ranged(f)((_, mx) => Some(dom.ord.gteq(mx, pv)))
             }
           }
         case "in" =>
-          val vs = v.asInstanceOf[Seq[Any]]
-          if (vs.size <= InPruneMaxValues) {
-            val conv = vs.map(value)
-            if (conv.exists(_.isEmpty)) keepAll
-            else {
-              val pairs = conv.map(x => (x.get, hashesFor(x.get)))
-              (f: FileEntry) => stats(f).fold(keep) { case (mn, mx) =>
-                // exists() 3VL: any true -> true, else any null -> null,
-                // else false
-                var sawNull = false
-                var hit = false
-                val it = pairs.iterator
-                while (!hit && it.hasNext) {
-                  val (x, h) = it.next()
-                  holds(f, mn, mx, x, h) match {
-                    case Some(true) => hit = true
-                    case None       => sawNull = true
-                    case _          =>
-                  }
+          val conv = v.asInstanceOf[Seq[Any]].map(value)
+          if (conv.exists(_.isEmpty)) keepAll
+          else if (conv.size <= InPruneMaxValues) {
+            val pairs = conv.map(x => (x.get, hashesFor(x.get)))
+            (f: FileEntry) => ranged(f) { (mn, mx) =>
+              // exists() 3VL: any true -> true, else any null -> null,
+              // else false
+              var sawNull = false
+              var hit = false
+              val it = pairs.iterator
+              while (!hit && it.hasNext) {
+                val (x, h) = it.next()
+                holds(f, mn, mx, x, h) match {
+                  case Some(true) => hit = true
+                  case None       => sawNull = true
+                  case _          =>
                 }
-                if (hit) Some(true) else if (sawNull) None else Some(false)
               }
+              if (hit) Some(true) else if (sawNull) None else Some(false)
             }
           } else {
-            // oversized: the values' range envelope only — two
-            // comparisons per file at ANY key count
-            val cmp = new Ordering[Any] {
-              def compare(a: Any, b: Any): Int =
-                a.asInstanceOf[Comparable[Any]].compareTo(b)
+            // oversized: the range test alone (phase 3 runs the Bloom
+            // cut), exact at any key count — each file's min is binary-
+            // searched in the non-null values, sorted once, and the file
+            // holds one iff the next value up is <= its max
+            val xs = conv.flatMap(_.get).toIndexedSeq.sorted(dom.ord)
+            val sawNull = xs.size < conv.size
+            (f: FileEntry) => ranged(f) { (mn, mx) =>
+              val i = xs.search(mn)(dom.ord).insertionPoint
+              if (i < xs.size && dom.ord.lteq(xs(i), mx)) Some(true)
+              else if (sawNull) None else Some(false)
             }
-            scala.util.Try((vs.min(cmp), vs.max(cmp))).toOption
-              .flatMap { case (lo, hi) =>
-                for (lx <- value(lo); hx <- value(hi)) yield
-                  (f: FileEntry) => stats(f).fold(keep) { case (mn, mx) =>
-                    and2(ge3(mx, lx), le3(mn, hx))
-                  }
-              }.getOrElse(keepAll) // non-comparable: no pruning
           }
         case _ => keepAll
       }
@@ -2090,9 +2143,9 @@ final class ManifestStore(val root: String, spark: SparkSession,
     val conds = statted.map(compile)
     val bloomed = nullPruned.filter(f => andAll(conds, f).contains(true))
     // PHASE 3 (driver-side): IN lists past InPruneMaxValues pruned by
-    // their range envelope above — exactly the DPP / runtime-filter case
-    // the sidecars were built for (on a hash-clustered/bucketed table a
-    // range envelope admits almost any join-key set). Probe each
+    // range alone above — exactly the DPP / runtime-filter case the
+    // sidecars were built for (on a hash-clustered/bucketed table a
+    // range test admits almost any join-key set). Probe each
     // surviving file's blob against the full key set directly:
     // double-hashes precomputed once per value, so the cost is
     // O(survivors x values x numHashes) byte reads, bounded by the
@@ -2109,7 +2162,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
       // — a 100k-key DPP filter over a 1k-file scan would otherwise stall
       // planning for seconds. One shared budget of per-value probes
       // across the WHOLE fold; once spent, the remaining files keep
-      // conservatively (their range envelope already held — skipping the
+      // conservatively (their range test already held — skipping the
       // probe loses pruning, never answers). A containing file exits on
       // its FIRST hit, so budget burns fastest exactly where files don't
       // contain the keys — the case worth capping. CACHE-COLD I/O bills
@@ -2130,7 +2183,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
           case None => files
           case Some(probes) if probes.isEmpty => files
           case Some(probes) => files.filter { f =>
-            if (budget <= 0L) true // spent: keep, range envelope held
+            if (budget <= 0L) true // spent: keep, range test held
             else blobOf(f) match {
               case None => true // blob-less file never Bloom-skips
               case Some(name) =>
@@ -2866,35 +2919,35 @@ final class ManifestStore(val root: String, spark: SparkSession,
       curV + 1
     }
 
-  /** Distributed bulk lookup: the table rows from ONLY the files whose key
-    * range intersects the key set in `keys` (a DataFrame with a
-    * [[Changelog.KeyCol]] column, any size — nothing collects beyond the
-    * O(#files) stats join). The caller joins the result against its keys;
-    * this prunes the scan. Range-clustered keys prune hard; uniform hash
-    * keys (fingerprints) degrade gracefully to a full scan.
+  /** Distributed bulk lookup: the table rows from ONLY the files that may
+    * hold a key of `keys` (a DataFrame with a [[Changelog.KeyCol]] column,
+    * any size). The keys stream through one task pass ([[hitFileNames]])
+    * against the O(#files) parsed stats shipped in its closure; nothing
+    * beyond the hit file names comes back to the driver. The caller joins
+    * the result against its keys; this prunes the scan. Range-clustered
+    * keys prune hard; uniform hash keys (fingerprints) degrade gracefully
+    * to a full scan, sharpened by key Bloom sidecars where they exist.
     */
   def readHit(keys: DataFrame): Option[DataFrame] =
     currentManifest.map { m =>
-      val hit = hitFileNames(keys.select(col(Changelog.KeyCol)).distinct(),
-        m.files, keyTypeOf(m))
+      val hit = hitFileNames(keys, m.files, keyTypeOf(m))
       readFiles(m, m.files.filter(f => hit(f.name)))
     }
 
-  /** Point lookup: read only the files whose key range contains one of
-    * `keys` — the O(files-hit) primary-key GET a CDC-maintained table
-    * serves. The same stats intersection merge pruning uses.
+  /** Point lookup: read only the files that may hold one of `keys` — the
+    * O(files-hit) primary-key GET a CDC-maintained table serves. Planned
+    * on the driver with no Spark job: [[prunedFiles]]' `in` leaf runs each
+    * key's range and Bloom test ([[ManifestStore.keyHolds]]), the same
+    * test merge pruning runs in its task pass. A key of another type goes
+    * through the cast a SQL `IN` runs ([[ManifestStore.probeValue]]); a
+    * null key matches nothing, and no keys read no file.
     */
   def lookup(keys: Seq[Any]): Option[DataFrame] =
     currentManifest.map { m =>
-      val keyType = keyTypeOf(m)
-      // string-typed key frame: hitFileNames casts through the key's real
-      // type, the same exact round-trip the stats themselves use
-      val keysDf = spark.createDataFrame(
-          keys.distinct.map(k => Tuple1(String.valueOf(k))))
-        .toDF(Changelog.KeyCol)
-      val hit = hitFileNames(keysDf, m.files, keyType)
-      readFiles(m, m.files.filter(f => hit(f.name)))
-        .filter(col(keyField).isin(keys: _*))
+      val hit =
+        if (keys.isEmpty) Nil
+        else prunedFiles(m, Seq((keyField, "in", keys.distinct)))
+      readFiles(m, hit).filter(col(keyField).isin(keys: _*))
     }
 
   /** Time travel: any version whose manifest survives AND whose files have
@@ -4318,58 +4371,68 @@ final class ManifestStore(val root: String, spark: SparkSession,
     }
   }
 
-  /** The file names of `files` whose [min,max] key range contains at least
-    * one of the batch's keys. Broadcast the (O(#files)) stats against the
-    * batch keys — both sides are small, the table itself is never consulted.
-    * The string-serialized stats and the batch keys are both cast through
-    * `keyType` so the containment test runs in the key's native ordering.
-    * A left-semi probe: duplicate keys cannot change its answer, so the
-    * keys are not deduplicated here (the merges pass their per-key net;
-    * [[readHit]] dedupes its arbitrary key frame, [[lookup]] its Seq).
+  /** The names of `files` that may hold a key of `keys`' [[Changelog.KeyCol]]
+    * column, in ONE task pass over the keys and no broadcast: the driver
+    * parses each file's key [min, max] through the key's domain
+    * ([[ManifestStore.pruneDomain]]) and ships the O(#files) stats in the
+    * task closure; each task casts its keys to `keyType`, tests every
+    * (file, key) pair with [[ManifestStore.keyHolds]] (range first, then
+    * the file's key Bloom sidecar, loaded lazily through the process LRU)
+    * and returns the files it hit, which the driver unions. A null key or
+    * null stats never hit; an unparseable stat always does
+    * ([[ManifestStore.keyRange]]). Duplicate keys cannot change the answer, so
+    * nothing is deduplicated; each task drains its partition, so a
+    * persisted input (the merges' net) is materialised by this pass once.
+    * Keys stream at any size; the work is O(keys x files) comparisons.
     */
-  private def hitFileNames(netP: DataFrame, files: Seq[FileEntry],
-                           keyType: org.apache.spark.sql.types.DataType): Set[String] =
-    if (files.isEmpty) Set.empty
-    else {
-      // ONE probe pass (this used to be two sequential passes, each
-      // re-scanning and re-distincting the batch keys; pinned in
-      // BloomFileSkipSpec): range intersection over stats already in
-      // memory — a file survives iff some batch key lands in its
-      // [min,max] — AND, where
-      // zone maps are blind (bucketed layouts, merge-grown overlap), the
-      // per-file key Bloom sharpening, in a single left-semi probe.
-      //
-      // The Bloom blob is NOT in the broadcast row: [[BloomSidecarContains]]
-      // loads it lazily through the process-wide byte-bounded LRU, and the
-      // CASE chain below guarantees the probe only evaluates for (file,
-      // key) pairs that already passed the range test (CaseWhen branch
-      // order is evaluation order — Catalyst cannot reorder it the way it
-      // may reorder conjuncts), so sidecar I/O stays bounded by the files
-      // a scan would otherwise READ, never the table (a 100k-file
-      // clustered table's point merge loads ~1 blob, not 100k) — now per
-      // PAIR, strictly tighter than the old per-phase bound. No false
-      // negatives (the filter covers every key the file ever held,
-      // DV-masked included), so pruning stays sound; files without a
-      // loadable filter (older vintage, property off, vacuumed sidecar)
-      // keep their range verdict via the `true` branches.
-      val statsDf = spark.createDataFrame(
-        files.map(f => (f.name, f.minKey, f.maxKey, f.bloom.orNull)))
-        .toDF("_f", "_min", "_max", "_bn")
-      // coalesce(false): a null range verdict (null stat or null key) must
-      // stay "no hit", exactly as the old `rangeCond && ...` conjunction
-      // treated it under three-valued logic.
-      val rangeOk = coalesce(
-        col("_k") >= statDeserialize(col("_min"), keyType) &&
-          col("_k") <= statDeserialize(col("_max"), keyType), lit(false))
-      val cond = when(!rangeOk, lit(false))
-        .when(col("_bn").isNull, lit(true))
-        .otherwise(sidecarMayContain(col("_bn"),
-          statSerialize(col("_k"), keyType)))
-      broadcast(statsDf)
-        .join(netP.select(col(Changelog.KeyCol).cast(keyType).as("_k")),
-          cond, "left_semi")
-        .collect().map(_.getString(0)).toSet
+  private def hitFileNames(keys: DataFrame, files: Seq[FileEntry],
+                           keyType: org.apache.spark.sql.types.DataType): Set[String] = {
+    val dom = ManifestStore.pruneDomain(keyType).getOrElse(
+      throw new IllegalArgumentException(
+        s"key type ${keyType.sql} has no stats domain"))
+    val ranges = files.map(f => f -> ManifestStore.keyRange(f, dom))
+    val always = ranges.collect { case (f, Left(true)) => f.name }.toSet
+    val stats: Array[(String, Any, Any, String)] = ranges.collect {
+      case (f, Right((mn, mx))) => (f.name, mn, mx, f.bloom.orNull)
+    }.toArray
+    if (stats.isEmpty) always
+    else always ++ {
+      val rk = rootKey
+      val dir = Paths.get(root, "files").toString
+      val qe = keys.select(col(Changelog.KeyCol).cast(keyType)).queryExecution
+      // one SQL execution, as a Dataset action runs: its stages (those that
+      // materialise a persisted input included) see the session's SQL conf
+      // — outside one, the merges' JSON parse stage ran 2–3x the CPU
+      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+          Some("hitFileNames")) {
+        qe.toRdd.mapPartitions { rows =>
+          // built per task: the closure ships only the stats and the type
+          val dom = ManifestStore.pruneDomain(keyType).get
+          val hit = new Array[Boolean](stats.length)
+          var left = stats.length
+          rows.foreach { r =>
+            if (left > 0 && !r.isNullAt(0)) {
+              val x = ManifestStore.domainValue(keyType, r.get(0, keyType))
+              lazy val hs = ManifestStore.bloomHashes(dom, keyType, x)
+              var i = 0
+              while (i < stats.length) {
+                val (_, mn, mx, bn) = stats(i)
+                if (!hit(i) && ManifestStore.keyHolds(dom.ord, mn, mx,
+                      Some(x), if (bn == null) None else hs,
+                      ManifestStore.loadBloom(rk, Paths.get(dir), bn))
+                    .contains(true)) {
+                  hit(i) = true
+                  left -= 1
+                }
+                i += 1
+              }
+            }
+          }
+          Iterator.single(stats.indices.filter(hit).map(stats(_)._1).toArray)
+        }.collect().flatten.toSet
+      }
     }
+  }
 
   /** Eagerly reclaim a lost-race attempt's data file AND its Bloom
     * sidecar — both are referenced by no manifest.
@@ -4387,16 +4450,6 @@ final class ManifestStore(val root: String, spark: SparkSession,
     */
   private def loadBloomSidecar(name: String): Option[Array[Byte]] =
     ManifestStore.loadBloom(rootKey, Paths.get(root, "files"), name)
-
-  /** [[BloomSidecarContains]] over a per-file sidecar-NAME column: the blob
-    * loads lazily (LRU) at evaluation, so planning joins don't ship blob
-    * bytes in their broadcast.
-    */
-  private def sidecarMayContain(name: Column, probeStr: Column): Column = {
-    import org.apache.spark.sql.graft.ParquetWriteBridge.{column, expression}
-    column(BloomSidecarContains(rootKey, Paths.get(root, "files").toString,
-      expression(name), expression(probeStr)))
-  }
 
   /** Grow `snap` with typed-null columns for any field the net carries
     * that the stored schema has never seen (additive drift).

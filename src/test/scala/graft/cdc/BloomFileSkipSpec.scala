@@ -73,9 +73,7 @@ class BloomFileSkipSpec extends SparkSpec {
     }
   }
 
-  test("sidecar probe loads lazily and agrees with the blob probe; " +
-    "a missing sidecar never prunes") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
+  test("keyHolds loads sidecars lazily, agrees with containsBlob") {
     import org.apache.spark.sql.types.StringType
     val bits = 1024; val hashes = 6
     val words = new Array[Long](bits / 64)
@@ -85,11 +83,19 @@ class BloomFileSkipSpec extends SparkSpec {
     val blob = BloomSketch.encode(words, bits, hashes)
     val dir = Files.createTempDirectory("sidecarprobe")
     Files.write(dir.resolve("probe.bloom"), blob)
-    def probe(name: String, v: String): Boolean =
-      BloomSidecarContains(s"sidecarprobe-spec-$dir", dir.toString,
-        Literal(UTF8String.fromString(name), StringType),
-        Literal(UTF8String.fromString(v), StringType))
-        .eval(null).asInstanceOf[Boolean]
+    val rootKey = s"sidecarprobe-spec-$dir"
+    val dom = ManifestStore.pruneDomain(StringType).get
+    val (lo, hi) = (UTF8String.fromString(""), UTF8String.fromString("~"))
+    var loads = 0
+    // the (file, key) test every key probe runs, against the range
+    // [mn, hi] and the sidecar `name`
+    def probe(name: String, v: String, mn: UTF8String = lo): Boolean = {
+      val x = UTF8String.fromString(v)
+      ManifestStore.keyHolds(dom.ord, mn, hi, Some(x),
+        ManifestStore.bloomHashes(dom, StringType, x),
+        { loads += 1; ManifestStore.loadBloom(rootKey, dir, name) })
+        .contains(true)
+    }
     members.foreach(m =>
       assert(probe("probe.bloom", m), s"false negative on $m"))
     (0 until 2000).foreach { i =>
@@ -98,38 +104,47 @@ class BloomFileSkipSpec extends SparkSpec {
         BloomSketch.containsBlob(blob, UTF8String.fromString(v)),
         s"lazy/blob probe divergence on $v")
     }
+    // lazy: a pair outside the file's range never reads the sidecar
+    val before = loads
+    assert(!probe("probe.bloom", "sk-1-17", mn = UTF8String.fromString("t")))
+    assert(loads == before, "a range miss loaded the sidecar")
     // missing / vacuumed / unreadable sidecar: "maybe contains" — the file
     // keeps its range verdict, never a false negative
     assert(probe("no-such.bloom", "anything"))
   }
 
-  test("merge-planning file intersection runs range AND bloom in ONE pass") {
+  test("lookup plans range AND bloom with 0 Spark jobs, 0 SQL executions") {
     val (_, st) = mkBucketed(bloom = true)
     ManifestStore.clearBloomCache() // sidecar loads are file I/O, not jobs
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sqls = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(); ()
       }
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          sqls.incrementAndGet(); ()
+        case _ =>
+      }
     }
     spark.sparkContext.addSparkListener(listener)
     val planned =
-      try st.lookup(Seq(17L)) // hitFileNames runs eagerly inside
+      try st.lookup(Seq(17L)) // planning runs eagerly inside
       finally {
         Thread.sleep(500) // listener bus drains async
         spark.sparkContext.removeSparkListener(listener)
       }
-    // one probe PASS = 3 scheduler jobs under AQE, with or without a key
-    // distinct (the lookup's keys are a local relation, deduped on the
-    // driver); the pre-r18 two-phase intersection ran the same pipeline
-    // twice = 6. A regression back to per-phase probing trips this.
-    assert(jobs.get() <= 3,
-      s"range+bloom intersection must plan in ONE pass (<= 3 AQE stage " +
-        s"jobs; the old two-phase path ran 6), ran ${jobs.get()}")
-    // and the single pass still prunes to ~1 bucket file
+    // the range and Bloom tests run over driver-held stats: no broadcast
+    // and no local-relation query
+    assert(jobs.get() == 0, s"lookup planning ran ${jobs.get()} jobs")
+    assert(sqls.get() == 0,
+      s"lookup planning ran ${sqls.get()} SQL executions")
+    // and the driver plan still prunes to ~1 bucket file
     assert(plannedFiles(planned.get) <= 2,
-      "bloom sharpening lost its pruning power in the fused pass")
+      "bloom sharpening lost its pruning power in lookup planning")
   }
 
   test("bucketed point lookup plans ~1 file with blooms, all without") {
@@ -168,7 +183,7 @@ class BloomFileSkipSpec extends SparkSpec {
         .filter(col("id") === k).count()
       assert(got == 1L, s"bloom pruning lost key $k")
     }
-    // the bulk-lookup path (hitFileNames) agrees
+    // the point-lookup path agrees
     val looked = st.lookup(keys).get.select("id").as[Long].collect().sorted
     assert(looked.toSeq == keys.toSeq)
   }

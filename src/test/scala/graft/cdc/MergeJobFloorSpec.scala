@@ -85,6 +85,26 @@ class MergeJobFloorSpec extends SparkSpec {
     }._1
   }
 
+  /** The SQL executions `body` starts: a Dataset action over a local
+    * relation runs one without any Spark job.
+    */
+  private def sqlExecutionsOf(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => n.incrementAndGet(); ()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try body
+    finally {
+      Thread.sleep(500) // the listener bus delivers asynchronously
+      spark.sparkContext.removeSparkListener(l)
+    }
+    n.get()
+  }
+
   private def report(name: String, jobs: Seq[String]): Unit =
     println(s"[job floor] $name: ${jobs.size} jobs: " +
       jobs.groupBy(identity).toSeq.sortBy(-_._2.size)
@@ -107,7 +127,8 @@ class MergeJobFloorSpec extends SparkSpec {
     assert(!jobs.exists(_.startsWith("applyMasks:collect")), jobs)
     // sidecars are read through their schema, never inferred
     assert(!jobs.exists(_.endsWith(":parquet")), jobs)
-    assert(jobs.size <= 14, s"mergeOnRead ran ${jobs.size} jobs: $jobs")
+    assert(jobs.count(_.startsWith("hitFileNames")) <= 1, jobs)
+    assert(jobs.size <= 11, s"mergeOnRead ran ${jobs.size} jobs: $jobs")
   }
 
   test("copy-on-write commit stays at its job floor") {
@@ -119,17 +140,22 @@ class MergeJobFloorSpec extends SparkSpec {
     }
     report("merge", jobs)
     assert(stats.exists(_.rewrittenFiles >= 2))
-    assert(jobs.count(_.startsWith("hitFileNames")) <= 4, jobs)
-    assert(jobs.size <= 12, s"merge ran ${jobs.size} jobs: $jobs")
+    // the key probe is one task pass over the net
+    assert(jobs.count(_.startsWith("hitFileNames")) <= 1, jobs)
+    assert(jobs.size <= 9, s"merge ran ${jobs.size} jobs: $jobs")
   }
 
-  test("point lookup plans in one probe") {
+  test("point lookup plans on the driver: 0 jobs, 0 SQL executions") {
     val st = seeded()
     st.mergeOnRead(netDf(Seq(10L, 60L, 110L), 1L), fields, batchId = 1)
-    val jobs = jobsOf {
-      st.lookup(Seq(60L, 61L, 60L))
+    var jobs = Seq.empty[String]
+    val sqls = sqlExecutionsOf {
+      jobs = jobsOf {
+        st.lookup(Seq(60L, 61L, 60L))
+      }
     }
     report("lookup", jobs)
-    assert(jobs.size <= 3, jobs)
+    assert(jobs.isEmpty, jobs)
+    assert(sqls == 0, s"lookup planning ran $sqls SQL executions")
   }
 }

@@ -175,10 +175,18 @@ class PacedSnapshotSpec extends SparkSpec {
     // slice planning — runs ZERO Spark jobs (r16: the zone-map cut
     // evaluates driver-side; r15's one cached mask job is gone too)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sqls = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(); ()
+      }
+      // a Dataset action over a local relation runs no job, only this
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          sqls.incrementAndGet(); ()
+        case _ =>
       }
     }
     spark.sparkContext.addSparkListener(listener)
@@ -191,6 +199,8 @@ class PacedSnapshotSpec extends SparkSpec {
     assert(jobs.get() == 0,
       s"pruned bootstrap planning must run jobless (driver-side " +
         s"zone-map cut), ran ${jobs.get()} jobs")
+    assert(sqls.get() == 0,
+      s"pruned bootstrap planning must run no SQL execution, ran ${sqls.get()}")
     assert(offs.size == keptNames.size,
       s"skip-ahead must drain in ${keptNames.size} rounds, got $offs")
     assert(planned == keptNames,

@@ -2,7 +2,9 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.cdc._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -31,11 +33,19 @@ class BatchFrontSpec extends SparkSpec {
     new ManifestCdcStream(spark, spark.emptyDataFrame, st, "id",
       cacheDir = tmp("front-cache"), checkpointDir = tmp("front-ckpt"))
 
-  private def jobsDuring(body: => Unit): Int = {
+  /** The Spark jobs and the SQL executions `body` starts: a Dataset
+    * action over a local relation runs an execution without any job.
+    */
+  private def jobsDuring(body: => Unit): (Int, Int) = {
     val jobs = new AtomicInteger(0)
+    val sqls = new AtomicInteger(0)
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(); ()
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => sqls.incrementAndGet(); ()
+        case _ =>
       }
     }
     spark.sparkContext.addSparkListener(l)
@@ -44,7 +54,7 @@ class BatchFrontSpec extends SparkSpec {
       Thread.sleep(500) // the listener bus delivers asynchronously
       spark.sparkContext.removeSparkListener(l)
     }
-    jobs.get()
+    (jobs.get(), sqls.get())
   }
 
   test("an empty batch commits nothing, keeps its id and runs <= 1 job") {
@@ -55,8 +65,9 @@ class BatchFrontSpec extends SparkSpec {
     empties.foreach { empty =>
       val st = new ManifestStore(tmp("front"), spark, "id")
       val s = stream(st)
-      val jobs = jobsDuring(s.processBatch(empty, 7L))
+      val (jobs, sqls) = jobsDuring(s.processBatch(empty, 7L))
       assert(jobs <= 1, s"an empty batch ran $jobs jobs")
+      assert(sqls <= 1, s"an empty batch ran $sqls SQL executions")
       assert(!st.exists, "an empty batch must not create the table")
       // the id is still free: the first real batch under it commits
       s.processBatch(Seq(event(1, 5, "int64", 10)).toDF("value"), 7L)
