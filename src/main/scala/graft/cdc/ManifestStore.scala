@@ -3,6 +3,7 @@ package graft.cdc
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetReadBridge
 import org.apache.spark.sql.types.StructType
 
 import java.nio.charset.StandardCharsets
@@ -951,8 +952,8 @@ object ManifestStore {
           v => Some(v.toString)))
       case TimestampNTZType =>
         // zone-free: stats serialize via `cast(ntz as string)` and parse
-        // back through Spark's OWN parser (the literal function
-        // statDeserialize's cast runs), probe values convert
+        // back through Spark's OWN parser (the one a
+        // string-to-NTZ cast runs), probe values convert
         // through Spark's own localDateTimeToMicros, and renderings come
         // from Spark's own fraction formatter (the renderer behind the
         // NTZ string cast — probe-verified byte-identical across whole
@@ -1314,6 +1315,19 @@ object ManifestStore {
       org.apache.spark.sql.types.StructField("_file",
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("_key", keyType)))
+
+  /** The parquet parts of deletion-vector sidecar `dv` under table `root`
+    * (a sidecar is a directory), with their sizes: one driver-side
+    * listing, shared by the engine's sidecar reads and the connector's
+    * input partitions ([[graft.spark.GraftPartitions]]`.forFiles`).
+    */
+  private[graft] def sidecarParts(root: String, dv: String): Seq[(String, Long)] = {
+    val s = Files.list(Paths.get(root, "files", dv))
+    try s.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(p => (p.toString, Files.size(p))).toList
+    finally s.close()
+  }
 
   /** One deletion-vector write TASK ([[ManifestStore]]`.applyMasks`): its
     * `(_file, _key, _new)` rows arrive sorted by (_file, _key); every
@@ -1705,82 +1719,86 @@ final class ManifestStore(val root: String, spark: SparkSession,
       case _ => c.cast("string")
     }
 
-  /** Inverse of [[statSerialize]]: a manifest stat string back to its
-    * native type as a Column, for the partition-overwrite scope's
-    * comparisons in the column's own ordering (planning parses stats on
-    * the driver through [[ManifestStore.pruneDomain]]).
-    */
-  private def statDeserialize(c: Column,
-                              dt: org.apache.spark.sql.types.DataType): Column =
-    dt match {
-      case org.apache.spark.sql.types.TimestampType =>
-        timestamp_micros(c.cast("long"))
-      case _ => c.cast(dt)
-    }
-
   /** The deletion-vector side of the masked anti-join, broadcast ONLY
     * while the manifest-recorded total mask rows are batch-scale
     * ([[ManifestStore.DvBroadcastMaxRows]]); past the gate the join
     * strategy is AQE's call and an oversized mask set degrades to a
     * shuffled join instead of a driver OOM.
     */
-  private def dvSide(dvPaths: Seq[String], totalDvRows: Long,
+  private def dvSide(dvs: Seq[String], totalDvRows: Long,
                      keyType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val dvDf = readSidecars(dvPaths, keyType)
+    val dvDf = readSidecars(dvs, keyType)
     val maxRows = spark.conf.getOption("spark.graft.manifest.dvBroadcastMaxRows")
       .map(_.toLong).getOrElse(ManifestStore.DvBroadcastMaxRows)
     if (totalDvRows <= maxRows) broadcast(dvDf) else dvDf
   }
 
-  /** Deletion-vector sidecars, read through their schema
+  /** The deletion-vector sidecars named `dvs`, read through their schema
     * ([[ManifestStore.dvSchema]]) instead of inferring it from the part
-    * footers — inference is a Spark job of its own on every read. A
-    * sidecar written under a narrower key type upcasts like its data file.
+    * footers — inference is a Spark job of its own on every read. Each
+    * sidecar directory is listed on the driver
+    * ([[ManifestStore.sidecarParts]]) and the scan is planned from those
+    * parts ([[ParquetReadBridge.manifestScan]]): no Spark listing at any
+    * sidecar count. A sidecar written under a narrower key type upcasts
+    * like its data file.
     */
-  private def readSidecars(dvPaths: Seq[String],
+  private def readSidecars(dvs: Seq[String],
                            keyType: org.apache.spark.sql.types.DataType): DataFrame =
-    spark.read.schema(ManifestStore.dvSchema(keyType)).parquet(dvPaths: _*)
+    ParquetReadBridge.manifestScan(spark, ManifestStore.dvSchema(keyType),
+      dvs.flatMap(ManifestStore.sidecarParts(root, _)))
+
+  /** The RAW rows of `entries`' data files (sidecars not applied) in one
+    * scan planned from their recorded paths and sizes
+    * ([[ParquetReadBridge.manifestScan]]): the manifest is the file
+    * listing, so no read lists storage, whatever the file count. Data
+    * files carry PHYSICAL column names; read through the physical schema
+    * and surface logical names (identity when no mapping).
+    */
+  private def scanFiles(m: Manifest, entries: Seq[FileEntry]): DataFrame = {
+    val schema = StructType.fromDDL(m.schemaDDL)
+    val physSchema = ManifestStore.toPhysical(schema, m.colMap)
+    val raw = ParquetReadBridge.manifestScan(spark, physSchema,
+      entries.map(e => (s"$root/files/${e.name}", e.bytes)))
+    if (m.colMap.isEmpty) raw
+    // struct-to-struct cast is POSITIONAL: it renames nested leaves back
+    // to their logical names in one expression (a no-op cast for
+    // unmapped columns never reaches here)
+    else raw.select(schema.fields.toSeq.zip(physSchema.fields).map {
+      case (lf, pf) =>
+        (if (lf.dataType == pf.dataType) col(s"`${pf.name}`")
+         else col(s"`${pf.name}`").cast(lf.dataType)).as(lf.name)
+    }: _*)
+  }
+
+  /** `data` — rows of `entries` tagged with their `_file` — minus every
+    * (file, key) pair the sidecars of `entries` mask: ONE anti-join
+    * against the union of the sidecars (broadcast while batch-scale — see
+    * [[dvSide]]), matched per (file, key) — a key masked in file F may
+    * legitimately live in a later upsert file, so the mask must never
+    * apply globally.
+    */
+  private def subtractMasks(data: DataFrame, entries: Seq[FileEntry],
+                            keyType: org.apache.spark.sql.types.DataType): DataFrame = {
+    val dvDf = dvSide(entries.flatMap(_.dv), entries.map(_.dvRows).sum, keyType)
+    data.join(dvDf, data("_file") === dvDf("_file") &&
+      data(keyField) === dvDf("_key"), "left_anti")
+  }
 
   /** The EFFECTIVE rows of `entries`: data files minus their deletion-
-    * vector sidecars. Sidecar-less files stream straight through one scan;
-    * masked files pay ONE anti-join against the union of their sidecars
-    * (broadcast while batch-scale — see [[dvSide]]), matched per
-    * (file, key) — a key masked in file F may legitimately live in a later
-    * upsert file, so the mask must never apply globally.
+    * vector sidecars. Sidecar-less files stream straight through one
+    * [[scanFiles]]; masked files pay [[subtractMasks]]' one anti-join.
     */
   private def readFiles(m: Manifest, entries: Seq[FileEntry]): DataFrame = {
     val schema = StructType.fromDDL(m.schemaDDL)
-    // data files carry PHYSICAL column names; read through the physical
-    // schema and surface logical names (identity when no mapping)
-    def scan(es: Seq[FileEntry]) = {
-      val physSchema = ManifestStore.toPhysical(schema, m.colMap)
-      val raw = spark.read.schema(physSchema)
-        .parquet(es.map(e => s"$root/files/${e.name}"): _*)
-      if (m.colMap.isEmpty) raw
-      // struct-to-struct cast is POSITIONAL: it renames nested leaves back
-      // to their logical names in one expression (a no-op cast for
-      // unmapped columns never reaches here)
-      else raw.select(schema.fields.toSeq.zip(physSchema.fields).map {
-        case (lf, pf) =>
-          (if (lf.dataType == pf.dataType) col(s"`${pf.name}`")
-           else col(s"`${pf.name}`").cast(lf.dataType)).as(lf.name)
-      }: _*)
-    }
     if (entries.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else {
       val (masked, plain) = entries.partition(_.dv.isDefined)
-      val plainDf = if (plain.isEmpty) None else Some(scan(plain))
+      val plainDf = if (plain.isEmpty) None else Some(scanFiles(m, plain))
       val maskedDf = if (masked.isEmpty) None
-      else {
-        val dvDf = dvSide(masked.flatMap(_.dv).map(d => s"$root/files/$d"),
-          masked.map(_.dvRows).sum, schema(keyField).dataType)
-        val data = scan(masked).withColumn("_file", fileBasename)
-        Some(data.join(dvDf,
-          data("_file") === dvDf("_file") &&
-            data(keyField) === dvDf("_key"), "left_anti").drop("_file"))
-      }
+        else Some(subtractMasks(scanFiles(m, masked).withColumn("_file", fileBasename),
+          masked, schema(keyField).dataType).drop("_file"))
       (plainDf ++ maskedDf).reduce(_ unionByName _)
     }
   }
@@ -1796,9 +1814,11 @@ final class ManifestStore(val root: String, spark: SparkSession,
     * partition readers subtract each file's OWN sidecar locally — measured
     * 4.5x faster than the anti-join below at the 60M-row table (STRESS.md,
     * round 9) and immune to table-wide mask totals by construction.
-    * Pristine tables stay on the plain union scan (identical plan either
-    * way, minus a manifest re-read). Subset reads ([[readWhere]],
-    * [[readHit]], [[lookup]]) keep the anti-join: their masked sets are
+    * Pristine tables take [[readFiles]]' parquet scan, planned from the
+    * manifest's recorded paths and sizes: no listing of storage, and
+    * Spark's split packing rather than the connector's one input
+    * partition per file. Subset reads ([[readWhere]], [[readHit]],
+    * [[lookup]]) keep the anti-join: their masked sets are
     * pruned/batch-bounded, and the connector addresses whole versions.
     */
   def read(): Option[DataFrame] = currentManifest.map { m =>
@@ -3761,11 +3781,9 @@ final class ManifestStore(val root: String, spark: SparkSession,
         // whose key has a surviving net event. Raw (not effective) scan:
         // re-masking an already-masked key is a no-op after the per-file
         // key dedup in the mask write, and it spares a second anti-join.
-        val schema = StructType.fromDDL(m.schemaDDL)
         val newMasks =
           if (touched.isEmpty) None
-          else Some(spark.read.schema(schema)
-            .parquet(touched.map(e => s"$root/files/${e.name}"): _*)
+          else Some(scanFiles(m, touched)
             .select(fileBasename.as("_file"),
               col(keyField).cast(keyType).as("_key"))
             .join(broadcast(liveKeys), Seq("_key"), "left_semi")
@@ -3970,11 +3988,11 @@ final class ManifestStore(val root: String, spark: SparkSession,
       case Some(mk) =>
         def tagged(df: DataFrame, isNew: Boolean) =
           df.select(col("_file"), col("_key").cast(keyType), lit(isNew).as("_new"))
-        val oldDvPaths = candidates.flatMap(_.dv).map(d => s"$root/files/$d")
+        val oldDvs = candidates.flatMap(_.dv)
         val fresh = tagged(mk, isNew = true)
-        val all = if (oldDvPaths.isEmpty) fresh
+        val all = if (oldDvs.isEmpty) fresh
           else fresh.unionByName(
-            tagged(readSidecars(oldDvPaths, keyType), isNew = false))
+            tagged(readSidecars(oldDvs, keyType), isNew = false))
         val parts = math.max(1,
           math.min(candidates.size, spark.sparkContext.defaultParallelism))
         val sorted = all.repartition(parts, col("_file"))
@@ -4093,25 +4111,11 @@ final class ManifestStore(val root: String, spark: SparkSession,
       val candidates =
         if (pruneConjuncts.isEmpty) m.files else prunedFiles(m, pruneConjuncts)
       if (candidates.isEmpty) return None
-      // physical read + logical rename: `cond` references logical names
-      val physSchema = ManifestStore.toPhysical(schema, m.colMap)
-      val data = spark.read.schema(physSchema)
-        .parquet(candidates.map(e => s"$root/files/${e.name}"): _*)
-        .withColumn("_file", fileBasename)
-        .select(schema.fields.toSeq.zip(physSchema.fields).map {
-          case (lf, pf) =>
-            (if (lf.dataType == pf.dataType) col(s"`${pf.name}`")
-             else col(s"`${pf.name}`").cast(lf.dataType)).as(lf.name)
-        } :+ col("_file"): _*)
-      val dvPaths = candidates.flatMap(_.dv).map(d => s"$root/files/$d")
+      // logical names: `cond` references them
+      val data = scanFiles(m, candidates).withColumn("_file", fileBasename)
       val live =
-        if (dvPaths.isEmpty) data
-        else {
-          val dvDf = dvSide(dvPaths, candidates.map(_.dvRows).sum, keyType)
-          data.join(dvDf,
-            data("_file") === dvDf("_file") &&
-              data(keyField) === dvDf("_key"), "left_anti")
-        }
+        if (candidates.forall(_.dv.isEmpty)) data
+        else subtractMasks(data, candidates, keyType)
       // full matched rows persisted (not just (_file, _key)): the CDF
       // capture needs the deleted rows' images, and the mask projection
       // derives from the same cached pass — still O(matches)
@@ -4287,36 +4291,39 @@ final class ManifestStore(val root: String, spark: SparkSession,
       // candidates = files whose per-column [min,max] boxes contain SOME
       // replaced tuple (per-tuple conjunction — the column-wise cross
       // product would wrongly catch cell (a,2) when replacing {(a,1),
-      // (b,2)}). One local O(#files) metadata job; a file without stats
-      // for a partition column is a conservative candidate.
-      val candidates: Seq[FileEntry] =
-        if (m.files.isEmpty) Nil
-        else {
-          import org.apache.spark.sql.types.{StringType => SStr, StructField}
-          val rows: Seq[org.apache.spark.sql.Row] = m.files.map { f =>
-            org.apache.spark.sql.Row.fromSeq(f.name +: pcs.flatMap { c =>
-              colRange(m, f, c) match {
-                case Some((mn, mx)) => Seq(mn, mx)
-                case None           => Seq(null, null)
-              }
-            })
-          }
-          val st = StructType(
-            StructField("_f", SStr, nullable = false) +: pcs.flatMap(c => Seq(
-              StructField(s"_min_$c", SStr, nullable = true),
-              StructField(s"_max_$c", SStr, nullable = true))))
-          val contains = org.apache.spark.sql.functions.exists(tupleArr,
-            t => pcs.map { c =>
-              val dt = schema(c).dataType
-              col(s"_min_$c").isNull ||
-                (statDeserialize(col(s"_min_$c"), dt) <= t.getField(c) &&
-                  statDeserialize(col(s"_max_$c"), dt) >= t.getField(c))
-            }.reduce(_ && _))
-          val keep = spark.createDataFrame(rows.asJava, st)
-            .filter(coalesce(contains, lit(false)))
-            .collect().map(_.getString(0)).toSet
-          m.files.filter(f => keep(f.name))
+      // (b,2)}), decided on the driver through each column's stats domain
+      // ([[ManifestStore.pruneDomain]]) with no Spark job. A column whose
+      // stats are missing or do not parse, whose type has no domain, or
+      // whose tuple value does not convert cannot rule a file out: such a
+      // file stays a candidate, and only a file whose every column HOLDS
+      // a tuple may drop wholesale below.
+      val tz = spark.conf.get("spark.sql.session.timeZone")
+      val doms = pcs.map(c => ManifestStore.pruneDomain(schema(c).dataType))
+      val probes: Seq[Seq[Option[Option[Any]]]] = tuples.map(t =>
+        pcs.indices.map(i => doms(i).flatMap(d =>
+          ManifestStore.probeValue(d, schema(pcs(i)).dataType, t(i), tz))))
+      // per file: (some tuple not ruled out, some tuple held in every column)
+      def scope(f: FileEntry): (Boolean, Boolean) = {
+        // each column's parsed [min, max] with its ordering; None: unknown
+        val ranges = pcs.zip(doms).map { case (c, dom) =>
+          for {
+            d <- dom
+            (mn, mx) <- colRange(m, f, c) if mn != null && mx != null
+            r <- scala.util.Try((d.parse(mn), d.parse(mx))).toOption
+          } yield (d.ord, r)
         }
+        // Some(b): the column decides; None: it cannot
+        val verdicts = probes.map(_.zip(ranges).map {
+          case (Some(x), Some((ord, (lo, hi)))) =>
+            Some(x.exists(v => ord.lteq(lo, v) && ord.gteq(hi, v)))
+          case _ => None
+        })
+        (verdicts.exists(!_.contains(Some(false))),
+          verdicts.exists(_.forall(_.contains(true))))
+      }
+      val scoped = m.files.map(f => (f, scope(f)))
+      val candidates = scoped.collect { case (f, (true, _)) => f }
+      val held = scoped.collect { case (f, (_, true)) => f.name }.toSet
       val candNames = candidates.map(_.name).toSet
       val carried = m.files.filterNot(f => candNames(f.name))
       // a candidate DROPS wholesale only when provably pure: min = max in
@@ -4324,7 +4331,7 @@ final class ManifestStore(val root: String, spark: SparkSession,
       // ignore nulls, so a "pure" file could still hide NULL-partition
       // rows — those must survive; unknown null counts demote to
       // straddler, which reads and rewrites: slower, never wrong)
-      val (dropped, straddlers) = candidates.partition(f =>
+      val (dropped, straddlers) = candidates.partition(f => held(f.name) &&
         pcs.forall(c =>
           colRange(m, f, c).exists { case (mn, mx) =>
             mn != null && mn == mx } &&

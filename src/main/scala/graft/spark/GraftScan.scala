@@ -932,31 +932,20 @@ object GraftPartitions {
     translated.toArray
   }
 
+  /** One input partition per manifest file, planned from the manifest: the
+    * recorded path and size (a size of 0, recorded before sizes were, is
+    * read from the file system) plus the file's sidecar parts, listed on
+    * the driver by [[ManifestStore.sidecarParts]] — the same listing the
+    * store's own sidecar reads use. No Spark listing job at any size.
+    */
   def forFiles(root: String, files: Seq[ManifestStore.FileEntry])
       : Seq[GraftInputPartition] =
     files.map { f =>
       val path = s"$root/files/${f.name}"
       val bytes = if (f.bytes > 0) f.bytes else Files.size(Paths.get(path))
-      val dvParts: Array[(String, Long)] = f.dv match {
-        case None => Array.empty
-        case Some(d) =>
-          val dir = Paths.get(root, "files", d)
-          val s = Files.list(dir)
-          try s.iterator().asScala()
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .map(p => (p.toString, Files.size(p))).toArray
-          finally s.close()
-      }
+      val dvParts = f.dv.toArray.flatMap(ManifestStore.sidecarParts(root, _))
       GraftInputPartition(path, bytes, f.name, dvParts)
     }
-
-  // java.util.Iterator pimp without importing CollectionConverters at use site
-  private implicit class JIter[A](val it: java.util.Iterator[A]) extends AnyVal {
-    def asScala(): Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
-  }
 
   /** Build the serializable reader factory. Three per-file reader closures
     * are prepared on the driver (capturing the broadcast Hadoop conf, as

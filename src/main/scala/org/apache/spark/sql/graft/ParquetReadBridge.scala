@@ -21,7 +21,8 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-/** Serializable per-file parquet readers for the graft DSv2 connector.
+/** Serializable per-file parquet readers for the graft DSv2 connector,
+  * and the store's scan of manifest-named files ([[manifestScan]]).
   *
   * Both factories are built ON THE DRIVER (they capture a broadcast of the
   * Hadoop conf internally, exactly as `FileSourceScanExec` does) and the
@@ -123,6 +124,61 @@ object ParquetReadBridge {
     }
     val proj = UnsafeProjection.create(exprs)
     row => proj(row)
+  }
+
+  /** A parquet scan of exactly `files` (path, recorded byte size), planned
+    * from those entries alone: the relation `spark.read.schema(dataSchema)
+    * .parquet(paths: _*)` builds, minus its file listing — no glob, no
+    * status call, and no listing job past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths. The
+    * plan is otherwise the same: no partition columns, the same nullable
+    * data schema, Spark's own split packing over the same sizes
+    * (`maxPartitionBytes` / `openCostInBytes`), and the same qualified
+    * `file:` paths for `input_file_name()` and `inputFiles`. A size of 0
+    * (an entry recorded before sizes were) is read from the file system.
+    * A file missing behind its entry fails the scan's task.
+    */
+  def manifestScan(spark: SparkSession, dataSchema: StructType,
+                   files: Seq[(String, Long)])
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    val cs = classic(spark)
+    val qualified = files.map { case (p, bytes) =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(cs.sparkContext.hadoopConfiguration)
+      val len = if (bytes > 0L) bytes else fs.getFileStatus(path).getLen
+      // the URI form, as a listing's status paths render: `file:///…`
+      (fs.makeQualified(path).toUri.toString, len)
+    }
+    cs.baseRelationToDataFrame(HadoopFsRelation(ManifestFileIndex(qualified),
+      new StructType(), dataSchema.asNullable, None, new ParquetFileFormat(),
+      Map.empty)(cs))
+  }
+
+  /** The [[manifestScan]] file index: a fixed list of qualified paths and
+    * sizes, one unpartitioned directory. Structural equality, so two scans
+    * of the same files are the same relation to exchange reuse and the
+    * cache manager, as two listings of the same paths are.
+    */
+  private final case class ManifestFileIndex(files: Seq[(String, Long)])
+      extends org.apache.spark.sql.execution.datasources.FileIndex {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata, PartitionDirectory}
+    override def rootPaths: Seq[Path] = files.map(f => new Path(new java.net.URI(f._1)))
+    override def listFiles(
+        partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+        dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+        : Seq[PartitionDirectory] =
+      if (files.isEmpty) Nil
+      else Seq(PartitionDirectory(InternalRow.empty, rootPaths.zip(files).map {
+        case (p, (_, len)) =>
+          FileStatusWithMetadata(new FileStatus(len, false, 1, len, 0L, p))
+      }))
+    override def inputFiles: Array[String] = files.map(_._1).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_._2).sum
+    override def partitionSchema: StructType = new StructType()
   }
 
   /** A whole-file `PartitionedFile` (no splitting: graft data files are
